@@ -18,8 +18,8 @@ Cross-engine hash-match rules applied throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -130,17 +130,19 @@ def oracle_sql() -> dict[str, str]:
 # calls = ~1.0s of pure metadata re-reads). Caching the analyzed read
 # plan is NOT result caching — every action on the returned frame still
 # scans the parquet inputs; only the repeated driver-side metadata read
-# is skipped, same class as the long-lived index handles. Keyed weakly
-# by the session object so entries die with their session (a restarted
-# session re-lists the files), and the fixture dirs are immutable by
-# the read-only-catalog contract (no entry writes under sf_dir).
-_TBL_PLANS: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
+# is skipped, same class as the long-lived index handles. The plans live
+# in a dict attribute of the session object itself, so they die with
+# their session (a restarted session re-lists the files) — a module-level
+# WeakKeyDictionary never freed them, since each cached plan references
+# its session. Keys use the absolute sf_dir, so a relative and an
+# absolute path to the same dir share one plan. The fixture dirs are
+# immutable by the read-only-catalog contract (no entry writes under
+# sf_dir).
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    per_sess = _TBL_PLANS.get(spark)
+    per_sess = getattr(spark, "_alertsage_tbl_plans", None)
     if per_sess is None:
-        per_sess = _TBL_PLANS[spark] = {}
+        per_sess = spark._alertsage_tbl_plans = {}
+    sf_dir = os.path.abspath(sf_dir)
     df = per_sess.get((sf_dir, name))
     if df is None:
         df = per_sess[(sf_dir, name)] = spark.read.parquet(

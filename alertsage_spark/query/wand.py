@@ -2,20 +2,25 @@
 
 Query plan (batch of queries, one Spark job):
 
-    segments.filter(term IN query_terms OR term IS NULL)
+    segments.filter(term IN query_terms OR term IS NULL
+                    OR term = tombstone)
                                              <- parquet pushdown: only
                                                 query-term rows + the
-                                                per-shard doclen rows
-      groupBy(shard_id) -> applyInPandas(scorer)
+                                                per-shard doclen and
+                                                tombstone rows
+      groupBy(shard_id) -> applyInArrow(scorer)
                                              <- per-shard task: every
                                                 query scored against the
                                                 shard's local postings,
                                                 doc lengths decoded from
-                                                the shard's own doclen row
-      -> global window rank (round(score,6) desc, doc_id asc) <= k
+                                                the shard's own doclen rows
+      -> driver merge of the per-shard top-k (round(score,6) desc,
+         doc_id asc) when n_shards * k * |Q| <= DRIVER_MERGE_MAX_ROWS;
+         above that budget a global window rank <= k runs instead
 
 Document-sharding makes this embarrassingly parallel: no shuffle of
-postings at query time, one small shuffle of per-shard top-k candidates.
+postings at query time, and at most n_shards * k candidates per query
+leave the scorer tasks.
 
 Two scorers, both exact (rank-identical to the join+agg path and the
 Python oracle — property-tested):
@@ -520,36 +525,45 @@ def reset_serving_counters() -> dict:
 
 def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
                  avgdl: float, k: int, algo: str):
-    def scorer(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-            {"query_id": str, "doc_id": "int64", "score": "float64"}
-        )
-        dl_pdf = pdf[pdf["term"].isna()]
-        if dl_pdf.empty:
-            return out_empty
+    """applyInArrow group fn: one shard's matched term rows, doclen rows
+    and tombstone rows in, that shard's per-query top-k out. Rows reach
+    the kernels as plain dicts (``to_pylist``): a shard carries only the
+    query terms' rows, so the per-row cost is a few dicts, and the Arrow
+    grouped map skips the pandas conversions in both directions."""
+    import pyarrow as pa
+
+    out_schema = pa.schema(
+        [("query_id", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
+    )
+
+    def scorer(_key, tbl):
+        dl_rows, tomb_rows, by_term = [], [], {}
+        for r in tbl.to_pylist():
+            t = r["term"]
+            if t is None:
+                dl_rows.append(r)
+            elif t == TOMBSTONE_TERM:
+                tomb_rows.append(r)
+            else:
+                # one row per (term, committed group): an un-compacted
+                # index has several runs per term — score them all
+                # (disjoint doc appends are exact; re-ingests of the SAME
+                # doc require merge_segments)
+                by_term.setdefault(t, []).append(r)
+        if not dl_rows or not by_term:
+            return out_schema.empty_table()
         # a shard carries one doclen row per committed group; an
         # un-compacted multi-group index therefore has several — merge
-        dl_parts = [decode_doclen_row(r) for _, r in dl_pdf.iterrows()]
+        dl_parts = [decode_doclen_row(r) for r in dl_rows]
         dl_docs = np.concatenate([p[0] for p in dl_parts])
         dl_vals = np.concatenate([p[1] for p in dl_parts])
         order = np.argsort(dl_docs, kind="stable")
         dl_docs, dl_vals = dl_docs[order], dl_vals[order]
-        notna = pdf[pdf["term"].notna()]
-        tomb_pdf = notna[notna["term"] == TOMBSTONE_TERM]
         deleted = None
-        if not tomb_pdf.empty:
+        if tomb_rows:
             deleted = np.unique(
-                np.concatenate([decode_doclen_row(r)[0] for _, r in tomb_pdf.iterrows()])
+                np.concatenate([decode_doclen_row(r)[0] for r in tomb_rows])
             )
-        seg_pdf = notna[notna["term"] != TOMBSTONE_TERM]
-        if seg_pdf.empty:
-            return out_empty
-        # one row per (term, committed group): an un-compacted index has
-        # several runs per term — score them all (disjoint doc appends
-        # are exact; re-ingests of the SAME doc require merge_segments)
-        by_term: dict[str, list] = {}
-        for _, r in seg_pdf.iterrows():
-            by_term.setdefault(r["term"], []).append(r)
         out_q, out_d, out_s = [], [], []
         decode_cache: dict = {}  # shared across this batch's queries (r6)
         for qid, terms in query_terms.items():
@@ -572,7 +586,9 @@ def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
                 out_q.append(qid)
                 out_d.append(d)
                 out_s.append(s)
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+        return pa.table(
+            {"query_id": out_q, "doc_id": out_d, "score": out_s}, schema=out_schema
+        )
 
     return scorer
 
@@ -660,7 +676,7 @@ def wand_topk(
         | (F.col("term") == TOMBSTONE_TERM)
     )
     scorer = _make_scorer(query_terms, idf_map, avgdl, k, algo)
-    candidates = seg.groupBy("shard_id").applyInPandas(
+    candidates = seg.groupBy("shard_id").applyInArrow(
         scorer, schema="query_id string, doc_id long, score double"
     )
     # Final k-way merge: the per-shard scorers emit at most

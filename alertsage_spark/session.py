@@ -26,7 +26,10 @@ def local_df(spark: SparkSession, rows, schema: str):
     and broadcasts without a scan stage. Schema names/types apply
     positionally to the row tuples, exactly like createDataFrame(list).
     Callers pass fixed NON-EMPTY literal sets (an empty pandas frame
-    falls back to the parallelize path, same as an empty list)."""
+    falls back to the parallelize path, same as an empty list) of
+    NON-NULL values: pandas dtype inference turns a None in a numeric
+    column into NaN (not NULL) and may overflow unsigned or very large
+    ints to int64."""
     import pandas as pd
 
     rows = list(rows)
@@ -86,6 +89,19 @@ def get_spark(
     so the same code path serves tests, bench, and the N-vs-4N scaling
     runs. On a cluster, pass ``master=None`` with an externally configured
     session (spark-submit) and this returns the active session.
+
+    Python workers start from ``alertsage_spark.worker_daemon``
+    (``spark.python.daemon.module``): pyspark's stock daemon plus a guard
+    that stops every zipimporter from re-reading pyspark.zip's directory
+    before each Python task unless the archive changed. That re-read cost
+    ~150-250 ms per task on CPython 3.11 (an empty 1-partition
+    mapPartitions job measured ~340 ms, ~105 ms with the guard, against
+    ~75 ms for a JVM-only job on 4 cores), the largest fixed cost of a
+    distributed query. Workers must therefore be able to import
+    ``alertsage_spark`` — every engine UDF already needs that. Sessions
+    not built here (the one handed to ``__spark_entry__.entry``, the
+    ``spark-submit --py-files`` launch in ``scripts/build_and_query.py``)
+    run the stock daemon, unchanged.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -115,6 +131,7 @@ def get_spark(
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/alertsage-warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "alertsage_spark.worker_daemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if extra_conf:

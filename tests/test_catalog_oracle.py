@@ -5,6 +5,7 @@ column names, and an order-insensitive value hash."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -84,3 +85,13 @@ def test_approx_distinct_accuracy(spark, con):
     ).fetchone()
     assert abs(got["approx_parts"] - exact[0]) / exact[0] < 0.05
     assert abs(got["approx_orders"] - exact[1]) / exact[1] < 0.05
+
+
+def test_tbl_plan_cache_lives_on_the_session_keyed_by_abspath(spark):
+    """tbl() keeps its plans on the session object (they die with it)
+    and keys them by the absolute sf_dir: a relative and an absolute
+    path to the same fixture share one cached plan."""
+    rel = os.path.relpath(SF_DIR)
+    plan = catalog.tbl(spark, SF_DIR, "documents")
+    assert catalog.tbl(spark, rel, "documents") is plan
+    assert spark._alertsage_tbl_plans[(os.path.abspath(SF_DIR), "documents")] is plan
