@@ -32,39 +32,12 @@ B = 0.75
 # ------------------------------------------------------------- varbyte
 def varbyte_encode(values: np.ndarray) -> bytes:
     """Vectorized varbyte encode of a non-negative int64/uint64 array."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    if (v < 128).all():
-        return v.astype(np.uint8).tobytes()  # single-group fast path
-    # number of 7-bit groups per value (at least 1)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 1
-        tmp >>= np.uint64(7)
-    ngroups = np.maximum(nbits, 1)
-    total = int(ngroups.sum())
-    out = np.empty(total, dtype=np.uint8)
-    ends = np.cumsum(ngroups)
-    starts = ends - ngroups
-    # fill each group position g (g < max groups)
-    max_g = int(ngroups.max())
-    for g in range(max_g):
-        mask = ngroups > g
-        pos = starts[mask] + g
-        vals = (v[mask] >> np.uint64(7 * g)) & np.uint64(0x7F)
-        cont = (ngroups[mask] - 1 > g).astype(np.uint8) << 7
-        out[pos] = vals.astype(np.uint8) | cont
-    return out.tobytes()
+    return varbyte_encode_with_lengths(values)[0]
 
 
 def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """varbyte_encode + per-value byte counts (for batch slicing).
-    Byte-identical to varbyte_encode on the same values."""
+    """Varbyte bytes of ``values`` plus the per-value byte counts (for
+    slicing one buffer into per-term and per-block ranges)."""
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return b"", np.empty(0, dtype=np.int64)
@@ -114,8 +87,9 @@ def encode_posting_lists_columnar(
 
     ``doc_ids/tfs/dls`` are the concatenation of every term's postings
     (sorted by doc_id within each term); ``term_starts`` (len n_terms+1)
-    delimits the ranges. The encoded bytes are identical to calling
-    encode_posting_list per term (unit-tested via the batch wrapper).
+    delimits the ranges. The encoded bytes are identical to encoding
+    each term block by block (tests/posting_oracle.py keeps that
+    per-term encoder as the test oracle).
     Per-value work — delta computation, varbyte group sizing, byte
     packing, per-BLOCK metadata — runs once over the whole shard
     (r6: the former per-term loop made 2 reduceat + 1 np.append call per
@@ -162,40 +136,6 @@ def encode_posting_lists_columnar(
         "term_blk": np.searchsorted(bstart, term_starts, side="left"),
         "term_starts": term_starts,
     }
-
-
-def encode_posting_lists_batch(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    term_starts: np.ndarray,
-) -> list[dict]:
-    """Per-term dict view over encode_posting_lists_columnar — the
-    row-oriented API used by the pandas-based merge path and tests.
-    Byte-identical to encode_posting_list per term (unit-tested)."""
-    c = encode_posting_lists_columnar(doc_ids, tfs, dls, term_starts)
-    term_starts = c["term_starts"]
-    doc_cum, tf_cum, bstart, term_blk = (
-        c["doc_cum"], c["tf_cum"], c["bstart"], c["term_blk"]
-    )
-    out = []
-    for t in range(len(term_starts) - 1):
-        s, e = int(term_starts[t]), int(term_starts[t + 1])
-        b0, b1 = int(term_blk[t]), int(term_blk[t + 1])
-        bounds = np.concatenate((bstart[b0:b1], (e,)))
-        out.append(
-            {
-                "doc_bytes": c["doc_all"][doc_cum[s] : doc_cum[e]],
-                "tf_bytes": c["tf_all"][tf_cum[s] : tf_cum[e]],
-                "block_last_docs": c["blk_last"][b0:b1].tolist(),
-                "block_max_tfs": c["blk_max_tf"][b0:b1].tolist(),
-                "block_min_dls": c["blk_min_dl"][b0:b1].tolist(),
-                "block_doc_offsets": (doc_cum[bounds] - doc_cum[s]).tolist(),
-                "block_tf_offsets": (tf_cum[bounds] - tf_cum[s]).tolist(),
-                "n_postings": e - s,
-            }
-        )
-    return out
 
 
 def varbyte_decode(buf: bytes) -> np.ndarray:
@@ -246,68 +186,24 @@ def block_norm_bounds(
     return bm25_norm(np.asarray(max_tfs), np.asarray(min_dls), avgdl)
 
 
-def encode_posting_list(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> dict:
-    """Encode one term's postings (sorted by doc_id) into compressed
-    blocks + block-max metadata.
+def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray]:
+    """The one decoder of a term row -> (doc_ids int64, tfs int64).
 
-    Returns dict with: doc_bytes, tf_bytes, block_last_docs (list[int]),
-    block_max_tfs, block_min_dls (per-block bound inputs — see
-    block_norm_bounds), block_doc_offsets, block_tf_offsets (byte offset
-    of each block's start), n_postings.
-
-    doc_ids must fit uint63 (we store raw int64 ids; negative ids are
-    rejected — the builder hashes ids into the non-negative range).
-    """
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]
-    if doc_ids.size and doc_ids[0] < 0:
-        raise ValueError("doc_ids must be non-negative")
-    tfs = np.asarray(tfs, dtype=np.int64)[order]
-    dls = np.asarray(dls, dtype=np.int64)[order]
-    n = doc_ids.size
-    doc_chunks: list[bytes] = []
-    tf_chunks: list[bytes] = []
-    last_docs: list[int] = []
-    max_tfs: list[int] = []
-    min_dls: list[int] = []
-    doc_offsets: list[int] = [0]
-    tf_offsets: list[int] = [0]
-    for s in range(0, n, BLOCK_SIZE):
-        e = min(s + BLOCK_SIZE, n)
-        blk_docs = doc_ids[s:e]
-        doc_chunks.append(varbyte_encode(delta_encode(blk_docs.astype(np.uint64))))
-        tf_chunks.append(varbyte_encode(tfs[s:e].astype(np.uint64)))
-        last_docs.append(int(blk_docs[-1]))
-        max_tfs.append(int(tfs[s:e].max()))
-        min_dls.append(int(dls[s:e].min()))
-        doc_offsets.append(doc_offsets[-1] + len(doc_chunks[-1]))
-        tf_offsets.append(tf_offsets[-1] + len(tf_chunks[-1]))
-    return {
-        "doc_bytes": b"".join(doc_chunks),
-        "tf_bytes": b"".join(tf_chunks),
-        "block_last_docs": last_docs,
-        "block_max_tfs": max_tfs,
-        "block_min_dls": min_dls,
-        "block_doc_offsets": doc_offsets,  # len = n_blocks + 1
-        "block_tf_offsets": tf_offsets,
-        "n_postings": int(n),
-    }
-
-
-def decode_posting_list(row: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_posting_list -> (doc_ids int64, tfs int64)."""
-    doc_ids = []
-    tfs = []
-    do = row["block_doc_offsets"]
-    to = row["block_tf_offsets"]
-    db, tb = row["doc_bytes"], row["tf_bytes"]
-    for i in range(len(do) - 1):
-        deltas = varbyte_decode(db[do[i] : do[i + 1]])
-        doc_ids.append(delta_decode(deltas).astype(np.int64))
-        tfs.append(varbyte_decode(tb[to[i] : to[i + 1]]).astype(np.int64))
-    if not doc_ids:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    return np.concatenate(doc_ids), np.concatenate(tfs)
+    ``row``: any mapping with ``doc_bytes``/``tf_bytes`` (a Spark Row, a
+    dict, a collected term row). Two varbyte calls (one per stream)
+    decode the FULL list instead of two per block: the delta stream
+    restarts (absolute doc_id) at every BLOCK_SIZE boundary, so the
+    decoded cumsum is corrected per block by subtracting the running
+    offset at each block start (vectorized reset-cumsum)."""
+    deltas = varbyte_decode(bytes(row["doc_bytes"]))
+    tfs = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
+    c = np.cumsum(deltas, dtype=np.uint64)
+    starts = np.arange(0, len(deltas), BLOCK_SIZE, dtype=np.int64)
+    # value at a block start is ABSOLUTE: subtract the cumsum carried in
+    # from previous blocks, per block
+    offs = c[starts] - deltas[starts]
+    counts = np.diff(np.append(starts, len(deltas)))
+    return (c - np.repeat(offs, counts)).astype(np.int64), tfs
 
 
 def decode_block(row: dict, block_idx: int) -> tuple[np.ndarray, np.ndarray]:

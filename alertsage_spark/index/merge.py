@@ -6,10 +6,13 @@ compacts every (shard_id, term) to ONE row with a single sorted,
 delta+varbyte re-encoded posting list and fresh block metadata, and
 every shard's doclen rows to one row.
 
-Plan: segments.groupBy(shard_id) -> applyInPandas(shard merger). Each
+Plan: segments.groupBy(shard_id) -> applyInArrow(shard merger). Each
 task first merges ITS shard's doclen rows (partition-local — no
-driver-side corpus map, no broadcast), then linear-merges every term's
-decoded runs against that local doc-length array. Document-sharding
+driver-side corpus map, no broadcast), then decodes every term row with
+compress.decode_posting_list, keeps max-tf per (term, doc) with one
+lexsort over the whole shard, and re-encodes through the build's shard
+encoder (segments._encode_shard), so merged rows are byte-identical to
+a fresh build of the surviving docs. Document-sharding
 keeps this balanced: a hot term contributes at most one run per
 (group, shard), and task memory is corpus/n_shards — the same memory
 shape as the build stage itself, with n_shards as the scaling knob
@@ -41,21 +44,17 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from alertsage_spark.index.compress import (
-    decode_posting_list,
-    encode_posting_lists_batch,
-)
+from alertsage_spark.index.compress import decode_posting_list
 from alertsage_spark.index.segments import (
-    _SEG_COLS,
     SEGMENT_SCHEMA,
     TOMBSTONE_TERM,
     IndexPaths,
     SegmentIndex,
-    _doclen_row,
+    _encode_shard,
+    _shard_key,
     decode_doclen_row,
     load_index,
     persist_stream_batch_ids,
@@ -63,103 +62,72 @@ from alertsage_spark.index.segments import (
     stream_committed_batch_ids,
 )
 
+_EMPTY = np.empty(0, dtype=np.int64)
 
-def _shard_merger():
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(key[0])
-        isnull = pdf["term"].isna()
-        # 0) the shard's tombstone rows (delete_docs): these doc ids are
-        #    physically dropped from doclens and postings below, and the
-        #    tombstone rows themselves are not re-emitted — after the
-        #    merge the deletion is durable and stats are recomputed
-        #    without the deleted docs
-        istomb = pdf["term"] == TOMBSTONE_TERM
-        deleted = np.empty(0, dtype=np.int64)
-        if istomb.any():
-            deleted = np.unique(np.concatenate(
-                [decode_doclen_row(r)[0] for _, r in pdf[istomb].iterrows()]
-            ))
-        # 1) merge the shard's doclen rows; re-ingested docs keep MAX dl
-        #    (the same deterministic rule as the max-tf posting merge)
-        docs_all, dls_all = [], []
-        for _, r in pdf[isnull].iterrows():
-            d, l = decode_doclen_row(r)
-            docs_all.append(d)
-            dls_all.append(l)
-        if not docs_all:
-            # shard holds only tombstones (ids that never existed here)
-            return pd.DataFrame(columns=_SEG_COLS)
-        docs = np.concatenate(docs_all)
-        dls = np.concatenate(dls_all)
-        uniq_docs = np.unique(docs)
-        dl_merged = np.zeros(len(uniq_docs), dtype=np.int64)
-        np.maximum.at(dl_merged, np.searchsorted(uniq_docs, docs), dls)
-        if len(deleted):
-            live = np.isin(uniq_docs, deleted, invert=True)
-            uniq_docs, dl_merged = uniq_docs[live], dl_merged[live]
-        out = [_doclen_row(shard_id, uniq_docs, dl_merged)]
-        # 2) merge each term's runs against the local doc-length array,
-        #    accumulating all merged lists for ONE batch encode (two
-        #    vectorized varbyte passes for the whole shard — same
-        #    optimization as the segment builder)
-        terms: list[str] = []
-        docs_cat, tfs_cat, dls_cat = [], [], []
-        term_starts = [0]
-        for term, grp in pdf[~isnull & ~istomb].groupby("term", sort=False):
-            docs_runs, tfs_runs = [], []
-            for _, r in grp.iterrows():
-                d, t = decode_posting_list(r)
-                docs_runs.append(d)
-                tfs_runs.append(t)
-            d = np.concatenate(docs_runs)
-            t = np.concatenate(tfs_runs)
-            order = np.argsort(d, kind="stable")
-            d, t = d[order], t[order]
-            u = np.unique(d)
-            if len(u) != len(d):
-                # same doc in two runs (re-ingested): deterministic max-tf
-                agg = np.zeros(len(u), dtype=np.int64)
-                np.maximum.at(agg, np.searchsorted(u, d), t)
-                d, t = u, agg
-            if len(deleted):
-                live = np.isin(d, deleted, invert=True)
-                d, t = d[live], t[live]
-                if not len(d):
-                    continue
-            idx = np.searchsorted(uniq_docs, d)
-            if idx.max(initial=-1) >= len(uniq_docs) or not np.array_equal(
-                uniq_docs[idx], d
-            ):
-                raise ValueError(
-                    f"shard {shard_id} term {term!r}: posting doc_id absent from "
-                    "the shard's doclen rows — groups built with a different "
-                    "n_shards/layout were appended to this index"
-                )
-            terms.append(term)
-            docs_cat.append(d)
-            tfs_cat.append(t)
-            dls_cat.append(dl_merged[idx])
-            term_starts.append(term_starts[-1] + len(d))
-        if terms:
-            encs = encode_posting_lists_batch(
-                np.concatenate(docs_cat),
-                np.concatenate(tfs_cat),
-                np.concatenate(dls_cat),
-                np.asarray(term_starts, dtype=np.int64),
-            )
-            for term, t, enc in zip(terms, tfs_cat, encs):
-                out.append(
-                    {
-                        "shard_id": shard_id,
-                        "term": term,
-                        "df_local": enc["n_postings"],
-                        "cf_local": int(t.sum()),
-                        **enc,
-                    }
-                )
-        return pd.DataFrame(out, columns=_SEG_COLS)
 
-    return fn
+def _merge_shard(key, tbl):
+    """applyInArrow group fn: all of one shard's rows (every group's
+    doclen, tombstone and term rows) -> the shard's merged rows."""
+    shard_id = _shard_key(key)
+    rows = tbl.select(["term", "doc_bytes", "tf_bytes"]).to_pylist()
+    # 0) the shard's tombstone rows (delete_docs): these doc ids are
+    #    physically dropped from doclens and postings below, and the
+    #    tombstone rows themselves are not re-emitted — after the merge
+    #    the deletion is durable and stats are recomputed without them
+    deleted = np.unique(np.concatenate(
+        [_EMPTY] + [decode_doclen_row(r)[0] for r in rows if r["term"] == TOMBSTONE_TERM]
+    ))
+    # 1) merge the shard's doclen rows; re-ingested docs keep MAX dl (the
+    #    same deterministic rule as the max-tf posting merge)
+    dl_parts = [decode_doclen_row(r) for r in rows if r["term"] is None]
+    docs = np.concatenate([_EMPTY] + [p[0] for p in dl_parts])
+    dls = np.concatenate([_EMPTY] + [p[1] for p in dl_parts])
+    uniq_docs = np.unique(docs)
+    dl_merged = np.zeros(len(uniq_docs), dtype=np.int64)
+    np.maximum.at(dl_merged, np.searchsorted(uniq_docs, docs), dls)
+    live = np.isin(uniq_docs, deleted, invert=True)
+    uniq_docs, dl_merged = uniq_docs[live], dl_merged[live]
+    if not len(uniq_docs):
+        # no live docs (all deleted, or only tombstones of ids that never
+        # lived here): like the builder, the shard emits no rows
+        return _encode_shard(shard_id, uniq_docs, dl_merged, None)
+    # 2) every term row's postings as (term code, doc, tf), tombstoned
+    #    docs dropped, then ONE lexsort and max-tf per (term, doc) —
+    #    the same doc in several runs was re-ingested
+    term_rows = [r for r in rows if r["term"] not in (None, TOMBSTONE_TERM)]
+    decoded = [decode_posting_list(r) for r in term_rows]
+    names, codes = np.unique(
+        np.array([r["term"] for r in term_rows], dtype=object), return_inverse=True
+    )
+    c = np.repeat(codes, [len(p[0]) for p in decoded]).astype(np.int64)
+    d = np.concatenate([_EMPTY] + [p[0] for p in decoded])
+    t = np.concatenate([_EMPTY] + [p[1] for p in decoded])
+    keep = np.isin(d, deleted, invert=True)
+    c, d, t = c[keep], d[keep], t[keep]
+    if not len(d):
+        return _encode_shard(shard_id, uniq_docs, dl_merged, None)
+    order = np.lexsort((-t, d, c))
+    c, d, t = c[order], d[order], t[order]
+    first = np.ones(len(d), dtype=bool)
+    first[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
+    c, d, t = c[first], d[first], t[first]
+    idx = np.minimum(np.searchsorted(uniq_docs, d), len(uniq_docs) - 1)
+    absent = uniq_docs[idx] != d
+    if absent.any():
+        raise ValueError(
+            f"shard {shard_id} term {names[c[absent.argmax()]]!r}: posting "
+            "doc_id absent from the shard's doclen rows — groups built with "
+            "a different n_shards/layout were appended to this index"
+        )
+    starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+    parts = {
+        "p_docs": d,
+        "p_tf": t,
+        "p_dls": dl_merged[idx],
+        "term_starts": np.append(starts, len(d)),
+        "terms": names[c[starts]],
+    }
+    return _encode_shard(shard_id, uniq_docs, dl_merged, parts)
 
 
 def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> SegmentIndex:
@@ -181,8 +149,8 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
         spark.conf.set("spark.sql.shuffle.partitions", str(n_shards))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        merged = idx.segments.groupBy("shard_id").applyInPandas(
-            _shard_merger(), schema=SEGMENT_SCHEMA
+        merged = idx.segments.groupBy("shard_id").applyInArrow(
+            _merge_shard, schema=SEGMENT_SCHEMA
         )
         merged.sortWithinPartitions("term").write.mode("overwrite").parquet(
             paths.group_dir(0)

@@ -51,9 +51,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import (
-    encode_posting_lists_batch,
-    varbyte_encode,
+    decode_posting_list,
+    delta_decode,
     delta_encode,
+    encode_posting_lists_columnar,
+    varbyte_decode,
+    varbyte_encode,
 )
 from alertsage_spark.tokenizer import tokenize_arrow_base, vocab_trigram_mapping
 
@@ -230,33 +233,38 @@ def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> Dat
     )
 
 
-def _doclen_row(shard_id: int, doc_ids: np.ndarray, dls: np.ndarray) -> dict:
-    """The shard's doclen row: term=NULL, doc ids delta+varbyte in
-    doc_bytes, lengths varbyte in tf_bytes (aligned to sorted doc order)."""
+def _doclen_row(shard_id: int, doc_ids: np.ndarray, dls: np.ndarray, term=None):
+    """One doclen-format row as a one-row Arrow table: doc ids sorted and
+    delta+varbyte in doc_bytes (one delta stream, no block restarts),
+    lengths varbyte in tf_bytes in the same order. term=NULL is the
+    shard's doclen row; delete_docs writes the same row with zero lengths
+    and term=TOMBSTONE_TERM."""
+    import pyarrow as pa
+
     order = np.argsort(doc_ids, kind="stable")
     d = doc_ids[order].astype(np.uint64)
-    l = dls[order].astype(np.uint64)
     db = varbyte_encode(delta_encode(d))
-    tb = varbyte_encode(l)
-    return {
+    tb = varbyte_encode(dls[order].astype(np.uint64))
+    row = {
         "shard_id": shard_id,
-        "term": None,
+        "term": term,
         "df_local": int(len(d)),  # n docs in shard
         "cf_local": int(dls.sum()),  # sum of doc lengths
         "n_postings": int(len(d)),
         "doc_bytes": db,
         "tf_bytes": tb,
-        "block_last_docs": [int(doc_ids[order][-1])] if len(d) else [],
+        "block_last_docs": [int(d[-1])] if len(d) else [],
         "block_max_tfs": [],
         "block_min_dls": [],
         "block_doc_offsets": [0, len(db)],
         "block_tf_offsets": [0, len(tb)],
     }
+    return pa.table({c: [row[c]] for c in _SEG_COLS}, schema=_arrow_segment_schema())
 
 
 def _shard_postings(doc_ids: np.ndarray, texts, mode: str):
-    """Numpy core shared by the pandas and Arrow shard builders: one
-    shard's texts -> per-doc lengths + term-sorted aggregated postings.
+    """Numpy core of the segment builder: one shard's texts -> per-doc
+    lengths + term-sorted aggregated postings.
 
     Tokenizes INSIDE the Python worker (Arrow/RE2 tokenize_arrow_base).
     Aggregation uses factorize + integer composite keys instead of an
@@ -266,9 +274,9 @@ def _shard_postings(doc_ids: np.ndarray, texts, mode: str):
     parallelism.
 
     Returns (lens int64[n_docs], parts) where parts is None when the
-    shard has no postings, else a dict with p_docs/p_tf/p_dls (term-
-    sorted postings), starts/term_starts (per-term ranges), term_sorted
-    and vocab."""
+    shard has no postings, else the _encode_shard input: p_docs/p_tf/
+    p_dls (postings sorted by (term, doc_id)), term_starts (per-term
+    ranges, len n_terms+1) and terms (one string per term)."""
     n_docs = len(doc_ids)
     codes, doc_idx, vocab = tokenize_arrow_base(texts)
     lens = np.bincount(doc_idx, minlength=n_docs).astype(np.int64)
@@ -319,54 +327,15 @@ def _shard_postings(doc_ids: np.ndarray, texts, mode: str):
     # shard — per-term encode calls were 77% of code-mode build time)
     order = np.lexsort((p_docs, term_code))
     term_sorted = term_code[order]
-    p_docs, p_tf, p_dls = p_docs[order], tf[order], p_dls[order]
     bounds = np.flatnonzero(np.diff(term_sorted)) + 1
     starts = np.concatenate(([0], bounds))
-    term_starts = np.concatenate((starts, [len(term_sorted)]))
     return lens, {
-        "p_docs": p_docs,
-        "p_tf": p_tf,
-        "p_dls": p_dls,
-        "starts": starts,
-        "term_starts": term_starts,
-        "term_sorted": term_sorted,
-        "vocab": vocab,
+        "p_docs": p_docs[order],
+        "p_tf": tf[order],
+        "p_dls": p_dls[order],
+        "term_starts": np.concatenate((starts, [len(term_sorted)])),
+        "terms": vocab[term_sorted[starts]],
     }
-
-
-def _segment_builder(mode: str = "text"):
-    """applyInPandas group fn: one shard's (doc_id, text) -> segment rows
-    + one doclen row. Row-oriented sibling of _segment_builder_arrow
-    (kept for the merge path's cogroup tooling and tests)."""
-
-    empty = pd.DataFrame(columns=_SEG_COLS)
-
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(key[0])
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        lens, parts = _shard_postings(doc_ids, pdf["text"], mode)
-        out = [_doclen_row(shard_id, doc_ids, lens)]
-        if parts is None:
-            return pd.DataFrame(out, columns=_SEG_COLS) if len(doc_ids) else empty
-        encs = encode_posting_lists_batch(
-            parts["p_docs"], parts["p_tf"], parts["p_dls"], parts["term_starts"]
-        )
-        cf = np.add.reduceat(parts["p_tf"], parts["starts"])
-        vocab, term_sorted = parts["vocab"], parts["term_sorted"]
-        for i, enc in enumerate(encs):
-            s = int(parts["starts"][i])
-            out.append(
-                {
-                    "shard_id": shard_id,
-                    "term": vocab[term_sorted[s]],
-                    "df_local": enc["n_postings"],
-                    "cf_local": int(cf[i]),
-                    **enc,
-                }
-            )
-        return pd.DataFrame(out, columns=_SEG_COLS)
-
-    return fn
 
 
 def _arrow_segment_schema():
@@ -390,110 +359,118 @@ def _arrow_segment_schema():
     )
 
 
-def _segment_builder_arrow(mode: str = "text"):
-    """applyInArrow group fn — the build hot path (r6). Emits the shard's
-    segment rows as a pyarrow Table assembled ZERO-COPY from the columnar
-    encoder output: the binary columns are offset views over the shard's
-    two encoded byte buffers and the block-metadata list columns are
-    ListArrays over the vectorized per-block arrays. This removes the
-    per-term Python dict/list materialization (5 .tolist() calls and one
-    dict per term) and the pandas -> Arrow conversion the pandas builder
-    pays; encoded bytes and values are identical (same encoder)."""
+def _shard_key(key) -> int:
+    """The shard id from an applyInArrow group key."""
+    k = key[0]
+    return int(k.as_py() if hasattr(k, "as_py") else k)
+
+
+def _encode_shard(shard_id: int, doc_ids: np.ndarray, lens: np.ndarray, parts):
+    """The one writer of the segment row format: one shard's doc lengths
+    and term-sorted postings (``parts`` as _shard_postings returns it, or
+    None) -> its segment rows as a pyarrow Table. The build and the merge
+    both emit through here.
+
+    The table is assembled ZERO-COPY from encode_posting_lists_columnar:
+    the binary columns are offset views over the shard's two encoded
+    byte buffers and the block-metadata list columns are ListArrays over
+    the vectorized per-block arrays — no per-term Python objects.
+
+    A shard with no docs emits no rows; a shard with docs but no
+    postings emits only its doclen row."""
     import pyarrow as pa
 
-    from alertsage_spark.index.compress import encode_posting_lists_columnar
-
     schema = _arrow_segment_schema()
+    if not len(doc_ids):
+        return schema.empty_table()
+    dl_tbl = _doclen_row(shard_id, doc_ids, lens)
+    if parts is None:
+        return dl_tbl
+    c = encode_posting_lists_columnar(
+        parts["p_docs"], parts["p_tf"], parts["p_dls"], parts["term_starts"]
+    )
+    ts = c["term_starts"]
+    n_terms = len(ts) - 1
+    doc_cum, tf_cum = c["doc_cum"], c["tf_cum"]
+    if max(int(doc_cum[-1]), int(tf_cum[-1])) > np.iinfo(np.int32).max:
+        raise ValueError(
+            "shard encoded size exceeds Arrow binary offset range; "
+            "rebuild with a larger n_shards"
+        )
+    bstart, term_blk = c["bstart"], c["term_blk"]
+    cf = np.add.reduceat(parts["p_tf"], ts[:-1])
+    npost = np.diff(ts)
 
-    def fn(key: tuple, tbl: pa.Table) -> pa.Table:
-        k = key[0]
-        shard_id = int(k.as_py() if hasattr(k, "as_py") else k)
+    def bin_col(all_bytes, cum):
+        offs = np.ascontiguousarray(cum[ts], dtype=np.int32)
+        return pa.Array.from_buffers(
+            pa.binary(), n_terms,
+            [None, pa.py_buffer(offs), pa.py_buffer(all_bytes)],
+        )
+
+    blk_offs = pa.array(term_blk.astype(np.int32), type=pa.int32())
+
+    def blk_col(values):
+        return pa.ListArray.from_arrays(
+            blk_offs, pa.array(values.astype(np.int64), type=pa.int64())
+        )
+
+    # per-term byte-offset lists: each term's list is its blocks' start
+    # offsets plus one trailing end offset — built vectorized
+    nblk = np.diff(term_blk)
+    list_off = term_blk + np.arange(n_terms + 1, dtype=np.int64)
+    total = int(list_off[-1])
+    end_mask = np.zeros(total, dtype=bool)
+    end_mask[list_off[1:] - 1] = True
+    off_arr = pa.array(list_off.astype(np.int32), type=pa.int32())
+
+    def off_col(cum):
+        vals = np.empty(total, dtype=np.int64)
+        vals[~end_mask] = cum[bstart] - np.repeat(cum[ts[:-1]], nblk)
+        vals[end_mask] = cum[ts[1:]] - cum[ts[:-1]]
+        return pa.ListArray.from_arrays(
+            off_arr, pa.array(vals.astype(np.int32), type=pa.int32())
+        )
+
+    terms_tbl = pa.table(
+        {
+            "shard_id": pa.array(
+                np.full(n_terms, shard_id, dtype=np.int32), type=pa.int32()
+            ),
+            "term": pa.array(parts["terms"], type=pa.string()),
+            "df_local": pa.array(npost.astype(np.int32), type=pa.int32()),
+            "cf_local": pa.array(cf.astype(np.int64), type=pa.int64()),
+            "n_postings": pa.array(npost.astype(np.int64), type=pa.int64()),
+            "doc_bytes": bin_col(c["doc_all"], doc_cum),
+            "tf_bytes": bin_col(c["tf_all"], tf_cum),
+            "block_last_docs": blk_col(c["blk_last"]),
+            "block_max_tfs": blk_col(c["blk_max_tf"]),
+            "block_min_dls": blk_col(c["blk_min_dl"]),
+            "block_doc_offsets": off_col(doc_cum),
+            "block_tf_offsets": off_col(tf_cum),
+        },
+        schema=schema,
+    )
+    return pa.concat_tables([dl_tbl, terms_tbl])
+
+
+def _segment_builder_arrow(mode: str = "text"):
+    """applyInArrow group fn — the build hot path: one shard's
+    (doc_id, text) -> _shard_postings -> _encode_shard."""
+
+    def fn(key, tbl):
         doc_ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(
             np.int64
         )
         lens, parts = _shard_postings(doc_ids, tbl.column("text"), mode)
-        dl = _doclen_row(shard_id, doc_ids, lens)
-        dl_tbl = pa.table({c: [dl[c]] for c in _SEG_COLS}, schema=schema)
-        if parts is None:
-            return dl_tbl if len(doc_ids) else schema.empty_table()
-        c = encode_posting_lists_columnar(
-            parts["p_docs"], parts["p_tf"], parts["p_dls"], parts["term_starts"]
-        )
-        ts = c["term_starts"]
-        n_terms = len(ts) - 1
-        doc_cum, tf_cum = c["doc_cum"], c["tf_cum"]
-        if max(int(doc_cum[-1]), int(tf_cum[-1])) > np.iinfo(np.int32).max:
-            raise ValueError(
-                "shard encoded size exceeds Arrow binary offset range; "
-                "rebuild with a larger n_shards"
-            )
-        bstart, term_blk = c["bstart"], c["term_blk"]
-        starts = parts["starts"]
-        cf = np.add.reduceat(parts["p_tf"], starts)
-        npost = np.diff(ts)
-
-        def bin_col(all_bytes, cum):
-            offs = np.ascontiguousarray(cum[ts], dtype=np.int32)
-            return pa.Array.from_buffers(
-                pa.binary(), n_terms,
-                [None, pa.py_buffer(offs), pa.py_buffer(all_bytes)],
-            )
-
-        blk_offs = pa.array(term_blk.astype(np.int32), type=pa.int32())
-
-        def blk_col(values):
-            return pa.ListArray.from_arrays(
-                blk_offs, pa.array(values.astype(np.int64), type=pa.int64())
-            )
-
-        # per-term byte-offset lists: each term's list is its blocks'
-        # start offsets plus one trailing end offset — built vectorized
-        nblk = np.diff(term_blk)
-        list_off = term_blk + np.arange(n_terms + 1, dtype=np.int64)
-        total = int(list_off[-1])
-        end_mask = np.zeros(total, dtype=bool)
-        end_mask[list_off[1:] - 1] = True
-        off_arr = pa.array(list_off.astype(np.int32), type=pa.int32())
-
-        def off_col(cum):
-            vals = np.empty(total, dtype=np.int64)
-            vals[~end_mask] = cum[bstart] - np.repeat(cum[ts[:-1]], nblk)
-            vals[end_mask] = cum[ts[1:]] - cum[ts[:-1]]
-            return pa.ListArray.from_arrays(
-                off_arr, pa.array(vals.astype(np.int32), type=pa.int32())
-            )
-
-        terms_tbl = pa.table(
-            {
-                "shard_id": pa.array(
-                    np.full(n_terms, shard_id, dtype=np.int32), type=pa.int32()
-                ),
-                "term": pa.array(
-                    parts["vocab"][parts["term_sorted"][starts]],
-                    type=pa.string(),
-                ),
-                "df_local": pa.array(npost.astype(np.int32), type=pa.int32()),
-                "cf_local": pa.array(cf.astype(np.int64), type=pa.int64()),
-                "n_postings": pa.array(npost.astype(np.int64), type=pa.int64()),
-                "doc_bytes": bin_col(c["doc_all"], doc_cum),
-                "tf_bytes": bin_col(c["tf_all"], tf_cum),
-                "block_last_docs": blk_col(c["blk_last"]),
-                "block_max_tfs": blk_col(c["blk_max_tf"]),
-                "block_min_dls": blk_col(c["blk_min_dl"]),
-                "block_doc_offsets": off_col(doc_cum),
-                "block_tf_offsets": off_col(tf_cum),
-            },
-            schema=schema,
-        )
-        return pa.concat_tables([dl_tbl, terms_tbl])
+        return _encode_shard(_shard_key(key), doc_ids, lens, parts)
 
     return fn
 
 
 def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
-    """(sorted doc_ids int64, dls int64) from a term=NULL doclen row."""
-    from alertsage_spark.index.compress import varbyte_decode, delta_decode
-
+    """(sorted doc_ids int64, dls int64) from a doclen-format row (the
+    term=NULL doclen row or a tombstone row)."""
     docs = delta_decode(varbyte_decode(bytes(row["doc_bytes"]))).astype(np.int64)
     dls = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
     return docs, dls
@@ -673,7 +650,7 @@ def build_segments(
 
             obs = Observation(f"commit_group_{g}")
             seg = seg.observe(obs, *_group_metric_exprs())
-            # applyInPandas output is already hash-partitioned by shard_id;
+            # applyInArrow output is already hash-partitioned by shard_id;
             # no extra repartition — just sort by term within files so
             # parquet row-group min/max stats prune query-term lookups
             seg.sortWithinPartitions("term").write.mode("overwrite").parquet(
@@ -854,33 +831,16 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         # snapshot (assert_serving_fresh) for nothing
         return -1
 
-    def build_tomb(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from alertsage_spark.index.compress import delta_encode, varbyte_encode
-
-        shard_id = int(key[0])
-        d = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-        row = {
-            "shard_id": shard_id,
-            "term": TOMBSTONE_TERM,
-            "df_local": int(len(d)),
-            "cf_local": 0,
-            "n_postings": int(len(d)),
-            "doc_bytes": varbyte_encode(delta_encode(d.astype(np.uint64))),
-            "tf_bytes": varbyte_encode(np.zeros(len(d), dtype=np.uint64)),
-            "block_last_docs": [int(d[-1])] if len(d) else [],
-            "block_max_tfs": [],
-            "block_min_dls": [],
-            "block_doc_offsets": [0, 0],
-            "block_tf_offsets": [0, 0],
-        }
-        row["block_doc_offsets"] = [0, len(row["doc_bytes"])]
-        row["block_tf_offsets"] = [0, len(row["tf_bytes"])]
-        return pd.DataFrame([row], columns=_SEG_COLS)
+    def tomb_row(key, tbl):
+        d = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        return _doclen_row(
+            _shard_key(key), d, np.zeros(len(d), dtype=np.int64), TOMBSTONE_TERM
+        )
 
     tomb = (
         ids.withColumn("shard_id", shard_col(F.col("doc_id"), n_shards))
         .groupBy("shard_id")
-        .applyInPandas(build_tomb, schema=SEGMENT_SCHEMA)
+        .applyInArrow(tomb_row, schema=SEGMENT_SCHEMA)
     )
     existing = _glob.glob(os.path.join(paths.root, "segments", "group=*"))
     g = 1 + max((int(p.rsplit("=", 1)[1]) for p in existing), default=-1)
@@ -1050,27 +1010,12 @@ class SegmentIndex:
             seg = seg.filter(F.col("term").isin(list(terms)))
 
         def _decode(it):
-            # block-aware decode: the delta stream RESTARTS (absolute
-            # doc_id) at every BLOCK_SIZE boundary, so a whole-stream
-            # delta_decode corrupts any list longer than one block —
-            # decode_posting_list walks the block offsets.
-            from alertsage_spark.index.compress import decode_posting_list
-
             for pdf in it:
                 outs = []
-                for r in pdf.itertuples(index=False):
-                    docs, tfs = decode_posting_list(
-                        {
-                            "doc_bytes": bytes(r.doc_bytes),
-                            "tf_bytes": bytes(r.tf_bytes),
-                            "block_doc_offsets": r.block_doc_offsets,
-                            "block_tf_offsets": r.block_tf_offsets,
-                        }
-                    )
+                for r in pdf.to_dict("records"):
+                    docs, tfs = decode_posting_list(r)
                     outs.append(
-                        pd.DataFrame(
-                            {"term": r.term, "doc_id": docs, "tf": tfs}
-                        )
+                        pd.DataFrame({"term": r["term"], "doc_id": docs, "tf": tfs})
                     )
                 yield (
                     pd.concat(outs)
@@ -1082,10 +1027,9 @@ class SegmentIndex:
                     )
                 )
 
-        raw = seg.select(
-            "term", "doc_bytes", "tf_bytes",
-            "block_doc_offsets", "block_tf_offsets",
-        ).mapInPandas(_decode, schema="term string, doc_id long, tf long")
+        raw = seg.select("term", "doc_bytes", "tf_bytes").mapInPandas(
+            _decode, schema="term string, doc_id long, tf long"
+        )
         out = raw.groupBy("term", "doc_id").agg(F.max("tf").alias("tf"))
         tomb = self._tombstone_docs_df() if _tomb is _UNSET else _tomb
         if tomb is not None:
@@ -1099,10 +1043,8 @@ class SegmentIndex:
         def _decode(it):
             for pdf in it:
                 outs = []
-                for r in pdf.itertuples(index=False):
-                    d, l = decode_doclen_row(
-                        {"doc_bytes": r.doc_bytes, "tf_bytes": r.tf_bytes}
-                    )
+                for r in pdf.to_dict("records"):
+                    d, l = decode_doclen_row(r)
                     outs.append(pd.DataFrame({"doc_id": d, "dl": l}))
                 yield (
                     pd.concat(outs)
@@ -1126,21 +1068,10 @@ class SegmentIndex:
         tombs = self.segments.filter(F.col("term") == TOMBSTONE_TERM)
 
         def _decode(it):
-            from alertsage_spark.index.compress import (
-                delta_decode,
-                varbyte_decode,
-            )
-
             for pdf in it:
                 outs = [
-                    pd.DataFrame(
-                        {
-                            "doc_id": delta_decode(
-                                varbyte_decode(bytes(r.doc_bytes))
-                            ).astype("int64")
-                        }
-                    )
-                    for r in pdf.itertuples(index=False)
+                    pd.DataFrame({"doc_id": decode_doclen_row(r)[0]})
+                    for r in pdf.to_dict("records")
                 ]
                 yield (
                     pd.concat(outs)
@@ -1151,7 +1082,7 @@ class SegmentIndex:
         # cheap local probe: no tombstone rows -> skip the anti-join
         if not tombs.take(1):
             return None
-        return tombs.select("doc_bytes").mapInPandas(
+        return tombs.select("doc_bytes", "tf_bytes").mapInPandas(
             _decode, schema="doc_id long"
         ).distinct()
 

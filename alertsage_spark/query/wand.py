@@ -57,12 +57,10 @@ from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import (
     B,
-    BLOCK_SIZE,
     K1,
     bm25_norm,
     decode_block,
-    delta_decode,
-    varbyte_decode,
+    decode_posting_list,
 )
 from alertsage_spark.index.segments import (
     TOMBSTONE_TERM,
@@ -108,37 +106,15 @@ def _check_dl_coverage(dl_docs: np.ndarray, dl_idx: np.ndarray, docs: np.ndarray
 
 
 def decode_term_row(row, cache: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a term row's FULL posting list in two varbyte calls (one
-    per stream) instead of two per block: the delta stream restarts
-    (absolute doc_id) at every block boundary, so the decoded cumsum is
-    corrected per block by subtracting the running offset at each block
-    start (vectorized reset-cumsum; r6 — the per-block loop cost ~2
-    numpy dispatches per 128 postings). ``cache`` (keyed by id(row))
-    shares decodes across the queries of one batch — reference batches
-    share their hot terms, so each posting list decodes once per task,
-    not once per query."""
-    key = id(row)
-    if cache is not None:
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
-    deltas = varbyte_decode(bytes(row["doc_bytes"]))
-    tfs = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
-    n = len(deltas)
-    c = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
-    if len(starts):
-        # value at a block start is ABSOLUTE: subtract the cumsum carried
-        # in from previous blocks, per block
-        offs = c[starts] - deltas[starts]
-        counts = np.diff(np.append(starts, n))
-        docs = (c - np.repeat(offs, counts)).astype(np.int64)
-    else:
-        docs = c.astype(np.int64)
-    out = (docs, tfs)
-    if cache is not None:
-        cache[key] = out
-    return out
+    """decode_posting_list behind a batch-shared decode cache keyed by
+    id(row): reference batches share their hot terms, so each posting
+    list decodes once per task, not once per query."""
+    if cache is None:
+        return decode_posting_list(row)
+    hit = cache.get(id(row))
+    if hit is None:
+        hit = cache[id(row)] = decode_posting_list(row)
+    return hit
 
 
 def wand_topk_shard(

@@ -5,6 +5,7 @@ including the empty / max-delta edge cases."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -16,10 +17,11 @@ from alertsage_spark.index.compress import (
     decode_posting_list,
     delta_decode,
     delta_encode,
-    encode_posting_list,
     varbyte_decode,
     varbyte_encode,
 )
+from alertsage_spark.index.segments import _encode_shard
+from posting_oracle import assert_rows_match, encode_posting_list, encoded_term_rows
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=400))
@@ -96,35 +98,43 @@ def test_unsorted_input_is_sorted():
     assert out_tfs.tolist() == [1, 2, 3]
 
 
-def test_batch_encode_byte_identical_to_single():
-    """encode_posting_lists_batch must produce byte-identical rows to
-    per-term encode_posting_list (same format, decodable by the same
-    readers)."""
-    import numpy as np
-
-    from alertsage_spark.index.compress import (
-        encode_posting_list,
-        encode_posting_lists_batch,
-        decode_posting_list,
+def _shard_term_rows(lists):
+    """Term rows the shard encoder writes for ``lists`` of (docs, tfs,
+    dls), one term each, plus the per-term oracle rows for the same
+    input."""
+    starts = np.cumsum([0] + [len(d) for d, _t, _l in lists])
+    cat = lambda i: np.concatenate([x[i] for x in lists])
+    parts = {
+        "p_docs": cat(0), "p_tf": cat(1), "p_dls": cat(2),
+        "term_starts": starts,
+        "terms": np.array([f"t{i:03d}" for i in range(len(lists))], dtype=object),
+    }
+    all_docs = np.unique(parts["p_docs"])
+    rows = _encode_shard(3, all_docs, np.ones(len(all_docs), dtype=np.int64), parts).to_pylist()
+    assert rows[0]["term"] is None and rows[0]["df_local"] == len(all_docs)
+    want = encoded_term_rows(
+        parts["terms"], parts["p_docs"], parts["p_tf"], parts["p_dls"], starts
     )
+    return rows[1:], want
 
+
+def test_batch_encode_byte_identical_to_single():
+    """The columnar batch encoder, through the shard encoder, writes
+    rows byte-identical to the per-term oracle (same format, decodable
+    by the same readers)."""
     rng = np.random.RandomState(3)
-    docs_all, tfs_all, dls_all, starts = [], [], [], [0]
+    lists = []
     for n in [1, 2, 127, 128, 129, 400, 1000]:
         d = np.sort(np.unique(rng.randint(0, 10**9, size=n * 2)))[:n].astype(np.int64)
         t = rng.randint(1, 50, size=n).astype(np.int64)
         l = rng.randint(5, 500, size=n).astype(np.int64)
-        docs_all.append(d); tfs_all.append(t); dls_all.append(l)
-        starts.append(starts[-1] + n)
-    cat = lambda xs: np.concatenate(xs)
-    batch = encode_posting_lists_batch(cat(docs_all), cat(tfs_all), cat(dls_all),
-                                       np.array(starts))
-    for i, (d, t, l) in enumerate(zip(docs_all, tfs_all, dls_all)):
-        single = encode_posting_list(d, t, l)
-        for k in single:
-            a, b = single[k], batch[i][k]
-            assert a == b or (bytes(a) == bytes(b)), (i, k)
-        dd, tt = decode_posting_list(batch[i])
+        lists.append((d, t, l))
+    got, want = _shard_term_rows(lists)
+    assert len(got) == len(want)
+    for i, ((d, t, _l), g, w) in enumerate(zip(lists, got, want)):
+        assert g["shard_id"] == 3
+        assert_rows_match(g, w, (i,))
+        dd, tt = decode_posting_list(g)
         assert np.array_equal(dd, d) and np.array_equal(tt, t)
 
 
@@ -139,15 +149,10 @@ def test_batch_encode_byte_identical_to_single():
 )
 @settings(max_examples=60, deadline=None)
 def test_batch_encode_property(terms):
-    """Batch == per-term encoding for arbitrary posting lists (random
-    doc ids incl. duplicates-across-terms, random tf/dl, any term count
-    and block alignment)."""
-    from alertsage_spark.index.compress import (
-        encode_posting_list,
-        encode_posting_lists_batch,
-    )
-
-    docs_all, tfs_all, dls_all, starts = [], [], [], [0]
+    """Shard encoder == per-term oracle for arbitrary posting lists
+    (random doc ids incl. duplicates-across-terms, random tf/dl, any
+    term count and block alignment)."""
+    lists = []
     for plist in terms:
         uniq = {}
         for doc, tf, dl in plist:
@@ -155,14 +160,25 @@ def test_batch_encode_property(terms):
         d = np.array(sorted(uniq), dtype=np.int64)
         t = np.array([uniq[x][0] for x in sorted(uniq)], dtype=np.int64)
         l = np.array([uniq[x][1] for x in sorted(uniq)], dtype=np.int64)
-        docs_all.append(d); tfs_all.append(t); dls_all.append(l)
-        starts.append(starts[-1] + len(d))
-    batch = encode_posting_lists_batch(
-        np.concatenate(docs_all), np.concatenate(tfs_all),
-        np.concatenate(dls_all), np.array(starts),
-    )
-    for i, (d, t, l) in enumerate(zip(docs_all, tfs_all, dls_all)):
-        single = encode_posting_list(d, t, l)
-        for k in single:
-            a, b = single[k], batch[i][k]
-            assert a == b or (bytes(a) == bytes(b)), (i, k)
+        lists.append((d, t, l))
+    got, want = _shard_term_rows(lists)
+    assert len(got) == len(want)
+    for i, (g, w) in enumerate(zip(got, want)):
+        assert_rows_match(g, w, (i,))
+
+
+@pytest.mark.parametrize("n", [1, 127, 128, 129, 1000])
+def test_decode_posting_list_equals_block_decodes(n):
+    """The one full-list decoder (vectorized reset-cumsum) equals the
+    concatenation of decode_block over every block — the lazy per-block
+    path WAND uses."""
+    rng = np.random.RandomState(n)
+    d = np.cumsum(rng.randint(1, 2**20, size=n)).astype(np.int64)
+    t = rng.randint(1, 300, size=n).astype(np.int64)
+    (row,), _want = _shard_term_rows([(d, t, np.full(n, 9, dtype=np.int64))])
+    blocks = [decode_block(row, b) for b in range(len(row["block_last_docs"]))]
+    assert len(blocks) == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+    docs, tfs = decode_posting_list(row)
+    assert np.array_equal(docs, np.concatenate([b[0] for b in blocks]))
+    assert np.array_equal(tfs, np.concatenate([b[1] for b in blocks]))
+    assert np.array_equal(docs, d) and np.array_equal(tfs, t)

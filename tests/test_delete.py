@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,3 +176,31 @@ def test_delete_append_merge_interplay(spark, tmp_path):
         expected = oracle.topk(text, k=10)
         assert [g[1] for g in got] == [e[0] for e in expected], qid
         assert [g[2] for g in got] == [e[1] for e in expected], qid
+
+
+def test_merge_and_delete_plans_are_arrow_grouped_maps(spark, tmp_path, monkeypatch):
+    """delete_docs and merge_segments each write through exactly one
+    Arrow grouped map (FlatMapGroupsInArrow, no FlatMapGroupsInPandas)
+    and warn nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    d = str(tmp_path / "p")
+    build_segments(spark, zipf_corpus(spark, 200, seed=5), d, n_shards=4, n_groups=2)
+    plans: list[str] = []
+    write_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        delete_docs(spark, d, [0, 7, 14])
+        delete_plans, plans[:] = plans[:], []
+        merge_segments(spark, d, str(tmp_path / "pm"))
+    user_warnings = [str(w.message) for w in caught if issubclass(w.category, UserWarning)]
+    assert not user_warnings, user_warnings
+    for what, ps in (("delete", delete_plans), ("merge", plans)):
+        assert sum(p.count("FlatMapGroupsInArrow") for p in ps) == 1, (what, ps)
+        assert not any("FlatMapGroupsInPandas" in p for p in ps), (what, ps)

@@ -217,3 +217,53 @@ def test_maybe_compact_policy(spark, code_docs, tmp_path):
     merged = maybe_compact(spark, str(d), str(tmp_path / "pol_m"), max_groups=4)
     assert merged is not None
     assert merged.segments.groupBy("shard_id", "term").count().filter("count > 1").count() == 0
+
+
+def _rows_by_key(spark, d):
+    """Every segment row of an index keyed by (shard_id, term), all
+    columns as plain values."""
+    from alertsage_spark.index.segments import _SEG_COLS
+
+    out = {}
+    for r in load_index(spark, d).segments.select(*_SEG_COLS).collect():
+        key = (r["shard_id"], r["term"])
+        assert key not in out, key
+        out[key] = tuple(
+            bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r
+        )
+    return out
+
+
+@pytest.mark.parametrize("mode", ["text", "code"])
+def test_merge_equals_fresh_build_of_survivors(spark, tmp_path, mode):
+    """Build 4 groups over 8 shards, delete every 7th doc plus every doc
+    of one shard, merge: the merged index equals a fresh build of the
+    surviving docs row for row (every column of every (shard_id, term)
+    row) and in n_docs/sum_dl. The emptied shard emits no rows, as the
+    builder does for a shard without docs."""
+    from conftest import synth_corpus
+
+    from alertsage_spark.index.segments import delete_docs, shard_col
+
+    docs = spark.createDataFrame(synth_corpus(400, seed=11)).select(
+        F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(2**62)).alias("doc_id"),
+        F.col("content").alias("text"),
+    ).withColumn("shard_id", shard_col(F.col("doc_id"), 8)).cache()
+    src, fresh = str(tmp_path / "src"), str(tmp_path / "fresh")
+    build_segments(spark, docs.drop("shard_id"), src, n_shards=8, n_groups=4, mode=mode)
+    ids = sorted((r["doc_id"], r["shard_id"]) for r in docs.collect())
+    emptied = 3
+    victims = {d for d, _s in ids[::7]} | {d for d, s in ids if s == emptied}
+    delete_docs(spark, src, sorted(victims))
+    merged = merge_segments(spark, src, str(tmp_path / "merged"))
+
+    survivors = docs.filter(~F.col("doc_id").isin(sorted(victims))).drop("shard_id")
+    build_segments(spark, survivors, fresh, n_shards=8, n_groups=1, mode=mode)
+    got, want = _rows_by_key(spark, merged.paths.root), _rows_by_key(spark, fresh)
+    assert not [k for k in got if k[0] == emptied]
+    assert got.keys() == want.keys()
+    for key in want:
+        assert got[key] == want[key], key
+    fresh_stats = load_index(spark, fresh).stats
+    assert merged.stats["n_docs"] == fresh_stats["n_docs"] == len(ids) - len(victims)
+    assert merged.stats["sum_dl"] == fresh_stats["sum_dl"]

@@ -148,33 +148,38 @@ def test_suggest_n_shards_sizing_rule():
     assert suggest_n_shards(0) == 1
 
 
-def test_arrow_builder_matches_pandas_builder(spark, docs):
-    """r6: build_segments switched to the applyInArrow builder; its
-    output (zero-copy buffer views + vectorized block metadata) must be
-    byte-identical to the row-oriented pandas builder, both modes."""
+def test_arrow_builder_matches_per_term_oracle(spark, docs):
+    """build_segments' applyInArrow builder (zero-copy buffer views +
+    vectorized block metadata) writes the doclen row plus one term row
+    per term, each byte-identical to the per-term oracle encode of the
+    same _shard_postings output, both modes."""
     import pyarrow as pa
 
     from alertsage_spark.index.segments import (
         _SEG_COLS,
-        _segment_builder,
         _segment_builder_arrow,
+        _shard_postings,
+        decode_doclen_row,
     )
+    from posting_oracle import assert_rows_match, encoded_term_rows
 
     pdf = docs.toPandas()
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
     for mode in ("text", "code"):
-        fp = _segment_builder(mode)((5,), pdf)
-        fa = _segment_builder_arrow(mode)((5,), tbl).to_pandas()
-        assert list(fp.columns) == list(fa.columns) == _SEG_COLS
-        assert len(fp) == len(fa)
-        fp2 = fp.sort_values("term", na_position="first").reset_index(drop=True)
-        fa2 = fa.sort_values("term", na_position="first").reset_index(drop=True)
-        for col in _SEG_COLS:
-            for i in range(len(fp2)):
-                a, b = fp2[col][i], fa2[col][i]
-                if isinstance(a, (bytes, bytearray)) or isinstance(b, (bytes, bytearray)):
-                    assert bytes(a) == bytes(b), (mode, col, i)
-                elif hasattr(a, "__len__") and not isinstance(a, str):
-                    assert list(a) == list(b), (mode, col, i)
-                else:
-                    assert a == b or str(a) == str(b), (mode, col, i)
+        rows = _segment_builder_arrow(mode)((5,), tbl).to_pylist()
+        assert all(list(r) == _SEG_COLS and r["shard_id"] == 5 for r in rows)
+        lens, parts = _shard_postings(doc_ids, tbl.column("text"), mode)
+        dl_row, term_rows = rows[0], rows[1:]
+        assert dl_row["term"] is None
+        dd, ll = decode_doclen_row(dl_row)
+        order = np.argsort(doc_ids)
+        assert np.array_equal(dd, doc_ids[order]) and np.array_equal(ll, lens[order])
+        assert (dl_row["df_local"], dl_row["cf_local"]) == (len(doc_ids), int(lens.sum()))
+        want = encoded_term_rows(
+            parts["terms"], parts["p_docs"], parts["p_tf"], parts["p_dls"],
+            parts["term_starts"],
+        )
+        assert len(term_rows) == len(want) > 0
+        for got, w in zip(term_rows, want):
+            assert_rows_match(got, w, (mode, w["term"]))
