@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from collections import deque
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from alertsage_spark.session import persist_bounded
@@ -121,6 +121,11 @@ class InvertedIndex:
         self._avgdl = v
 
     def cache(self) -> "InvertedIndex":
+        """Pin the index for a long life: its owner unpersists it, so
+        the bounded per-build registries must never evict its postings."""
+        for reg in (_POSTINGS_PERSISTS, _FIELDED_PERSISTS):
+            if self.postings in reg:  # DataFrame equality is identity
+                reg.remove(self.postings)
         self.doclen.cache()
         self.postings.cache()
         self.termstats.cache()
@@ -195,12 +200,10 @@ def build_index(
     # the tokenize+explode+shuffle run ONCE (block-level locking dedups
     # concurrent branch materialization); callers that are done with the
     # index call unpersist(), and the bounded registry releases older
-    # builds' storage in long sessions. Lazy as before — nothing runs
-    # until the first action.
-    # keep=4: the catalog keeps up to two LONG-LIVED cached indexes
-    # (text + code relational) whose storage must survive transient
-    # builds landing in the same registry
-    postings = persist_bounded(postings, _POSTINGS_PERSISTS, keep=4)
+    # builds' storage in long sessions (cache() takes a long-lived
+    # index out of it). Lazy as before — nothing runs until the first
+    # action.
+    postings = persist_bounded(postings, _POSTINGS_PERSISTS)
     termstats = postings.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("tf").alias("cf")
     )
@@ -214,11 +217,6 @@ def build_index(
         mode=mode,
         corpus_stats=_corpus_stats_df(postings, n_docs),
     )
-
-
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver fixture corpus: documents(doc_id, text, lang, source, n_chars)."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def build_fielded_index(

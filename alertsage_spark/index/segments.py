@@ -989,6 +989,13 @@ class SegmentIndex:
                 self.dl_map[sid] = (d[order], l[order])
         return self
 
+    def unpersist(self) -> None:
+        """Release what prepare_for_queries() pinned: the cached segment
+        rows and the driver-side df/doclen maps and term-row caches."""
+        self.segments.unpersist()
+        self.df_map = self.dl_map = None
+        self.term_rows_cache = self.tomb_rows_cache = None
+
     def postings_df(self, terms: list[str] | None = None, _tomb=_UNSET) -> DataFrame:
         """Decoded (term, doc_id, tf) postings — the RELATIONAL view of
         the compressed LSM index, so every relational query surface

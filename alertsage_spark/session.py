@@ -10,9 +10,62 @@ sized to ~2-3x total cores.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import weakref
 from collections import deque
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
+
+
+class IndexRegistry:
+    """The long-lived values (index handles, cached DataFrames, read
+    plans) of ONE session, each built once per key
+    ``(os.path.abspath(sf_dir), kind)`` by the ``build(sf_dir)`` given to
+    ``get`` and released by its ``unpersist()``. Index directories go
+    under one temp root, removed by ``close()`` or at interpreter exit.
+    Held on its session (``session_registry``): a restarted session
+    starts empty instead of serving handles of a stopped SparkContext."""
+
+    def __init__(self) -> None:
+        self._held: dict[tuple[str, str], object] = {}
+        self._cleanup: weakref.finalize | None = None
+        self.root: str | None = None
+
+    def get(self, sf_dir: str, kind: str, build: Callable[[str], object]):
+        key = (os.path.abspath(sf_dir), kind)
+        if key not in self._held:
+            self._held[key] = build(key[0])
+        return self._held[key]
+
+    def held(self, sf_dir: str, kind: str):
+        """The value held for (sf_dir, kind), or None; never builds."""
+        return self._held.get((os.path.abspath(sf_dir), kind))
+
+    def tmpdir(self, prefix: str) -> str:
+        if self._cleanup is None or not self._cleanup.alive:
+            self.root = tempfile.mkdtemp(prefix="alertsage_registry_")
+            self._cleanup = weakref.finalize(self, shutil.rmtree, self.root, True)
+        return tempfile.mkdtemp(prefix=prefix, dir=self.root)
+
+    def close(self) -> None:
+        """Unpersist and drop every held value, remove the temp root;
+        the next ``get`` rebuilds."""
+        for value in self._held.values():
+            try:
+                value.unpersist()
+            except Exception:
+                pass  # session already stopped — nothing to release
+        self._held.clear()
+        if self._cleanup is not None:
+            self._cleanup()
+
+
+def session_registry(spark: SparkSession) -> IndexRegistry:
+    if not hasattr(spark, "_alertsage_registry"):
+        spark._alertsage_registry = IndexRegistry()
+    return spark._alertsage_registry
 
 
 def local_df(spark: SparkSession, rows, schema: str):

@@ -11,6 +11,7 @@ import duckdb
 import pytest
 
 from alertsage_spark import catalog
+from alertsage_spark.session import session_registry
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -88,10 +89,14 @@ def test_approx_distinct_accuracy(spark, con):
 
 
 def test_tbl_plan_cache_lives_on_the_session_keyed_by_abspath(spark):
-    """tbl() keeps its plans on the session object (they die with it)
-    and keys them by the absolute sf_dir: a relative and an absolute
-    path to the same fixture share one cached plan."""
+    """tbl() plans and index handles live in the session's registry
+    (they die with it), keyed by the absolute sf_dir: a relative and an
+    absolute path to the same fixture share one plan and one index."""
+    reg = session_registry(spark)
     rel = os.path.relpath(SF_DIR)
     plan = catalog.tbl(spark, SF_DIR, "documents")
     assert catalog.tbl(spark, rel, "documents") is plan
-    assert spark._alertsage_tbl_plans[(os.path.abspath(SF_DIR), "documents")] is plan
+    assert reg.held(SF_DIR, "tbl:documents") is plan
+    index = catalog._rel_index_for(spark, rel)
+    assert catalog._rel_index_for(spark, SF_DIR) is index
+    assert reg.held(os.path.abspath(SF_DIR), "rel") is index
