@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alertsage_spark.index.build import build_index
+from alertsage_spark.index.build import adaptive_partitions
 from alertsage_spark.operators import dedup, similarity, textstats
 from alertsage_spark.query.bm25 import bm25_topk
 from alertsage_spark.session import local_df, session_registry
@@ -76,13 +76,18 @@ _DRIVER_WINDOW: list[str] = [
     "ft_normalize_label", "rel_regexp_extract", "rel_topk_offset",
     "rel_topk_most_common", "rel_json_extract", "rel_date_arith",
     "rel_comment_filter",
-    # -- staleness rotation tranche B: r1/r2-green basics whose last
-    # driver row is now 3 rounds old --
-    "rel_filter_eq", "rel_filter_range", "rel_filter_dates",
-    "rel_filter_like", "rel_filter_inlist", "rel_filter_compound",
-    "rel_join_left", "rel_join_chain", "rel_join_semi", "rel_join_anti",
-    "rel_agg_label_counts", "rel_agg_count_avg",
-    "rel_agg_minmax", "rel_agg_multikey", "rel_agg_conditional",
+    # -- round-7 re-certify: every entry that read the held relational
+    # index now reads the segment index's Arrow-decoded view, and the
+    # LSM relview entries read the rewritten decoders (the BM25
+    # flagship, both hybrids and ft_bm25_lsm_relview already sit in
+    # the window). r6-green rel_* basics yield their slots, still
+    # locally oracle-replicated --
+    "ft_term_df_top20", "ft_doclen", "ft_corpus_stats",
+    "ft_threshold_sweep", "ft_threshold_gate", "ft_boolean_search",
+    "ft_fuzzy_suggest", "ft_snippet_topdocs", "ft_substring_search",
+    "ft_prefix_search", "ft_search_facets", "ft_term_autocomplete",
+    "ft_query_language", "ft_boolean_lsm", "ft_substring_lsm",
+    # -- staleness rotation tranche B (r6-green) --
     "rel_window_topk_group", "rel_window_running",
     # -- rows-only -> ORACLE promotions (r5): first-ever HASH rows for
     # the LSH ANN top-k and the LSH near-dup pair generation (their
@@ -94,21 +99,9 @@ _DRIVER_WINDOW: list[str] = [
     # (rel_join_topk yields its slot, still locally oracle-replicated) --
     "ft_hybrid_rrf_segwand",
     # -- keep-set: flagship entries that must stay driver-verified.
-    # Rotated out for r5 (ALL r4-driver-green, still locally
-    # oracle-checked by tests/test_catalog_oracle.py): ft_search_facets,
-    # ft_bm25f_topk, ft_query_language, ft_term_autocomplete,
-    # mm_extract_features, mm_resize_stats, sim_ann_lsh_recall,
-    # sim_ann_ivf_recall, ft_boolean_lsm, ft_substring_lsm,
-    # stream_dedup_exact, ft_fuzzy_suggest, dedup_components,
-    # dedup_survivors, ft_hallucinated_iocs, ft_build_invariants,
-    # rel_setops, rel_distinct_pairs, rel_scalar_strfuncs,
-    # rel_readonly_sql_api, rel_agg_salted, rel_join_salted,
-    # rel_agg_percentiles, rel_scalar_subquery, rel_window_ntile,
-    # rel_sessionize, stream_time_window, stream_sessionize,
-    # io_jsonl_roundtrip, io_csv_roundtrip, sim_dup_pairs_prod,
-    # ft_phrase_search, pipe_decontaminate, pipe_split_train_val,
-    # pipe_repetition_filter, ft_boolean_search, ft_snippet_topdocs,
-    # ft_substring_search, ft_prefix_search. --
+    # Entries rotated out (all with a green driver row, still locally
+    # oracle-checked by tests/test_catalog_oracle.py) are listed in
+    # tests/test_driver_window.py. --
     "ft_bm25_topk_refqueries", "ft_wand_topk_refqueries",
     "ft_taat_topk_refqueries", "ft_sha256_fidelity",
 ]
@@ -237,24 +230,6 @@ from collections import deque as _deque  # bounded per-call persists
 _GRAMS_PERSISTS: _deque = _deque()
 
 
-def _build_rel_index(spark: SparkSession, sf_dir: str, mode: str):
-    """Uncompressed relational index over documents (several ft_*
-    entries share it). The cached postings coalesce to a SIZE-DERIVED
-    partition count (r6): a query stage over the fixture-scale cache is
-    one task instead of shuffle-partition-count near-empty ones, and the
-    count grows linearly with the corpus. Code mode (identifier + '#'
-    trigram terms, the substring/prefix search accelerator) has ~6x the
-    rows of text mode."""
-    from alertsage_spark.index.build import adaptive_partitions
-
-    docs = tbl(spark, sf_dir, "documents")
-    rows_per_doc = 600.0 if mode == "code" else 100.0
-    return build_index(
-        docs, mode=mode,
-        coalesce_to=adaptive_partitions(docs.count(), rows_per_doc=rows_per_doc),
-    ).cache()
-
-
 def _build_segment_index(spark: SparkSession, sf_dir: str, mode: str):
     """The compressed segment index over the documents fixture."""
     from alertsage_spark.index.segments import build_segments, load_index
@@ -272,10 +247,29 @@ def _build_segment_index(spark: SparkSession, sf_dir: str, mode: str):
     return load_index(spark, d).prepare_for_queries()
 
 
-_rel_index_for = _session_held("rel", mode="text")(_build_rel_index)
-_rel_code_index_for = _session_held("rel_code", mode="code")(_build_rel_index)
 _segment_index_for = _session_held("segments", mode="text")(_build_segment_index)
 _code_index_for = _session_held("code", mode="code")(_build_segment_index)
+
+
+def _relational_view(held_index):
+    """The relational (InvertedIndex) view of a held segment index, so
+    each corpus and mode is tokenized and built once. Held itself (an
+    uncached view re-decodes the segments on every call), its postings
+    and doclen coalesced to a SIZE-DERIVED partition count: a query
+    stage over the fixture-scale cache is one task instead of
+    shuffle-partition-count near-empty ones."""
+
+    def build(spark: SparkSession, sf_dir: str):
+        view = held_index(spark, sf_dir).as_inverted_index()
+        n = adaptive_partitions(view.n_docs)
+        view.postings, view.doclen = view.postings.coalesce(n), view.doclen.coalesce(n)
+        return view.cache()
+
+    return build
+
+
+_rel_index_for = _session_held("rel")(_relational_view(_segment_index_for))
+_rel_code_index_for = _session_held("rel_code")(_relational_view(_code_index_for))
 
 
 @register("ft_wand_topk_refqueries", _bm25_oracle_sql(10))
@@ -4085,10 +4079,7 @@ def _fielded_index_for(spark: SparkSession, sf_dir: str):
     """BM25F fielded index over documents — the same long-lived-index
     treatment as every other held index (r6: this was the one
     query-surface entry still rebuilding its index on every call)."""
-    from alertsage_spark.index.build import (
-        adaptive_partitions,
-        build_fielded_index,
-    )
+    from alertsage_spark.index.build import build_fielded_index
     from alertsage_spark.session import spread_small_scan
 
     docs = tbl(spark, sf_dir, "documents")

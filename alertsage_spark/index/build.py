@@ -77,10 +77,9 @@ class InvertedIndex:
 
     Fields:
       doclen     (doc_id long, dl long)
-      postings   (term string, doc_id long, tf long[, dl long]) — the
-                 build_index form carries dl so scoring skips the doclen
-                 join; external postings (segment relview) omit it and
-                 the scorer falls back to the join.
+      postings   (term string, doc_id long, tf long, dl long) — dl
+                 rides on the posting row so scoring skips the doclen
+                 join.
       termstats  (term string, df long, cf long)
       n_docs     int — eager, cheap (row count only).
       avgdl      float — LAZY when constructed with avgdl=None: first
@@ -156,8 +155,13 @@ def _corpus_stats_df(postings: DataFrame, n_docs: int) -> DataFrame | None:
     )
 
 
-def adaptive_partitions(n_docs: int, rows_per_doc: float = 100.0,
-                        target_rows: int = 2_000_000) -> int:
+# adaptive_partitions sizing: estimated postings rows per document and
+# rows per partition of a long-lived cached index
+_ROWS_PER_DOC = 100.0
+_TARGET_ROWS = 2_000_000
+
+
+def adaptive_partitions(n_docs: int) -> int:
     """Size-derived partition count for a long-lived cached relation:
     ceil(estimated rows / target). NOT a local-mode constant — a 5k-doc
     fixture coalesces to 1 partition (a per-query stage over it is one
@@ -165,7 +169,7 @@ def adaptive_partitions(n_docs: int, rows_per_doc: float = 100.0,
     corpus gets ~50k partitions."""
     import math
 
-    return max(1, math.ceil(n_docs * rows_per_doc / target_rows))
+    return max(1, math.ceil(n_docs * _ROWS_PER_DOC / _TARGET_ROWS))
 
 
 def build_index(
@@ -173,15 +177,8 @@ def build_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     mode: str = "text",
-    coalesce_to: int | None = None,
 ) -> InvertedIndex:
-    """Build the logical inverted index from a documents DataFrame.
-
-    ``coalesce_to``: optional partition count for the materialized
-    postings — long-lived cached indexes serving many small queries pass
-    adaptive_partitions(n_docs) so each query stage schedules
-    data-proportional tasks; one-shot batch builds leave it None (full
-    shuffle parallelism for the scoring aggregation)."""
+    """Build the logical inverted index from a documents DataFrame."""
     toks = tokens_df(docs, id_col, text_col, mode)
     doclen = toks.select("doc_id", F.size("toks").alias("dl"))
     postings = (
@@ -190,8 +187,6 @@ def build_index(
         .agg(F.count("*").alias("tf"))
         .select("term", "doc_id", "tf", "dl")
     )
-    if coalesce_to is not None:
-        postings = postings.coalesce(coalesce_to)
     # Materialize the postings relation: building the index IS this op's
     # semantics, and the first query's scoring/termstats/avgdl branches
     # each prune different columns, so Catalyst CANNOT reuse one

@@ -23,6 +23,7 @@ because they run inside Arrow-batched UDFs on the executors.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 K1 = 1.2
@@ -138,9 +139,10 @@ def encode_posting_lists_columnar(
     }
 
 
-def varbyte_decode(buf: bytes) -> np.ndarray:
-    """Vectorized varbyte decode -> uint64 array."""
-    if not buf:
+def varbyte_decode(buf) -> np.ndarray:
+    """Vectorized varbyte decode of bytes (or a uint8 array) -> uint64
+    array."""
+    if len(buf) == 0:
         return np.empty(0, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8)
     is_last = (b & 0x80) == 0
@@ -186,6 +188,16 @@ def block_norm_bounds(
     return bm25_norm(np.asarray(max_tfs), np.asarray(min_dls), avgdl)
 
 
+def _reset_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Doc ids from a delta stream whose value at each index in
+    ``starts`` (sorted, first 0) is ABSOLUTE: one cumsum, then subtract
+    per run the sum carried in from earlier runs."""
+    c = np.cumsum(deltas, dtype=np.uint64)
+    offs = c[starts] - deltas[starts]
+    counts = np.diff(np.append(starts, len(deltas)))
+    return (c - np.repeat(offs, counts)).astype(np.int64)
+
+
 def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray]:
     """The one decoder of a term row -> (doc_ids int64, tfs int64).
 
@@ -193,17 +205,46 @@ def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray]:
     dict, a collected term row). Two varbyte calls (one per stream)
     decode the FULL list instead of two per block: the delta stream
     restarts (absolute doc_id) at every BLOCK_SIZE boundary, so the
-    decoded cumsum is corrected per block by subtracting the running
-    offset at each block start (vectorized reset-cumsum)."""
+    decoded cumsum is corrected per block (vectorized reset-cumsum)."""
     deltas = varbyte_decode(bytes(row["doc_bytes"]))
     tfs = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
-    c = np.cumsum(deltas, dtype=np.uint64)
     starts = np.arange(0, len(deltas), BLOCK_SIZE, dtype=np.int64)
-    # value at a block start is ABSOLUTE: subtract the cumsum carried in
-    # from previous blocks, per block
-    offs = c[starts] - deltas[starts]
-    counts = np.diff(np.append(starts, len(deltas)))
-    return (c - np.repeat(offs, counts)).astype(np.int64), tfs
+    return _reset_cumsum(deltas, starts), tfs
+
+
+def _binary_values(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes as uint8, per-row byte offsets from 0) of a null-free
+    binary Arrow array, read from its buffers without a copy."""
+    if len(arr) == 0:
+        return np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _validity, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, dtype=otype)[arr.offset : arr.offset + len(arr) + 1]
+    off = off.astype(np.int64)
+    buf = np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
+    return buf[off[0] : off[-1]], off - off[0]
+
+
+def decode_rows(
+    doc_bytes: pa.Array, tf_bytes: pa.Array, block_size: int | None = BLOCK_SIZE
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """decode_posting_list over EVERY row of an Arrow batch in one pass
+    -> (values per row, doc_ids int64, tfs int64), rows concatenated.
+
+    The rows' varbyte streams are one contiguous buffer, so each stream
+    is one varbyte call for the whole batch; the delta stream restarts
+    at every row start and, within a row, every ``block_size`` values
+    (term rows) — ``None`` for doclen-format rows, whose one delta
+    stream never restarts. A row's value count is the number of
+    terminal bytes (high bit clear) in its byte range."""
+    dbuf, doff = _binary_values(doc_bytes)
+    deltas = varbyte_decode(dbuf)
+    counts = np.diff(np.searchsorted(np.flatnonzero(dbuf < 0x80), doff))
+    within = np.arange(len(deltas)) - np.repeat(np.cumsum(counts) - counts, counts)
+    restart = within == 0 if block_size is None else within % block_size == 0
+    docs = _reset_cumsum(deltas, np.flatnonzero(restart))
+    tfs = varbyte_decode(_binary_values(tf_bytes)[0]).astype(np.int64)
+    return counts, docs, tfs
 
 
 def decode_block(row: dict, block_idx: int) -> tuple[np.ndarray, np.ndarray]:

@@ -46,12 +46,12 @@ import time
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import (
-    decode_posting_list,
+    decode_rows,
     delta_decode,
     delta_encode,
     encode_posting_lists_columnar,
@@ -135,9 +135,6 @@ def persist_stream_batch_ids(index_dir: str, ids: set[int]) -> None:
     with open(tmp, "w") as f:
         json.dump({"batch_ids": sorted(int(b) for b in ids)}, f)
     os.replace(tmp, side)
-
-# sentinel: "tombstones not computed yet" (None means "none exist")
-_UNSET = object()
 
 MANIFEST_SCHEMA = (
     "build_id string, group_id int, n_shards int, n_groups int, "
@@ -239,8 +236,6 @@ def _doclen_row(shard_id: int, doc_ids: np.ndarray, dls: np.ndarray, term=None):
     lengths varbyte in tf_bytes in the same order. term=NULL is the
     shard's doclen row; delete_docs writes the same row with zero lengths
     and term=TOMBSTONE_TERM."""
-    import pyarrow as pa
-
     order = np.argsort(doc_ids, kind="stable")
     d = doc_ids[order].astype(np.uint64)
     db = varbyte_encode(delta_encode(d))
@@ -339,8 +334,6 @@ def _shard_postings(doc_ids: np.ndarray, texts, mode: str):
 
 
 def _arrow_segment_schema():
-    import pyarrow as pa
-
     return pa.schema(
         [
             ("shard_id", pa.int32()),
@@ -378,8 +371,6 @@ def _encode_shard(shard_id: int, doc_ids: np.ndarray, lens: np.ndarray, parts):
 
     A shard with no docs emits no rows; a shard with docs but no
     postings emits only its doclen row."""
-    import pyarrow as pa
-
     schema = _arrow_segment_schema()
     if not len(doc_ids):
         return schema.empty_table()
@@ -996,7 +987,7 @@ class SegmentIndex:
         self.df_map = self.dl_map = None
         self.term_rows_cache = self.tomb_rows_cache = None
 
-    def postings_df(self, terms: list[str] | None = None, _tomb=_UNSET) -> DataFrame:
+    def postings_df(self, terms: list[str] | None = None) -> DataFrame:
         """Decoded (term, doc_id, tf) postings — the RELATIONAL view of
         the compressed LSM index, so every relational query surface
         (boolean retrieval, substring candidates, fuzzy df ranking, the
@@ -1010,88 +1001,34 @@ class SegmentIndex:
         appends collapse by max-tf — byte-for-byte the merge rule
         (merge.py), so the view equals the post-merge index.
         """
+        self.assert_serving_fresh()
+        return _drop_tombstoned(self._max_tf_postings(terms), self._tombstone_docs_df())
+
+    def _max_tf_postings(self, terms: list[str] | None) -> DataFrame:
         seg = self.segments.filter(
             F.col("term").isNotNull() & (F.col("term") != TOMBSTONE_TERM)
         )
         if terms is not None:
             seg = seg.filter(F.col("term").isin(list(terms)))
-
-        def _decode(it):
-            for pdf in it:
-                outs = []
-                for r in pdf.to_dict("records"):
-                    docs, tfs = decode_posting_list(r)
-                    outs.append(
-                        pd.DataFrame({"term": r["term"], "doc_id": docs, "tf": tfs})
-                    )
-                yield (
-                    pd.concat(outs)
-                    if outs
-                    else pd.DataFrame(
-                        {"term": pd.Series(dtype="object"),
-                         "doc_id": pd.Series(dtype="int64"),
-                         "tf": pd.Series(dtype="int64")}
-                    )
-                )
-
-        raw = seg.select("term", "doc_bytes", "tf_bytes").mapInPandas(
-            _decode, schema="term string, doc_id long, tf long"
+        raw = seg.select("term", "doc_bytes", "tf_bytes").mapInArrow(
+            _decode_term_batches, "term string, doc_id long, tf long"
         )
-        out = raw.groupBy("term", "doc_id").agg(F.max("tf").alias("tf"))
-        tomb = self._tombstone_docs_df() if _tomb is _UNSET else _tomb
-        if tomb is not None:
-            out = out.join(tomb, "doc_id", "left_anti")
-        return out
+        return raw.groupBy("term", "doc_id").agg(F.max("tf").alias("tf"))
 
-    def doclen_df(self, _tomb=_UNSET) -> DataFrame:
+    def doclen_df(self) -> DataFrame:
         """Decoded (doc_id, dl) — max-dl dedup across groups (the merge
         rule), tombstoned docs removed."""
-
-        def _decode(it):
-            for pdf in it:
-                outs = []
-                for r in pdf.to_dict("records"):
-                    d, l = decode_doclen_row(r)
-                    outs.append(pd.DataFrame({"doc_id": d, "dl": l}))
-                yield (
-                    pd.concat(outs)
-                    if outs
-                    else pd.DataFrame(
-                        {"doc_id": pd.Series(dtype="int64"),
-                         "dl": pd.Series(dtype="int64")}
-                    )
-                )
-
-        raw = self.doclen_rows.select("doc_bytes", "tf_bytes").mapInPandas(
-            _decode, schema="doc_id long, dl long"
-        )
-        out = raw.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-        tomb = self._tombstone_docs_df() if _tomb is _UNSET else _tomb
-        if tomb is not None:
-            out = out.join(tomb, "doc_id", "left_anti")
-        return out
+        self.assert_serving_fresh()
+        out = _decoded_doclen(self.doclen_rows)
+        out = out.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+        return _drop_tombstoned(out, self._tombstone_docs_df())
 
     def _tombstone_docs_df(self) -> DataFrame | None:
         tombs = self.segments.filter(F.col("term") == TOMBSTONE_TERM)
-
-        def _decode(it):
-            for pdf in it:
-                outs = [
-                    pd.DataFrame({"doc_id": decode_doclen_row(r)[0]})
-                    for r in pdf.to_dict("records")
-                ]
-                yield (
-                    pd.concat(outs)
-                    if outs
-                    else pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-                )
-
         # cheap local probe: no tombstone rows -> skip the anti-join
         if not tombs.take(1):
             return None
-        return tombs.select("doc_bytes", "tf_bytes").mapInPandas(
-            _decode, schema="doc_id long"
-        ).distinct()
+        return _decoded_doclen(tombs).select("doc_id").distinct()
 
     def as_inverted_index(self, terms: list[str] | None = None):
         """The compressed index exposed through the InvertedIndex
@@ -1104,15 +1041,55 @@ class SegmentIndex:
         lifecycle contract documented at TOMBSTONE_TERM."""
         from alertsage_spark.index.build import InvertedIndex
 
-        tomb = self._tombstone_docs_df()  # probe/decode ONCE for both views
+        self.assert_serving_fresh()
+        doclen = self.doclen_df()
+        # dl rides on the posting row, as in build_index; the inner join
+        # also drops tombstoned docs, which doclen_df already removed
+        postings = self._max_tf_postings(terms).join(doclen, "doc_id")
         return InvertedIndex(
-            doclen=self.doclen_df(_tomb=tomb),
-            postings=self.postings_df(terms=terms, _tomb=tomb),
+            doclen=doclen,
+            postings=postings.select("term", "doc_id", "tf", "dl"),
             termstats=self.termstats,
             n_docs=int(self.stats["n_docs"]),
             avgdl=float(self.stats["avgdl"]),
             mode=self.stats.get("mode", "text"),
         )
+
+
+def _decode_term_batches(batches):
+    """mapInArrow body: every term row of a batch in one decode_rows
+    pass -> (term, doc_id, tf)."""
+    for b in batches:
+        counts, docs, tfs = decode_rows(b.column("doc_bytes"), b.column("tf_bytes"))
+        terms = b.column("term").take(np.repeat(np.arange(b.num_rows), counts))
+        yield pa.RecordBatch.from_arrays(
+            [terms, pa.array(docs), pa.array(tfs)], names=["term", "doc_id", "tf"]
+        )
+
+
+def _decode_doclen_batches(batches):
+    """mapInArrow body: doclen-format rows (doclen or tombstone) of a
+    batch in one decode_rows pass -> (doc_id, dl)."""
+    for b in batches:
+        _, docs, dls = decode_rows(
+            b.column("doc_bytes"), b.column("tf_bytes"), block_size=None
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(docs), pa.array(dls)], names=["doc_id", "dl"]
+        )
+
+
+def _decoded_doclen(rows: DataFrame) -> DataFrame:
+    return rows.select("doc_bytes", "tf_bytes").mapInArrow(
+        _decode_doclen_batches, "doc_id long, dl long"
+    )
+
+
+def _drop_tombstoned(out: DataFrame, tomb: DataFrame | None) -> DataFrame:
+    """Anti-join tombstoned doc ids out, keeping ``out``'s columns in order."""
+    if tomb is None:
+        return out
+    return out.join(tomb, "doc_id", "left_anti").select(out.columns)
 
 
 def load_index(spark: SparkSession, index_dir: str) -> SegmentIndex:

@@ -61,13 +61,12 @@ def term_score_rows(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     bm25_scores and boolean_qualified so the two paths cannot drift
     apart.
 
-    r6 shape: build_index postings carry ``dl`` on the row, so the
-    doclen join (a full extra corpus pass on a fresh index) disappears;
+    r6 shape: postings carry ``dl`` on the row, so the doclen join (a
+    full extra corpus pass on a fresh index) disappears;
     ``index.corpus_stats`` (a 1-row aggregation branch that reuses the
     postings Exchange) supplies avgdl in-plan, so scoring a fresh index
-    is ONE tokenize pass in ONE job. Indexes without these (segment
-    relview) fall back to the former joins/scalars — results identical
-    either way (same arithmetic, same inputs)."""
+    is ONE tokenize pass in ONE job. Indexes without it (segment
+    relview) use the avgdl scalar — same arithmetic, same inputs."""
     matched = F.broadcast(qterms).join(index.postings, "term")
     qstats = qterms.select("term").distinct().join(index.termstats, "term")
     stats = getattr(index, "corpus_stats", None)
@@ -82,15 +81,11 @@ def term_score_rows(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
         avgdl_e = F.col("_avgdl")
     else:
         avgdl_e = F.lit(index.avgdl)
-    with_stats = matched.join(F.broadcast(qstats), "term")
-    if "dl" in index.postings.columns:
-        with_len = with_stats  # dl rides on the posting row
-    else:
-        with_len = with_stats.join(index.doclen, "doc_id")
+    with_stats = matched.join(F.broadcast(qstats), "term")  # dl rides on the posting
     norm = (F.col("tf") * (K1 + 1.0)) / (
         F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl_e)
     )
-    return with_len.withColumn(
+    return with_stats.withColumn(
         "term_score", idf_col(F.col("df"), index.n_docs) * norm
     )
 

@@ -61,7 +61,11 @@ def synth_corpus(n_docs: int = 200, seed: int = 42) -> list[dict]:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="alertsage_tests", master="local[4]", shuffle_partitions=4)
+    # a bounded driver heap: with the 64g default the JVM's heap can grow
+    # past a small host's memory and get the JVM killed; the suite needs
+    # far less
+    s = get_spark(app_name="alertsage_tests", master="local[4]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "8g"})
     yield s
 
 

@@ -15,6 +15,7 @@ from alertsage_spark.index.compress import (
     bm25_norm,
     decode_block,
     decode_posting_list,
+    decode_rows,
     delta_decode,
     delta_encode,
     varbyte_decode,
@@ -182,3 +183,41 @@ def test_decode_posting_list_equals_block_decodes(n):
     assert np.array_equal(docs, np.concatenate([b[0] for b in blocks]))
     assert np.array_equal(tfs, np.concatenate([b[1] for b in blocks]))
     assert np.array_equal(docs, d) and np.array_equal(tfs, t)
+
+
+def test_decode_rows_equals_per_row_decodes():
+    """The batch decoder (one varbyte pass over a whole Arrow batch)
+    equals decode_posting_list row by row for term rows, and the doclen
+    decode (one delta stream per row) for doclen-format rows, on a
+    sliced batch whose lists cross block boundaries."""
+    import pyarrow as pa
+
+    from alertsage_spark.index.segments import _doclen_row, decode_doclen_row
+
+    rng = np.random.RandomState(7)
+    lists = []
+    for n in (1, 127, 128, 129, 1000, 3):
+        d = np.cumsum(rng.randint(1, 2**20, size=n)).astype(np.int64)
+        lists.append((d, rng.randint(1, 300, size=n).astype(np.int64),
+                      np.full(n, 9, dtype=np.int64)))
+    rows, _want = _shard_term_rows(lists)
+    batch = pa.table({c: [r[c] for r in rows] for c in ("doc_bytes", "tf_bytes")})
+    batch = batch.combine_chunks().slice(1)  # a non-zero array offset
+    counts, docs, tfs = decode_rows(batch["doc_bytes"].chunk(0), batch["tf_bytes"].chunk(0))
+    want = [decode_posting_list(r) for r in rows[1:]]
+    assert counts.tolist() == [len(w[0]) for w in want]
+    assert np.array_equal(docs, np.concatenate([w[0] for w in want]))
+    assert np.array_equal(tfs, np.concatenate([w[1] for w in want]))
+
+    dl_rows = [_doclen_row(0, d, t).to_pylist()[0] for d, t, _l in lists]
+    dl_batch = pa.table({c: [r[c] for r in dl_rows] for c in ("doc_bytes", "tf_bytes")})
+    counts, docs, dls = decode_rows(
+        dl_batch["doc_bytes"].chunk(0), dl_batch["tf_bytes"].chunk(0), block_size=None
+    )
+    want = [decode_doclen_row(r) for r in dl_rows]
+    assert np.array_equal(docs, np.concatenate([w[0] for w in want]))
+    assert np.array_equal(dls, np.concatenate([w[1] for w in want]))
+
+    empty = pa.array([], pa.binary())
+    counts, docs, tfs = decode_rows(empty, empty)
+    assert counts.size == docs.size == tfs.size == 0

@@ -22,15 +22,18 @@ NEVER_DRIVER_CHECKED = {
     "ft_hybrid_rrf_segwand",
 }
 
-# Entries whose ENGINE PATHS changed in round 5 — keep them in the
-# window this round so the driver re-certifies the changed code:
-# vectorized encode kernel, single-scan CMS build, and the
-# prepare_for_queries snapshot-semantics change (segments.py) via every
-# segment-served BM25 form.
+# Entries whose ENGINE PATHS changed in round 7 — keep them in the
+# window so the driver re-certifies the changed code: every entry that
+# read the held relational index now reads the segment index's
+# Arrow-decoded relational view, and the LSM relview entries read the
+# rewritten decoders.
 RECERTIFY_THIS_ROUND = {
-    "sim_text_encode_dup_pairs", "ft_hybrid_rrf", "pipe_heavy_hitters_cms",
-    "ft_stream_ingest_bm25", "ft_bm25_code_topk", "ft_bm25_lsm_relview",
-    "ft_lsm_delete_merge",
+    "ft_bm25_topk_refqueries", "ft_hybrid_rrf", "ft_hybrid_rrf_ann",
+    "ft_term_df_top20", "ft_doclen", "ft_corpus_stats",
+    "ft_threshold_sweep", "ft_threshold_gate", "ft_boolean_search",
+    "ft_fuzzy_suggest", "ft_snippet_topdocs", "ft_substring_search",
+    "ft_prefix_search", "ft_search_facets", "ft_term_autocomplete",
+    "ft_query_language", "ft_boolean_lsm", "ft_substring_lsm",
 }
 
 # Staleness rotation (r4 verdict task 7: no entry's last driver row may
@@ -45,16 +48,10 @@ ROTATED_BACK_IN_R5 = {
     "rel_comment_filter",
 }
 
-# ROUND-6 ROTATION PLAN (written r5, so next round's swap is
-# mechanical): these oracled entries' most recent driver row will be 3+
-# rounds old after r5 — rotate them IN next round (swapping against
-# this round's green passes, flagships excepted): ft_term_df_top20,
-# ft_corpus_stats, ft_quality, ft_threshold_gate, ft_threshold_sweep,
+# Still to rotate in (last driver row 3+ rounds old): ft_quality,
 # sim_cosine_topk, dedup_exact_stats, dedup_jaccard_verified,
 # rel_agg_rollup, rel_agg_pivot, rel_time_window, rel_window_lag,
-# rel_agg_distinct, rel_agg_banding, rel_join_topk, rel_topk_offset's
-# siblings already rotated this round. The r5 rotated-out set
-# (ROTATED_OUT_R5 below) is all r4/r5-green and can wait one round.
+# rel_agg_distinct, rel_agg_banding, rel_join_topk.
 
 # Flagship entries that must never leave the window (baseline targets).
 MUST_KEEP = {
@@ -62,14 +59,13 @@ MUST_KEEP = {
     "ft_taat_topk_refqueries", "ft_sha256_fidelity",
 }
 
-# Oracled entries currently rotated OUT (ALL driver-green in r4, still
-# locally replicated by tests/test_catalog_oracle.py). Nothing may be
-# rotated out without a prior green driver row.
-ROTATED_OUT_R5 = {
-    "ft_search_facets", "ft_bm25f_topk", "ft_query_language",
-    "ft_term_autocomplete", "mm_extract_features", "mm_resize_stats",
-    "sim_ann_lsh_recall", "sim_ann_ivf_recall", "ft_boolean_lsm",
-    "ft_substring_lsm", "stream_dedup_exact", "ft_fuzzy_suggest",
+# Oracled entries currently rotated OUT (each with a green driver row,
+# still locally replicated by tests/test_catalog_oracle.py). Nothing
+# may be rotated out without a prior green driver row. The rel_* basics
+# were r6-green and yielded their slots to the round-7 re-certify set.
+ROTATED_OUT = {
+    "ft_bm25f_topk", "mm_extract_features", "mm_resize_stats",
+    "sim_ann_lsh_recall", "sim_ann_ivf_recall", "stream_dedup_exact",
     "dedup_components", "dedup_survivors", "ft_hallucinated_iocs",
     "ft_build_invariants", "rel_setops", "rel_distinct_pairs",
     "rel_scalar_strfuncs", "rel_readonly_sql_api", "rel_agg_salted",
@@ -78,8 +74,11 @@ ROTATED_OUT_R5 = {
     "stream_sessionize", "io_jsonl_roundtrip", "io_csv_roundtrip",
     "sim_dup_pairs_prod", "ft_phrase_search", "pipe_decontaminate",
     "pipe_split_train_val", "pipe_repetition_filter",
-    "ft_boolean_search", "ft_snippet_topdocs", "ft_substring_search",
-    "ft_prefix_search",
+    "rel_filter_eq", "rel_filter_range", "rel_filter_dates",
+    "rel_filter_like", "rel_filter_inlist", "rel_filter_compound",
+    "rel_join_left", "rel_join_chain", "rel_join_semi", "rel_join_anti",
+    "rel_agg_label_counts", "rel_agg_count_avg", "rel_agg_minmax",
+    "rel_agg_multikey", "rel_agg_conditional",
 }
 
 
@@ -109,8 +108,9 @@ def test_first_50_cover_unverified_and_flagships():
 
 def test_rotated_out_entries_still_registered_and_oracled():
     q, o = catalog.queries(), catalog.oracle_sql()
-    for name in ROTATED_OUT_R5:
+    for name in ROTATED_OUT:
         assert name in q and name in o, name
+    assert not ROTATED_OUT & set(list(q)[:DRIVER_WINDOW_SIZE])
 
 
 def test_window_entries_are_all_oracled():

@@ -1,5 +1,6 @@
 """The session's IndexRegistry: held indexes survive transient builds,
-and close() releases every held value and its temp root."""
+close() releases every held value and its temp root, and each corpus
+and mode is tokenized and built once."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 from pyspark import StorageLevel
 
 from alertsage_spark import catalog
+from alertsage_spark.index import build, segments
 from alertsage_spark.index.build import build_fielded_index, build_index
 from alertsage_spark.session import session_registry
 
@@ -54,3 +56,40 @@ def test_close_releases_everything_and_next_lookup_rebuilds(spark):
     assert {n: _rows(spark, n) for n in before} == before
     assert catalog._segment_index_for(spark, SF_DIR) is not seg
     assert os.path.isdir(reg.root) and reg.root != root
+
+
+# Every entry that reads the relational index (ft_threshold_gate through
+# ft_bm25_topk_refqueries).
+RELATIONAL_ENTRIES = [
+    "ft_bm25_topk_refqueries", "ft_hybrid_rrf", "ft_hybrid_rrf_ann",
+    "ft_term_df_top20", "ft_doclen", "ft_corpus_stats",
+    "ft_threshold_sweep", "ft_threshold_gate", "ft_boolean_search",
+    "ft_fuzzy_suggest", "ft_snippet_topdocs", "ft_substring_search",
+    "ft_prefix_search", "ft_search_facets", "ft_term_autocomplete",
+    "ft_query_language",
+]
+
+
+def test_one_build_per_corpus_and_mode(spark, monkeypatch):
+    """Relational, WAND and code entries all read the registry's one
+    segment index per mode: two builds (text, code), no build_index."""
+    session_registry(spark).close()
+    seg_builds, rel_builds = [], []
+    real_build_segments = segments.build_segments
+
+    def counting_build_segments(*args, **kwargs):
+        seg_builds.append(kwargs.get("mode", "text"))
+        return real_build_segments(*args, **kwargs)
+
+    def refused_build_index(*args, **kwargs):
+        rel_builds.append(args)
+        raise AssertionError("build_index called while serving the catalog")
+
+    monkeypatch.setattr(segments, "build_segments", counting_build_segments)
+    for module in (build, catalog):
+        monkeypatch.setattr(module, "build_index", refused_build_index, raising=False)
+    q = catalog.queries()
+    for name in RELATIONAL_ENTRIES + ["ft_wand_topk_refqueries", "ft_bm25_code_topk"]:
+        q[name](spark, SF_DIR).collect()
+    assert sorted(seg_builds) == ["code", "text"]
+    assert rel_builds == []

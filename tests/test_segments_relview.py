@@ -104,3 +104,59 @@ def test_relview_decodes_across_block_boundaries(spark, tmp_path):
     assert all(r.tf == 1 for r in out)
     rel = build_index(docs)
     assert _postings_set(seg.postings_df()) == _postings_set(rel.postings)
+
+
+def test_relview_refuses_a_stale_snapshot(spark, docs, tmp_path):
+    """A delete after load_index must make the relational view raise,
+    exactly like wand_topk, instead of serving the deleted doc."""
+    from alertsage_spark.query.wand import wand_topk
+
+    d = str(tmp_path / "idx")
+    build_segments(spark, docs, d, n_shards=2, n_groups=1)
+    seg = load_index(spark, d)
+    delete_docs(spark, d, [2])
+    with pytest.raises(RuntimeError, match="stale"):
+        wand_topk(spark, seg, [("q", "alpha")], k=10)
+    for view in (
+        lambda: seg.postings_df(terms=["alpha"]),
+        seg.doclen_df,
+        seg.as_inverted_index,
+    ):
+        with pytest.raises(RuntimeError, match="stale"):
+            view()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_relview_decoders_are_arrow_maps(spark, docs, tmp_path):
+    d = str(tmp_path / "idx")
+    build_segments(spark, docs, d, n_shards=2, n_groups=1)
+    delete_docs(spark, d, [3])
+    seg = load_index(spark, d)
+    for df in (seg.postings_df(), seg.doclen_df(), seg._tombstone_docs_df()):
+        plan = _plan(df)
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan, plan
+
+
+def _cols(df) -> list:
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+
+def test_relview_empty_inputs_keep_the_declared_schema(spark, docs, tmp_path):
+    postings_cols = [("term", "string"), ("doc_id", "bigint"), ("tf", "bigint")]
+    doclen_cols = [("doc_id", "bigint"), ("dl", "bigint")]
+    d = str(tmp_path / "idx")
+    build_segments(spark, docs, d, n_shards=2, n_groups=1)
+    seg = load_index(spark, d)
+    for out in (seg.postings_df(terms=[]), seg.postings_df(terms=["absent"])):
+        assert out.collect() == []
+        assert _cols(out) == postings_cols
+
+    delete_docs(spark, d, [1, 2, 3, 4])
+    idx = load_index(spark, d).as_inverted_index()
+    assert idx.postings.collect() == []
+    assert _cols(idx.postings) == postings_cols + [("dl", "bigint")]
+    assert idx.doclen.collect() == [] and _cols(idx.doclen) == doclen_cols
