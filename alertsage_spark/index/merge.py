@@ -33,19 +33,23 @@ version. Plain append + merge assumes appends carry new doc_ids or
 identical bytes — the invariant build_segments' fidelity gate enforces
 upstream.
 
-Global stats are RECOMPUTED from the merged segments (salted termstats
-+ doclen re-aggregation), never copied from the source index: the
+Global stats are RECOMPUTED from the merged segments by the build's
+finalizer (segments._finalize_stats: salted termstats, doclen totals
+observed in the same job), never copied from the source index: the
 source's df/cf/n_docs/avgdl double-count re-ingested docs.
+
+Commit: the whole output (merged group, config, termstats, stats.json,
+manifest, stream sidecar) is built in a staging sibling of out_dir and
+renamed into place (segments._rename_into_place). A crash leaves
+out_dir as it was; a reused out_dir keeps nothing of its old index.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import decode_posting_list
 from alertsage_spark.index.segments import (
@@ -54,11 +58,15 @@ from alertsage_spark.index.segments import (
     IndexPaths,
     SegmentIndex,
     _encode_shard,
+    _finalize_stats,
+    _one_shard_per_task,
+    _rename_into_place,
     _shard_key,
+    _staged_sibling,
+    _write_json,
     decode_doclen_row,
     load_index,
     persist_stream_batch_ids,
-    salted_termstats_from_segments,
     stream_committed_batch_ids,
 )
 
@@ -134,69 +142,35 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
     """Compact all groups of ``index_dir`` into one merged segment set at
     ``out_dir``; termstats and stats.json are RECOMPUTED from the merged
     rows (re-ingested docs counted once). The manifest (build lineage)
-    carries over."""
+    carries over. The output is staged beside ``out_dir`` and renamed
+    into place, replacing whatever ``out_dir`` held."""
     idx = load_index(spark, index_dir)
     src = IndexPaths(index_dir)
-    n_shards = int(idx.stats.get("n_shards", 0)) or None
-    paths = IndexPaths(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    # one shard per reduce task, same conf dance as the build (AQE's
-    # coalescer would otherwise pack shards into uneven fat tasks)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    if n_shards:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_shards))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        merged = idx.segments.groupBy("shard_id").applyInArrow(
-            _merge_shard, schema=SEGMENT_SCHEMA
-        )
-        merged.sortWithinPartitions("term").write.mode("overwrite").parquet(
-            paths.group_dir(0)
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
-        )
-
-    segs = spark.read.option(
-        "basePath", os.path.join(paths.root, "segments")
-    ).parquet(*paths.group_dirs())
-    salted_termstats_from_segments(segs).write.mode("overwrite").parquet(
-        paths.termstats
-    )
-    dl_row = segs.filter(F.col("term").isNull()).agg(
-        F.sum("df_local").alias("n"), F.sum("cf_local").alias("s")
-    ).collect()[0]
-    n = int(dl_row["n"] or 0)
-    stats = dict(idx.stats)
-    stats.update(
-        {
-            "n_docs": n,
-            "sum_dl": int(dl_row["s"] or 0),
-            "avgdl": (int(dl_row["s"] or 0) / n) if n else 0.0,
-            "n_groups": 1,
-        }
-    )
-    with open(paths.stats_json, "w") as f:
-        json.dump(stats, f)
     config = {
-        "n_shards": stats.get("n_shards"),
+        "n_shards": int(idx.stats["n_shards"]),
         "n_groups": 1,
-        "mode": stats.get("mode", "text"),
+        "mode": idx.stats.get("mode", "text"),
     }
-    with open(paths.config_json, "w") as f:
-        json.dump(config, f)
-    if os.path.exists(src.manifest):
-        spark.read.parquet(src.manifest).write.mode("overwrite").parquet(paths.manifest)
-    # Carry streaming exactly-once lineage: the merged group has no
-    # per-group batch markers, so the union of the source's markers and
-    # sidecar moves into the destination sidecar — a micro-batch
-    # re-delivered after a stop -> compact -> restart window is still
-    # recognized as committed and skipped (streaming/ingest.py).
-    persist_stream_batch_ids(out_dir, stream_committed_batch_ids(index_dir))
+    with _staged_sibling(out_dir) as stage:
+        paths = IndexPaths(stage)
+        with _one_shard_per_task(spark, config["n_shards"]):
+            merged = idx.segments.groupBy("shard_id").applyInArrow(
+                _merge_shard, schema=SEGMENT_SCHEMA
+            )
+            merged.sortWithinPartitions("term").write.mode("overwrite").parquet(
+                paths.group_dir(0)
+            )
+        _write_json(paths.config_json, config)
+        _finalize_stats(spark, paths, config)
+        if os.path.exists(src.manifest):
+            spark.read.parquet(src.manifest).write.parquet(paths.manifest)
+        # Carry streaming exactly-once lineage: the merged group has no
+        # per-group batch markers, so the union of the source's markers
+        # and sidecar moves into the destination sidecar — a micro-batch
+        # re-delivered after a stop -> compact -> restart window is
+        # still recognized as committed and skipped (streaming/ingest.py).
+        persist_stream_batch_ids(stage, stream_committed_batch_ids(index_dir))
+        _rename_into_place(stage, out_dir)
     return load_index(spark, out_dir)
 
 
@@ -211,9 +185,6 @@ def maybe_compact(
     reference generator's chunk-compaction checkpoint
     (/root/reference/generator/generate_cyber_incidents.py:2779-3047).
     Returns the merged SegmentIndex, or None when below the threshold."""
-    import glob
-
-    n = len(glob.glob(os.path.join(index_dir, "segments", "group=*")))
-    if n < max_groups:
+    if len(IndexPaths(index_dir).group_dirs()) < max_groups:
         return None
     return merge_segments(spark, index_dir, out_dir)

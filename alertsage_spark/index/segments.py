@@ -36,18 +36,29 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
     half-written uncommitted group directory is overwritten
     idempotently, so the final index is byte-identical to an
     uninterrupted build (asserted in tests/test_segments.py).
+  * **one LSM commit path**: every later group (delete_docs,
+    append_group, streaming ingest) lands through _land_group's
+    staging dir + rename; every termstats/stats.json comes from
+    _finalize_stats (build, refresh_stats, merge_segments); every JSON
+    file is written by _write_json (temp + rename); a whole new index
+    (a merge's output, a stream's first batch) is built in a
+    _staged_sibling and committed by _rename_into_place.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import (
@@ -96,6 +107,16 @@ STREAM_MARKER = "_stream_batch.json"
 STREAM_SIDECAR = "_stream_batches.json"
 
 
+def _write_json(path: str, obj) -> None:
+    """The index's one JSON writer (stats.json, build_config.json, the
+    stream sidecar and batch markers): a temp file renamed over
+    ``path``, so a reader never sees a half-written file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def stream_committed_batch_ids(index_dir: str) -> set[int]:
     """Micro-batch ids durably ingested: per-group markers UNION the
     root sidecar (batches whose groups were compacted away)."""
@@ -104,10 +125,8 @@ def stream_committed_batch_ids(index_dir: str) -> set[int]:
     out: set[int] = set()
     side = os.path.join(index_dir, STREAM_SIDECAR)
     try:
-        # open-or-miss, not exists-then-open: persist_stream_batch_ids
-        # may legitimately REMOVE the sidecar concurrently (empty-set
-        # write during a merge into this dir) — a TOCTOU exists() check
-        # would crash the reader in that window
+        # open-or-miss, not exists-then-open: a merge into this dir
+        # replaces the whole directory, sidecar included, concurrently
         with open(side) as f:
             out.update(int(b) for b in json.load(f)["batch_ids"])
     except FileNotFoundError:
@@ -119,22 +138,15 @@ def stream_committed_batch_ids(index_dir: str) -> set[int]:
 
 
 def persist_stream_batch_ids(index_dir: str, ids: set[int]) -> None:
-    """Atomically (temp+rename, same filesystem) write the root sidecar.
-    An EMPTY id set removes any pre-existing sidecar: merge destinations
-    are rewritten with overwrite semantics, so a stale sidecar from a
-    previous index at the same path must not survive and falsely claim
-    stream batches as committed (that would silently DROP re-used batch
-    ids on a later streaming sink — the inverse of the double-count bug
-    the sidecar prevents)."""
-    side = os.path.join(index_dir, STREAM_SIDECAR)
-    if not ids:
-        if os.path.exists(side):
-            os.remove(side)
-        return
-    tmp = side + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_ids": sorted(int(b) for b in ids)}, f)
-    os.replace(tmp, side)
+    """Write the root sidecar (nothing for an empty id set). Its one
+    caller is merge_segments, whose destination is a fresh staging dir,
+    so no sidecar of a previous index at out_dir can survive and falsely
+    claim stream batches as committed."""
+    if ids:
+        _write_json(
+            os.path.join(index_dir, STREAM_SIDECAR),
+            {"batch_ids": sorted(int(b) for b in ids)},
+        )
 
 MANIFEST_SCHEMA = (
     "build_id string, group_id int, n_shards int, n_groups int, "
@@ -209,6 +221,71 @@ class IndexPaths:
         return os.path.join(self.root, "manifest")
 
 
+def _land_group(paths: IndexPaths, fill) -> int:
+    """The LSM commit of one new segment group; delete_docs, append_group
+    and streaming ingest land groups only through here. ``fill(dir)``
+    writes the group into a '_'-prefixed staging dir under segments/
+    named for g, the next free group id; its rename to ``group={g}`` is
+    the commit point. Readers list group=* dirs and parquet discovery
+    skips '_' names, so a crash before the rename leaves the committed
+    groups and every serving snapshot unchanged; the retry clears the
+    leftover. Returns g."""
+    g = 1 + max((int(p.rsplit("=", 1)[1]) for p in paths.group_dirs()), default=-1)
+    stage = os.path.join(paths.root, "segments", f"_staging_group_{g}")
+    shutil.rmtree(stage, ignore_errors=True)
+    fill(stage)
+    os.rename(stage, paths.group_dir(g))
+    return g
+
+
+@contextmanager
+def _staged_sibling(final: str):
+    """A fresh '_'-prefixed sibling dir of ``final`` (same filesystem, so
+    renaming it into place is atomic), removed on exit unless
+    _rename_into_place moved it."""
+    parent = os.path.dirname(os.path.abspath(final.rstrip("/")))
+    os.makedirs(parent, exist_ok=True)
+    stage = tempfile.mkdtemp(prefix="_staging_", dir=parent)
+    try:
+        yield stage
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _rename_into_place(stage: str, final: str) -> None:
+    """Commit a whole staged index (a merge's output, a stream's first
+    batch) at ``final``. Whatever ``final`` held moves aside first and is
+    removed after the rename, so no file of a previous index survives."""
+    final = os.path.abspath(final.rstrip("/"))
+    old = stage + ".old"
+    if os.path.exists(final):
+        os.rename(final, old)
+    os.rename(stage, final)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+@contextmanager
+def _one_shard_per_task(spark: SparkSession, n_shards: int):
+    """One shard per reduce task inside the block (the build's and the
+    merge's shard stage): AQE's coalescer otherwise packs the shards into
+    ~#cores UNEVEN tasks and the stage runs as long as its fattest task
+    (measured 1.8x the average — the single biggest scaling loss in the
+    build). n_shards equal single-shard tasks wave-schedule evenly at any
+    core count. The session's conf is restored on exit."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(n_shards),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> DataFrame:
     """Global term -> (df, cf) from the per-shard segment rows, via the
     EXPLICIT two-stage salted aggregation on term (north rule §4.2-3):
@@ -228,6 +305,54 @@ def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> Dat
         .groupBy("term")
         .agg(F.sum("df_p").alias("df"), F.sum("cf_p").alias("cf"))
     )
+
+
+def _finalize_stats(
+    spark: SparkSession,
+    paths: IndexPaths,
+    config: dict,
+    expect_n_docs: int | None = None,
+) -> dict:
+    """The one stats commit: termstats and stats.json recomputed from
+    the committed groups (build_segments' finalize, refresh_stats,
+    merge_segments). n_docs/sum_dl are the doclen-row totals, observed
+    in the termstats write job rather than in a second pass over the
+    segments; tombstoned docs still count until merge_segments drops
+    them (the LSM staleness contract). ``config`` (n_shards, n_groups,
+    mode) completes stats.json. ``expect_n_docs``, the build's manifest
+    total, is checked before stats.json is written."""
+    segs = spark.read.option(
+        "basePath", os.path.join(paths.root, "segments")
+    ).parquet(*paths.group_dirs())
+    doclen = F.col("term").isNull()
+    totals = [
+        F.sum(F.when(doclen, F.col("df_local"))).alias("n"),
+        F.sum(F.when(doclen, F.col("cf_local"))).alias("s"),
+    ]
+    obs = Observation("finalize_doclen")
+    salted_termstats_from_segments(segs.observe(obs, *totals)).write.mode(
+        "overwrite"
+    ).parquet(paths.termstats)
+    # AQE replaces an aggregation whose input turned out empty by an
+    # empty relation, dropping the CollectMetrics below it: the
+    # observation then never reports and get() fails on its empty row.
+    # Only an index without term rows (empty corpus, all-deleted merge)
+    # lands here, and its doclen totals are read back.
+    if obs._jo.getRow().size():
+        dl = obs.get
+    else:
+        dl = segs.agg(*totals).collect()[0]
+    n, sum_dl = int(dl["n"] or 0), int(dl["s"] or 0)
+    if expect_n_docs is not None:
+        assert expect_n_docs == n, "manifest/segment doc-count mismatch"
+    stats = {
+        "n_docs": n,
+        "sum_dl": sum_dl,  # exact int so incremental refresh stays exact
+        "avgdl": (sum_dl / n) if n else 0.0,
+        **config,
+    }
+    _write_json(paths.stats_json, stats)
+    return stats
 
 
 def _doclen_row(shard_id: int, doc_ids: np.ndarray, dls: np.ndarray, term=None):
@@ -468,9 +593,8 @@ def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _group_metric_exprs():
-    """Aggregates for one group's manifest row — shared by the
-    read-back path and the during-write Observation path so the two can
-    never drift."""
+    """Aggregates for one group's manifest row, observed during the
+    group's write job (build_segments)."""
     return [
         F.count(F.when(F.col("term").isNotNull(), 1)).alias("n_terms"),
         F.sum(F.when(F.col("term").isNotNull(), F.col("n_postings"))).alias("n_postings"),
@@ -489,19 +613,13 @@ def _commit_group(
     n_groups: int,
     wall_ms: float,
     metrics: list,
-    observed: dict | None = None,
+    m: dict,
 ) -> None:
     """Append the manifest row (lineage + build metrics). The manifest
-    append IS the commit point. ``observed``: metric dict captured by a
-    DataFrame Observation DURING the write job (build_segments passes
-    it) — the default read-back aggregation re-reads the whole group's
-    parquet, a full extra pass per group (r6, guide §1.4: measure in
-    the job you already run)."""
-    if observed is not None:
-        m = observed
-    else:
-        written = spark.read.parquet(paths.group_dir(g))
-        m = written.agg(*_group_metric_exprs()).collect()[0]
+    append IS the commit point. ``m``: the _group_metric_exprs captured
+    by a DataFrame Observation DURING the write job — a read-back would
+    re-read the whole group's parquet, a full extra pass per group (r6,
+    guide §1.4: measure in the job you already run)."""
     n_docs_g = int(m["n_docs"] or 0)
     row = {
         "build_id": build_id,
@@ -606,8 +724,7 @@ def build_segments(
         if prev != config:
             raise ValueError("resume with different build config; wipe index_dir first")
     else:
-        with open(paths.config_json, "w") as f:
-            json.dump(config, f)
+        _write_json(paths.config_json, config)
 
     done = committed_groups(spark, paths) if resume else set()
     sharded = docs.select(
@@ -617,16 +734,7 @@ def build_segments(
     )
     metrics = []
     n_committed = 0
-    # one shard per reduce task: AQE's coalescer otherwise packs the 64
-    # shards into ~#cores UNEVEN tasks and the stage runs as long as its
-    # fattest task (measured 1.8x the average — the single biggest scaling
-    # loss in the build). 64 equal single-shard tasks wave-schedule evenly
-    # at any core count.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_shards))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    with _one_shard_per_task(spark, n_shards):
         for g in range(n_groups):
             if g in done:
                 continue
@@ -637,8 +745,6 @@ def build_segments(
             )
             # manifest metrics ride the write job itself (Observation):
             # the former post-commit read-back re-read the whole group
-            from pyspark.sql import Observation
-
             obs = Observation(f"commit_group_{g}")
             seg = seg.observe(obs, *_group_metric_exprs())
             # applyInArrow output is already hash-partitioned by shard_id;
@@ -650,54 +756,23 @@ def build_segments(
             wall_ms = (time.monotonic() - t0) * 1000.0
             _commit_group(
                 spark, paths, g, build_id, n_shards, n_groups, wall_ms, metrics,
-                observed=obs.get,
+                obs.get,
             )
             n_committed += 1
             if fail_after_group is not None and n_committed >= fail_after_group:
                 raise RuntimeError(f"injected failure after group {g}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
 
     # finalize: global stats + termstats from the committed segments
     # (idempotent overwrite; re-runs after a crash before finalize)
     all_done = done | {m["group_id"] for m in metrics}
     stats: dict = {}
     if len(all_done) >= n_groups:
-        from pyspark.sql import Observation
-
-        segs = spark.read.option(
-            "basePath", os.path.join(paths.root, "segments")
-        ).parquet(*paths.group_dirs())
-        # doclen-row totals ride the termstats write job (Observation on
-        # the pre-filter scan) instead of a second pass over the segments
-        dlobs = Observation("finalize_doclen")
-        segs_o = segs.observe(
-            dlobs,
-            F.sum(F.when(F.col("term").isNull(), F.col("df_local"))).alias("n"),
-            F.sum(F.when(F.col("term").isNull(), F.col("cf_local"))).alias("s"),
-        )
-        salted_termstats_from_segments(segs_o).write.mode("overwrite").parquet(
-            paths.termstats
-        )
         man = spark.read.parquet(paths.manifest).agg(
             F.sum("n_docs").alias("n"),
         ).collect()[0]
-        dl_row = dlobs.get
-        n = int(dl_row["n"] or 0)
-        stats = {
-            "n_docs": n,
-            "sum_dl": int(dl_row["s"] or 0),
-            "avgdl": (int(dl_row["s"] or 0) / n) if n else 0.0,
-            "n_shards": n_shards,
-            "n_groups": n_groups,
-            "mode": mode,
-        }
-        assert int(man["n"] or 0) == n, "manifest/segment doc-count mismatch"
-        tmp = paths.stats_json + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(stats, f)
-        os.replace(tmp, paths.stats_json)
+        stats = _finalize_stats(
+            spark, paths, config, expect_n_docs=int(man["n"] or 0)
+        )
     return {"stats": stats, "metrics": metrics}
 
 
@@ -710,30 +785,12 @@ def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
     paths = IndexPaths(index_dir)
     with open(paths.config_json) as f:
         cfg = json.load(f)
-    segs = spark.read.option(
-        "basePath", os.path.join(paths.root, "segments")
-    ).parquet(*paths.group_dirs())
-    salted_termstats_from_segments(segs).write.mode("overwrite").parquet(
-        paths.termstats
-    )
-    dl_row = segs.filter(F.col("term").isNull()).agg(
-        F.sum("df_local").alias("n"), F.sum("cf_local").alias("s")
-    ).collect()[0]
-    n = int(dl_row["n"] or 0)
-    sum_dl = int(dl_row["s"] or 0)
-    stats = {
-        "n_docs": n,
-        "sum_dl": sum_dl,  # exact int so incremental refresh stays exact
-        "avgdl": (sum_dl / n) if n else 0.0,
+    config = {
         "n_shards": int(cfg["n_shards"]),
         "n_groups": len(paths.group_dirs()),
         "mode": cfg.get("mode", "text"),
     }
-    tmp = paths.stats_json + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, paths.stats_json)
-    return stats
+    return _finalize_stats(spark, paths, config)
 
 
 def refresh_stats_incremental(
@@ -765,17 +822,17 @@ def refresh_stats_incremental(
     # crash between the renames is recovered by refresh_stats (full)
     new_dir = paths.termstats + ".new"
     bak_dir = paths.termstats + ".bak"
-    import shutil as _shutil
-
     for d in (new_dir, bak_dir):
         if os.path.exists(d):
-            _shutil.rmtree(d)
+            shutil.rmtree(d)
     merged_ts.write.parquet(new_dir)
     os.rename(paths.termstats, bak_dir)
     os.rename(new_dir, paths.termstats)
-    _shutil.rmtree(bak_dir)
+    shutil.rmtree(bak_dir)
     n = int(old["n_docs"]) + int(batch["n_docs"])
-    sum_dl = int(old["sum_dl"]) + int(batch.get("sum_dl", round(batch["avgdl"] * batch["n_docs"])))
+    # the batch index was built by build_segments in the same ingest
+    # call, so it always records sum_dl
+    sum_dl = int(old["sum_dl"]) + int(batch["sum_dl"])
     stats = dict(old)
     stats.update(
         {
@@ -785,10 +842,7 @@ def refresh_stats_incremental(
             "n_groups": len(paths.group_dirs()),
         }
     )
-    tmp = paths.stats_json + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, paths.stats_json)
+    _write_json(paths.stats_json, stats)
     return stats
 
 
@@ -800,13 +854,11 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     iterable of ids. Ids are routed to their shard with the build's
     shard_col rule and encoded per shard exactly like a doclen row
     (sorted delta+varbyte ids, zero lengths), so every decoder already
-    understands the row. The group lands via the same staging+rename
-    append_group uses (crash-safe); returns the new group id, or -1 for
+    understands the row. The group lands through _land_group
+    (crash-safe); returns the new group id, or -1 for
     an empty ``doc_ids`` (no-op: no group is committed, serving
     snapshots stay valid). Scales: one narrow shuffle on shard_id, one
     tombstone row per touched shard, no driver-side id list."""
-    import glob as _glob
-
     paths = IndexPaths(index_dir)
     with open(paths.config_json) as f:
         cfg = json.load(f)
@@ -833,13 +885,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         .groupBy("shard_id")
         .applyInArrow(tomb_row, schema=SEGMENT_SCHEMA)
     )
-    existing = _glob.glob(os.path.join(paths.root, "segments", "group=*"))
-    g = 1 + max((int(p.rsplit("=", 1)[1]) for p in existing), default=-1)
-    final = paths.group_dir(g)
-    tmp = os.path.join(os.path.dirname(final), f"_staging_group_{g}")
-    tomb.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, final)
-    return g
+    return _land_group(paths, lambda d: tomb.write.mode("overwrite").parquet(d))
 
 
 def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
@@ -848,11 +894,10 @@ def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
     first: a group built with a different n_shards or tokenizer mode has
     a different doc->shard layout and would silently produce wrong doc
     lengths / non-deduplicable re-ingests (ADVICE r01). Copies every
-    source group under the next free group ids and returns how many
-    groups were appended. Caller re-finalizes stats (or runs
-    merge_segments, which recomputes them)."""
-    import shutil
-
+    source group under the next free group id (each lands through
+    _land_group, crash-safe) and returns how many groups were appended.
+    Caller re-finalizes stats (refresh_stats, or merge_segments, which
+    recomputes them)."""
     dst, src = IndexPaths(dst_dir), IndexPaths(src_dir)
     with open(dst.config_json) as f:
         dcfg = json.load(f)
@@ -865,26 +910,10 @@ def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
                 f"{dcfg.get(k)!r} != {scfg.get(k)!r}); groups from a "
                 "different doc->shard layout cannot be appended"
             )
-    import glob as _glob
-
-    existing = _glob.glob(os.path.join(dst.root, "segments", "group=*"))
-    next_g = 1 + max(
-        (int(p.rsplit("=", 1)[1]) for p in existing), default=-1
-    )
-    n = 0
-    for p in sorted(_glob.glob(os.path.join(src.root, "segments", "group=*"))):
-        final = dst.group_dir(next_g + n)
-        # crash-safe: copy into a staging dir the segment glob can't see
-        # (underscore prefix — also skipped by parquet partition
-        # discovery), then atomically rename into place; a crash mid-copy
-        # leaves only the invisible staging dir behind
-        tmp = os.path.join(os.path.dirname(final), f"_staging_group_{next_g + n}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        shutil.copytree(p, tmp)
-        os.rename(tmp, final)
-        n += 1
-    return n
+    groups = src.group_dirs()
+    for p in groups:
+        _land_group(dst, partial(shutil.copytree, p))
+    return len(groups)
 
 
 @dataclass
@@ -904,11 +933,7 @@ class SegmentIndex:
     tomb_rows_cache: list | None = None  # tombstone rows, collected once
 
     def _group_dirs(self) -> tuple:
-        import glob as _glob
-
-        return tuple(
-            sorted(_glob.glob(os.path.join(self.paths.root, "segments", "group=*")))
-        )
+        return tuple(self.paths.group_dirs())
 
     def assert_serving_fresh(self) -> None:
         """The segments DataFrame pins the concrete group-dir list at

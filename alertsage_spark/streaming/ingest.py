@@ -7,9 +7,12 @@ Shape:
 
     readStream(docs) -> writeStream.foreachBatch(ingest_batch)
 
-Each micro-batch builds its own segment group in a staging directory
-and renames it into ``segments/`` (the same crash-safe commit as
-append_group), then refreshes global stats. EXACTLY-ONCE per batch:
+Each micro-batch builds its own one-group index in a staging sibling of
+the index dir. The first batch renames that whole index into place
+(segments._rename_into_place, merge's commit); later batches land its
+group through segments._land_group, the one group commit that
+delete_docs and append_group use too, then merge global stats
+incrementally. EXACTLY-ONCE per batch:
 Structured Streaming re-delivers a batch after a crash between the
 sink's side effect and the checkpoint commit, so every group directory
 carries a ``_stream_batch.json`` marker with its batch id — a
@@ -38,7 +41,6 @@ import glob as _glob
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,6 +49,10 @@ from alertsage_spark.index.segments import (
 )
 from alertsage_spark.index.segments import (
     IndexPaths,
+    _land_group,
+    _rename_into_place,
+    _staged_sibling,
+    _write_json,
     build_segments,
     refresh_stats,
     refresh_stats_incremental,
@@ -134,13 +140,9 @@ def ingest_batch(
                 "stream_ingest config mismatch with existing index: "
                 f"{cfg} vs n_shards={n_shards} mode={mode}"
             )
-    # stage on the SAME filesystem as index_dir: shutil.move is then an
-    # atomic rename, never a crashable cross-device copy (the adopt
-    # path's commit point); '_' prefix keeps it invisible to parquet
-    parent = os.path.dirname(os.path.abspath(index_dir.rstrip("/")))
-    os.makedirs(parent, exist_ok=True)
-    stage_root = tempfile.mkdtemp(prefix="_stream_ingest_", dir=parent)
-    try:
+    # staged on the SAME filesystem as index_dir, so both commits below
+    # are atomic renames, never a crashable cross-device copy
+    with _staged_sibling(index_dir) as stage_root:
         build_segments(
             spark,
             batch_df,
@@ -152,42 +154,26 @@ def ingest_batch(
             build_id=f"stream-batch-{batch_id}",
         )
         src_group = IndexPaths(stage_root).group_dir(0)
-        with open(os.path.join(src_group, _MARKER), "w") as f:
-            json.dump({"batch_id": int(batch_id)}, f)
+        _write_json(os.path.join(src_group, _MARKER), {"batch_id": int(batch_id)})
         if not os.path.exists(paths.config_json):
             # first batch: adopt the staging index wholesale (config,
             # manifest, termstats, stats all already consistent — stamp
-            # the group's stats as done up front)
+            # the group's stats as done up front); the entry guard
+            # proved any existing index_dir empty
             with open(os.path.join(src_group, _STATS_OK), "w") as f:
                 f.write("{}")
-            if os.path.isdir(index_dir):
-                # shutil.move into an EXISTING dir would nest the
-                # staging index inside it; the entry guard proved the
-                # dir empty, so drop it and rename into place
-                os.rmdir(index_dir)
-            shutil.move(stage_root, index_dir)
-            stage_root = None
+            _rename_into_place(stage_root, index_dir)
             return True
-        existing = _glob.glob(os.path.join(index_dir, "segments", "group=*"))
-        g = 1 + max((int(p.rsplit("=", 1)[1]) for p in existing), default=-1)
-        final = paths.group_dir(g)
-        tmp = os.path.join(os.path.dirname(final), f"_staging_group_{g}")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        shutil.move(src_group, tmp)
-        os.rename(tmp, final)  # <- commit point
+        g = _land_group(paths, lambda d: shutil.move(src_group, d))
         # O(vocab + batch) incremental stats merge — identical result to
         # the full recompute (exact integer sums), without the
         # O(total corpus) rescan that would invert the LSM cost model.
         # The _STATS_OK stamp lands only after it completes; a crash in
         # between is repaired on re-delivery (_repair_stats_if_needed).
         refresh_stats_incremental(spark, index_dir, stage_root)
-        with open(os.path.join(final, _STATS_OK), "w") as f:
+        with open(os.path.join(paths.group_dir(g), _STATS_OK), "w") as f:
             f.write("{}")
         return True
-    finally:
-        if stage_root is not None:
-            shutil.rmtree(stage_root, ignore_errors=True)
 
 
 def stream_ingest(

@@ -8,7 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.merge import maybe_compact
-from alertsage_spark.index.segments import append_group, build_segments, load_index
+from alertsage_spark.index.segments import (
+    append_group,
+    build_segments,
+    load_index,
+    refresh_stats,
+)
 from alertsage_spark.query.oracle import BM25Oracle
 from alertsage_spark.query.wand import wand_topk
 from alertsage_spark.synth import zipf_corpus
@@ -52,25 +57,7 @@ def test_full_lifecycle_crash_resume_append_compact(spark, tmp_path):
     build_segments(spark, corpus_b, b_dir, n_shards=8, n_groups=1, build_id="B")
     assert append_group(spark, d, b_dir) == 1
     # refresh stats over all groups (the documented post-append step)
-    import json
-    import os
-
-    from alertsage_spark.index.segments import (
-        IndexPaths,
-        salted_termstats_from_segments,
-    )
-
-    paths = IndexPaths(d)
-    segs = spark.read.option("basePath", os.path.join(d, "segments")).parquet(
-        os.path.join(d, "segments", "group=*")
-    )
-    salted_termstats_from_segments(segs).write.mode("overwrite").parquet(paths.termstats)
-    dl = segs.filter(F.col("term").isNull()).agg(
-        F.sum("df_local").alias("n"), F.sum("cf_local").alias("s")
-    ).collect()[0]
-    stats = json.load(open(paths.stats_json))
-    stats.update(n_docs=int(dl["n"]), avgdl=int(dl["s"]) / int(dl["n"]))
-    json.dump(stats, open(paths.stats_json, "w"))
+    refresh_stats(spark, d)
 
     union = corpus_a.unionByName(corpus_b)
     check(load_index(spark, d), union, "post-append")

@@ -51,24 +51,13 @@ def test_incremental_append_then_merge(spark, code_docs, tmp_path):
     groups for the other half (disjoint docs), merge, re-finalize stats —
     queries over the merged index are rank-identical to an oracle over
     the UNION corpus."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from alertsage_spark.index.segments import (
-        IndexPaths,
-        salted_termstats_from_segments,
-    )
+    from alertsage_spark.index.segments import refresh_stats
 
     half_a = code_docs.filter(F.col("doc_id") % 2 == 0)
     half_b = code_docs.filter(F.col("doc_id") % 2 == 1)
     d = tmp_path / "incr"
     build_segments(spark, half_a, str(d), n_shards=4, n_groups=1, build_id="A")
     # second ingest: same layout, committed as a second segment group
-    paths = IndexPaths(str(d))
-    import os
-    import shutil
-
     b_dir = tmp_path / "b"
     build_segments(spark, half_b, str(b_dir), n_shards=4, n_groups=1, build_id="B")
     from alertsage_spark.index.segments import append_group
@@ -76,17 +65,7 @@ def test_incremental_append_then_merge(spark, code_docs, tmp_path):
     # merged compaction + recomputed global stats/termstats
     merged_dir = tmp_path / "merged"
     # refresh stats/termstats over both groups before merge
-    segs = spark.read.option("basePath", os.path.join(str(d), "segments")).parquet(
-        os.path.join(str(d), "segments", "group=*")
-    )
-    salted_termstats_from_segments(segs).write.mode("overwrite").parquet(paths.termstats)
-    dl = segs.filter(F.col("term").isNull()).agg(
-        F.sum("df_local").alias("n"), F.sum("cf_local").alias("s")
-    ).collect()[0]
-    stats = json.load(open(paths.stats_json))
-    stats["n_docs"] = int(dl["n"])
-    stats["avgdl"] = int(dl["s"]) / int(dl["n"])
-    json.dump(stats, open(paths.stats_json, "w"))
+    refresh_stats(spark, str(d))
 
     oracle = BM25Oracle([(r["doc_id"], r["text"]) for r in code_docs.collect()])
     queries = [("Q1", "spark postingList"), ("Q2", "read_buffer segmentMerge")]
@@ -267,3 +246,22 @@ def test_merge_equals_fresh_build_of_survivors(spark, tmp_path, mode):
     fresh_stats = load_index(spark, fresh).stats
     assert merged.stats["n_docs"] == fresh_stats["n_docs"] == len(ids) - len(victims)
     assert merged.stats["sum_dl"] == fresh_stats["sum_dl"]
+
+
+def test_merge_into_reused_dir_replaces_old_index(spark, tmp_path):
+    """A merge into an out_dir that held another index keeps none of it:
+    not its groups, not its docs in stats.json, not its terms."""
+    import os
+
+    dst, src = str(tmp_path / "dst"), str(tmp_path / "src")
+    schema = "doc_id long, text string"
+    old = spark.createDataFrame([(i, f"old doc alpha {i}") for i in range(30)], schema)
+    new = spark.createDataFrame([(100 + i, f"new doc beta {i}") for i in range(5)], schema)
+    build_segments(spark, old, dst, n_shards=4, n_groups=3)
+    build_segments(spark, new, src, n_shards=4, n_groups=1)
+    merged = merge_segments(spark, src, dst)
+    assert sorted(os.listdir(os.path.join(dst, "segments"))) == ["group=0"]
+    assert merged.stats["n_docs"] == 5
+    assert merged.stats["n_groups"] == 1
+    assert wand_topk(spark, merged, [("q", "alpha")], k=10).count() == 0
+    assert wand_topk(spark, merged, [("q", "beta")], k=10).count() == 5

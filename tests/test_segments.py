@@ -139,6 +139,20 @@ def test_manifest_metrics(spark, docs, tmp_path):
     assert sum(r["n_docs"] for r in rows) == docs.count()
 
 
+def test_empty_corpus_builds_an_empty_index(spark, tmp_path):
+    """No docs: the build commits, stats say zero docs, and the index
+    loads and answers with no rows."""
+    from alertsage_spark.query.wand import wand_topk
+
+    d = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    out = build_segments(spark, empty, d, n_shards=2, n_groups=2)
+    assert out["stats"]["n_docs"] == 0
+    idx = load_index(spark, d)
+    assert idx.stats["n_docs"] == 0
+    assert wand_topk(spark, idx, [("q", "alpha beta")], k=5).count() == 0
+
+
 def test_suggest_n_shards_sizing_rule():
     from alertsage_spark.index.segments import suggest_n_shards
 
