@@ -46,11 +46,9 @@ from collections import deque
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from alertsage_spark.index.compress import B, K1  # noqa: F401 (re-exported)
 from alertsage_spark.session import persist_bounded
 from alertsage_spark.tokenizer import tokenize_col
-
-K1 = 1.2
-B = 0.75
 
 # bounded registries for the per-build postings materializations (see
 # persist_bounded: repeated builds in one process release old storage)

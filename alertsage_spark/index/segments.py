@@ -592,6 +592,16 @@ def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
     return docs, dls
 
 
+def merged_doclen(rows) -> tuple[np.ndarray, np.ndarray]:
+    """One shard's doclen rows (one per committed group; an un-compacted
+    index has several) -> (doc_ids, dls) sorted by doc_id."""
+    parts = [decode_doclen_row(r) for r in rows]
+    docs = np.concatenate([p[0] for p in parts])
+    dls = np.concatenate([p[1] for p in parts])
+    order = np.argsort(docs, kind="stable")
+    return docs[order], dls[order]
+
+
 def _group_metric_exprs():
     """Aggregates for one group's manifest row, observed during the
     group's write job (build_segments)."""
@@ -916,6 +926,11 @@ def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
     return len(groups)
 
 
+# serving-mode ceiling on the term->df table prepare_for_queries
+# collects to the driver (~30 B/term)
+COLLECT_TERMSTATS_MAX = 2_000_000
+
+
 @dataclass
 class SegmentIndex:
     segments: DataFrame  # term rows AND term=NULL doclen rows
@@ -959,13 +974,11 @@ class SegmentIndex:
         return self.segments.filter(F.col("term").isNull())
 
     def prepare_for_queries(
-        self,
-        collect_termstats_max: int = 2_000_000,
-        collect_doclen_max: int = 10_000_000,
+        self, collect_doclen_max: int = 10_000_000
     ) -> "SegmentIndex":
         """Serving-mode warm-up: pin the segment rows in executor memory
         and, when small enough to hold on the driver, collect
-        (a) the term->df table (<= collect_termstats_max terms,
+        (a) the term->df table (<= COLLECT_TERMSTATS_MAX terms,
         ~30 B/term) so per-query idf lookups stop costing a Spark job,
         and (b) the per-shard doc-length arrays (<= collect_doclen_max
         docs, 16 B/doc) which unlock the driver-local fast path for
@@ -987,22 +1000,16 @@ class SegmentIndex:
             self.assert_serving_fresh()
         self.term_rows_cache = {}
         self.segments.cache().count()
-        if self.termstats.count() <= collect_termstats_max:
+        if self.termstats.count() <= COLLECT_TERMSTATS_MAX:
             self.df_map = {
                 r["term"]: int(r["df"])
                 for r in self.termstats.select("term", "df").collect()
             }
         if int(self.stats.get("n_docs", 0)) <= collect_doclen_max:
-            parts: dict[int, list] = {}
+            by_shard: dict[int, list] = {}
             for r in self.doclen_rows.collect():
-                d, l = decode_doclen_row(r)
-                parts.setdefault(int(r["shard_id"]), []).append((d, l))
-            self.dl_map = {}
-            for sid, ps in parts.items():
-                d = np.concatenate([p[0] for p in ps])
-                l = np.concatenate([p[1] for p in ps])
-                order = np.argsort(d, kind="stable")
-                self.dl_map[sid] = (d[order], l[order])
+                by_shard.setdefault(int(r["shard_id"]), []).append(r)
+            self.dl_map = {sid: merged_doclen(rs) for sid, rs in by_shard.items()}
         return self
 
     def unpersist(self) -> None:

@@ -1,29 +1,35 @@
 """Top-k BM25 over compressed segments: block-max WAND + vectorized TAAT.
 
-Query plan (batch of queries, one Spark job):
+Two serving paths, one scoring loop:
 
-    segments.filter(term IN query_terms OR term IS NULL
-                    OR term = tombstone)
-                                             <- parquet pushdown: only
-                                                query-term rows + the
-                                                per-shard doclen and
-                                                tombstone rows
-      groupBy(shard_id) -> applyInArrow(scorer)
-                                             <- per-shard task: every
-                                                query scored against the
-                                                shard's local postings,
-                                                doc lengths decoded from
-                                                the shard's own doclen rows
-      -> driver merge of the per-shard top-k (round(score,6) desc,
-         doc_id asc) when n_shards * k * |Q| <= DRIVER_MERGE_MAX_ROWS;
-         above that budget a global window rank <= k runs instead
+  * distributed (one Spark job per query batch):
+
+        segments.filter(term IN query_terms OR term IS NULL
+                        OR term = tombstone)   <- parquet pushdown: only
+                                                  query-term rows + the
+                                                  per-shard doclen and
+                                                  tombstone rows
+          groupBy(shard_id) -> applyInArrow(scorer)
+
+  * driver fast path (serving mode, few matched postings): the matched
+    rows come from the driver's term-row LRU and the doc lengths from
+    the pre-collected ``dl_map``; no Spark job until the result.
+
+Both hand one shard's rows per term, doc lengths and tombstones to
+``_score_shard`` (every query of the batch against that shard), and
+both rank the per-shard top-k in ``_ranked_topk`` (round(score,6)
+desc, doc_id asc). The distributed path uses that driver merge when
+n_shards * k * |Q| <= DRIVER_MERGE_MAX_ROWS; above that budget a
+global window rank <= k runs instead.
 
 Document-sharding makes this embarrassingly parallel: no shuffle of
 postings at query time, and at most n_shards * k candidates per query
 leave the scorer tasks.
 
-Two scorers, both exact (rank-identical to the join+agg path and the
-Python oracle — property-tested):
+Two shard kernels, both exact (rank-identical to the join+agg path and
+the Python oracle — property-tested), sharing one core: the per-posting
+score (``_exact_scores``), the per-doc sum with the tombstone mask
+(``_sum_live``) and the final selection (``_select_topk``):
 
   * ``taat``: vectorized term-at-a-time — decode all matched postings,
     one np.add.at group-sum, exact top-k with rounded-tie margin. Zero
@@ -48,7 +54,7 @@ Python oracle — property-tested):
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -66,6 +72,7 @@ from alertsage_spark.index.segments import (
     TOMBSTONE_TERM,
     SegmentIndex,
     decode_doclen_row,
+    merged_doclen,
 )
 from alertsage_spark.tokenizer import code_query_terms, tokenize_py
 
@@ -115,6 +122,58 @@ def decode_term_row(row, cache: dict | None = None) -> tuple[np.ndarray, np.ndar
     if hit is None:
         hit = cache[id(row)] = decode_posting_list(row)
     return hit
+
+
+def _exact_scores(
+    idf: float,
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    dl_docs: np.ndarray,
+    dl_vals: np.ndarray,
+    avgdl: float,
+) -> np.ndarray:
+    """Exact BM25 of each posting (docs, tfs) of one term. The evaluation
+    order is fixed (not compress.bm25_norm's): rankings tie-break on
+    round(score, 6), so every path must produce bit-identical scores."""
+    dl_idx = np.searchsorted(dl_docs, docs)
+    _check_dl_coverage(dl_docs, dl_idx, docs)
+    tf = tfs.astype(np.float64)
+    dl = dl_vals[dl_idx].astype(np.float64)
+    return idf * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def _sum_live(
+    docs_parts: list[np.ndarray],
+    score_parts: list[np.ndarray],
+    deleted: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc score sums over posting slices (one part is already
+    doc-unique), tombstoned docs dropped."""
+    if len(docs_parts) == 1:
+        docs, sums = docs_parts[0], score_parts[0]
+    else:
+        docs, inv = np.unique(np.concatenate(docs_parts), return_inverse=True)
+        sums = np.zeros(len(docs))
+        np.add.at(sums, inv, np.concatenate(score_parts))
+    if deleted is not None and len(deleted):
+        keep = ~_in_sorted(docs, deleted)
+        docs, sums = docs[keep], sums[keep]
+    return docs, sums
+
+
+def _select_topk(
+    docs: np.ndarray, sums: np.ndarray, k: int
+) -> list[tuple[int, float]]:
+    """Exact top-k by (round(score, 6) desc, doc_id asc): keep every doc
+    within the rounding margin of the kth-largest exact score, so
+    rounded ties at the boundary break by doc_id."""
+    if len(docs) > k:
+        s_k = np.partition(sums, len(sums) - k)[len(sums) - k]
+        cand = np.flatnonzero(sums >= s_k - THETA_EPS)
+    else:
+        cand = np.arange(len(docs))
+    sel = cand[np.lexsort((docs[cand], -np.round(sums[cand], 6)))][:k]
+    return [(int(docs[i]), float(sums[i])) for i in sel]
 
 
 def wand_topk_shard(
@@ -217,31 +276,15 @@ def wand_topk_shard(
             e = int(np.searchsorted(d, hi, side="right"))
             if s == e:
                 continue
-            dd = d[s:e]
-            tt = tf[s:e].astype(np.float64)
-            dl_idx = np.searchsorted(dl_docs, dd)
-            _check_dl_coverage(dl_docs, dl_idx, dd)
-            dl = dl_vals[dl_idx].astype(np.float64)
-            sc = idfs[t] * (tt * (K1 + 1.0)) / (
-                tt + K1 * (1.0 - B + B * dl / avgdl)
+            docs_parts.append(d[s:e])
+            score_parts.append(
+                _exact_scores(idfs[t], d[s:e], tf[s:e], dl_docs, dl_vals, avgdl)
             )
-            docs_parts.append(dd)
-            score_parts.append(sc)
         if not docs_parts:
             continue
-        if len(docs_parts) == 1:
-            u, sums = docs_parts[0], score_parts[0]
-        else:
-            dd = np.concatenate(docs_parts)
-            sc = np.concatenate(score_parts)
-            u, inv = np.unique(dd, return_inverse=True)
-            sums = np.zeros(len(u))
-            np.add.at(sums, inv, sc)
-        if deleted is not None and len(deleted):
-            keep = ~_in_sorted(u, deleted)
-            u, sums = u[keep], sums[keep]
-            if not len(u):
-                continue
+        u, sums = _sum_live(docs_parts, score_parts, deleted)
+        if not len(u):
+            continue
         out_docs.append(u)
         out_scores.append(sums)
         cand = np.concatenate((topbuf, sums))
@@ -250,17 +293,7 @@ def wand_topk_shard(
         topbuf = cand
     if not out_docs:
         return []
-    docs = np.concatenate(out_docs)
-    sums = np.concatenate(out_scores)
-    # identical final selection rule to TAAT: kth-largest exact score,
-    # keep the rounding margin so boundary ties break by doc_id
-    if len(docs) > k:
-        s_k = np.partition(sums, len(sums) - k)[len(sums) - k]
-        cand_i = np.flatnonzero(sums >= s_k - THETA_EPS)
-    else:
-        cand_i = np.arange(len(docs))
-    sel = cand_i[np.lexsort((docs[cand_i], -np.round(sums[cand_i], 6)))][:k]
-    return [(int(docs[i]), float(sums[i])) for i in sel]
+    return _select_topk(np.concatenate(out_docs), np.concatenate(out_scores), k)
 
 
 def taat_topk_shard(
@@ -275,38 +308,14 @@ def taat_topk_shard(
     """Vectorized exact TAAT: decode every matched posting, one group-sum.
     ``deleted``: sorted doc ids dropped before the top-k selection.
     ``cache``: optional batch-shared decode cache (decode_term_row)."""
-    all_docs = []
-    all_scores = []
+    docs_parts, score_parts = [], []
     for row, idf in term_rows:
         docs, tfs = decode_term_row(row, cache)
-        tfs = tfs.astype(np.float64)
-        dl_idx = np.searchsorted(dl_docs, docs)
-        _check_dl_coverage(dl_docs, dl_idx, docs)
-        dl = dl_vals[dl_idx].astype(np.float64)
-        scores = idf * (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * dl / avgdl))
-        all_docs.append(docs)
-        all_scores.append(scores)
-    if not all_docs:
+        docs_parts.append(docs)
+        score_parts.append(_exact_scores(idf, docs, tfs, dl_docs, dl_vals, avgdl))
+    if not docs_parts:
         return []
-    docs = np.concatenate(all_docs)
-    scores = np.concatenate(all_scores)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    sums = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(sums, inv, scores)
-    if deleted is not None and len(deleted):
-        keep = ~_in_sorted(uniq, deleted)
-        uniq, sums = uniq[keep], sums[keep]
-        if not len(uniq):
-            return []
-    if len(uniq) > k:
-        # kth-largest exact score, then keep every candidate within the
-        # rounding margin so rounded ties at the boundary break by doc_id
-        s_k = np.partition(sums, len(sums) - k)[len(sums) - k]
-        cand = np.flatnonzero(sums >= s_k - THETA_EPS)
-    else:
-        cand = np.arange(len(uniq))
-    order = cand[np.lexsort((uniq[cand], -np.round(sums[cand], 6)))][:k]
-    return [(int(uniq[i]), float(sums[i])) for i in order]
+    return _select_topk(*_sum_live(docs_parts, score_parts, deleted), k)
 
 
 def _resolve_algo(algo: str, rows: list[tuple[dict, float]]) -> str:
@@ -343,6 +352,77 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
     )
 
 
+def _tombstoned(tomb_rows: list) -> np.ndarray:
+    """Sorted doc ids deleted in one shard, from its tombstone rows."""
+    parts = [decode_doclen_row(r)[0] for r in tomb_rows]
+    return np.unique(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
+
+
+def _score_shard(
+    query_terms: dict[str, list[str]],
+    by_term: dict[str, list],
+    idf_map: dict[str, float],
+    doclen: tuple[np.ndarray, np.ndarray],
+    deleted: np.ndarray,
+    k: int,
+    algo: str,
+    avgdl: float,
+) -> Iterator[tuple[str, int, float]]:
+    """One shard, every query: (query_id, doc_id, score) of the shard's
+    exact top-k per query. ``by_term`` holds the shard's rows per term:
+    one row per (term, committed group), since an un-compacted index has
+    several runs per term and all of them are scored (disjoint doc
+    appends are exact; re-ingests of the SAME doc require
+    merge_segments). ``algo == "auto"`` resolves per (query, shard)."""
+    dl_docs, dl_vals = doclen
+    decode_cache: dict = {}  # shared across the batch's queries (r6)
+    for qid, terms in query_terms.items():
+        rows = [(run, idf_map[t]) for t in terms for run in by_term.get(t, ())]
+        if not rows:
+            continue
+        kernel = (
+            wand_topk_shard if _resolve_algo(algo, rows) == "wand" else taat_topk_shard
+        )
+        for doc, score in kernel(
+            rows, dl_docs, dl_vals, k, avgdl, deleted=deleted, cache=decode_cache
+        ):
+            yield qid, doc, score
+
+
+def _ranked_topk(
+    spark: SparkSession,
+    query_ids: Iterable[str],
+    hits: Iterable[tuple[str, int, float]],
+    k: int,
+) -> DataFrame:
+    """Driver-side final merge of per-shard (query_id, doc_id, score)
+    hits: rank <= k per query by (round(score, 6) desc, doc_id asc), rows
+    in ``query_ids`` order.
+
+    Arrow path: createDataFrame(pandas) materializes as a single local
+    batch (~25 ms) where createDataFrame(list) parallelizes to
+    defaultParallelism tasks and costs ~0.35 s of pure scheduling per
+    query on local[32] — measured 13x, once the dominant term of serving
+    latency. The EMPTY case must not go through pandas either (an empty
+    batch falls back to parallelize and costs the same 0.35 s — measured;
+    it made no-match queries 2.5x slower than matching ones): emit a
+    0-row plan from range(0) instead."""
+    by_q: dict[str, list] = {qid: [] for qid in query_ids}
+    for qid, doc, score in hits:
+        by_q[qid].append((doc, score))
+    out = []
+    for qid, q_hits in by_q.items():
+        q_hits.sort(key=lambda h: (-round(h[1], 6), h[0]))
+        for rank, (doc, score) in enumerate(q_hits[:k], start=1):
+            out.append((qid, int(doc), round(score, 6), rank))
+    if not out:
+        return _empty_topk(spark)
+    pdf = pd.DataFrame(out, columns=["query_id", "doc_id", "score", "rank"])
+    return spark.createDataFrame(
+        pdf, "query_id string, doc_id long, score double, rank int"
+    )
+
+
 def _local_topk(
     spark: SparkSession,
     index: SegmentIndex,
@@ -356,66 +436,28 @@ def _local_topk(
 
     When the matched-postings volume is tiny relative to the corpus, a
     full Spark job (one task per shard through Python workers) is pure
-    scheduling overhead: instead, collect ONLY the matched segment rows
-    (a pushed term-IN filter over the cached segments), run the same
-    shard kernels in the driver against the pre-collected doc-length
-    arrays, and materialize the (<= k x queries)-row result. Exactness
-    is identical by construction — same kernels, same tie-break."""
+    scheduling overhead: instead, take ONLY the matched segment rows from
+    the term-row LRU (_cached_term_rows), run _score_shard per shard in
+    the driver against the pre-collected doc-length arrays, and rank
+    through the same final merge as the distributed path."""
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
     term_rows, tomb_rows = _cached_term_rows(index, all_terms)
-    by_shard_term: dict[int, dict[str, list]] = {}
+    by_shard: dict[int, dict[str, list]] = {}
     for t, rows_t in term_rows.items():
         for r in rows_t:
-            by_shard_term.setdefault(int(r["shard_id"]), {}).setdefault(
-                t, []
-            ).append(r)
-    tomb_by_shard: dict[int, list] = {}
+            by_shard.setdefault(int(r["shard_id"]), {}).setdefault(t, []).append(r)
+    tombs: dict[int, list] = {}
     for r in tomb_rows:
-        tomb_by_shard.setdefault(int(r["shard_id"]), []).append(r)
-    del_by_shard = {
-        sid: np.unique(np.concatenate([decode_doclen_row(r)[0] for r in rs]))
-        for sid, rs in tomb_by_shard.items()
-    }
-    out = []
-    decode_cache: dict = {}  # shared across this batch's queries (r6)
-    for qid, terms in query_terms.items():
-        hits: list[tuple[int, float]] = []
-        for sid, by_term in by_shard_term.items():
-            rows = [
-                (run, idf_map[t])
-                for t in terms
-                if t in by_term
-                for run in by_term[t]
-            ]
-            if not rows:
-                continue
-            dl_docs, dl_vals = index.dl_map[sid]
-            shard_fn = (
-                wand_topk_shard
-                if _resolve_algo(algo, rows) == "wand"
-                else taat_topk_shard
-            )
-            hits.extend(
-                shard_fn(rows, dl_docs, dl_vals, k, avgdl,
-                         deleted=del_by_shard.get(sid), cache=decode_cache)
-            )
-        hits.sort(key=lambda h: (-round(h[1], 6), h[0]))
-        for rank, (doc, score) in enumerate(hits[:k], start=1):
-            out.append((qid, int(doc), round(score, 6), rank))
-    # Arrow path: createDataFrame(pandas) materializes as a single local
-    # batch (~25 ms) where createDataFrame(list) parallelizes to
-    # defaultParallelism tasks and costs ~0.35 s of pure scheduling per
-    # query on local[32] — measured 13x, the dominant term of serving
-    # latency before this change. The EMPTY case must not go through
-    # pandas either (an empty batch falls back to parallelize and costs
-    # the same 0.35 s — measured; it made no-match queries 2.5x slower
-    # than matching ones): emit a 0-row plan from range(0) instead.
-    if not out:
-        return _empty_topk(spark)
-    pdf = pd.DataFrame(out, columns=["query_id", "doc_id", "score", "rank"])
-    return spark.createDataFrame(
-        pdf, "query_id string, doc_id long, score double, rank int"
+        tombs.setdefault(int(r["shard_id"]), []).append(r)
+    hits = (
+        hit
+        for sid, by_term in by_shard.items()
+        for hit in _score_shard(
+            query_terms, by_term, idf_map, index.dl_map[sid],
+            _tombstoned(tombs.get(sid, [])), k, algo, avgdl,
+        )
     )
+    return _ranked_topk(spark, query_terms, hits, k)
 
 
 # matched-postings ceiling for the driver-local fast path (collecting
@@ -502,10 +544,11 @@ def reset_serving_counters() -> dict:
 def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
                  avgdl: float, k: int, algo: str):
     """applyInArrow group fn: one shard's matched term rows, doclen rows
-    and tombstone rows in, that shard's per-query top-k out. Rows reach
-    the kernels as plain dicts (``to_pylist``): a shard carries only the
-    query terms' rows, so the per-row cost is a few dicts, and the Arrow
-    grouped map skips the pandas conversions in both directions."""
+    and tombstone rows in, that shard's per-query top-k (_score_shard)
+    out. Rows reach the kernels as plain dicts (``to_pylist``): a shard
+    carries only the query terms' rows, so the per-row cost is a few
+    dicts, and the Arrow grouped map skips the pandas conversions in
+    both directions."""
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -521,52 +564,27 @@ def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
             elif t == TOMBSTONE_TERM:
                 tomb_rows.append(r)
             else:
-                # one row per (term, committed group): an un-compacted
-                # index has several runs per term — score them all
-                # (disjoint doc appends are exact; re-ingests of the SAME
-                # doc require merge_segments)
                 by_term.setdefault(t, []).append(r)
         if not dl_rows or not by_term:
             return out_schema.empty_table()
-        # a shard carries one doclen row per committed group; an
-        # un-compacted multi-group index therefore has several — merge
-        dl_parts = [decode_doclen_row(r) for r in dl_rows]
-        dl_docs = np.concatenate([p[0] for p in dl_parts])
-        dl_vals = np.concatenate([p[1] for p in dl_parts])
-        order = np.argsort(dl_docs, kind="stable")
-        dl_docs, dl_vals = dl_docs[order], dl_vals[order]
-        deleted = None
-        if tomb_rows:
-            deleted = np.unique(
-                np.concatenate([decode_doclen_row(r)[0] for r in tomb_rows])
-            )
-        out_q, out_d, out_s = [], [], []
-        decode_cache: dict = {}  # shared across this batch's queries (r6)
-        for qid, terms in query_terms.items():
-            rows = [
-                (run, idf_map[t])
-                for t in terms
-                if t in by_term
-                for run in by_term[t]
-            ]
-            if not rows:
-                continue
-            shard_fn = (
-                wand_topk_shard
-                if _resolve_algo(algo, rows) == "wand"
-                else taat_topk_shard
-            )
-            hits = shard_fn(rows, dl_docs, dl_vals, k, avgdl, deleted=deleted,
-                            cache=decode_cache)
-            for d, s in hits:
-                out_q.append(qid)
-                out_d.append(d)
-                out_s.append(s)
-        return pa.table(
-            {"query_id": out_q, "doc_id": out_d, "score": out_s}, schema=out_schema
-        )
+        hits = list(_score_shard(
+            query_terms, by_term, idf_map, merged_doclen(dl_rows),
+            _tombstoned(tomb_rows), k, algo, avgdl,
+        ))
+        q, d, s = zip(*hits) if hits else ((), (), ())
+        return pa.table({"query_id": q, "doc_id": d, "score": s}, schema=out_schema)
 
     return scorer
+
+
+def _term_dfs(index: SegmentIndex, terms: list[str]) -> dict[str, int]:
+    """term -> df for the ``terms`` present in the index: from df_map in
+    serving mode (prepare_for_queries; zero jobs), else one termstats
+    probe."""
+    if index.df_map is not None:
+        return {t: index.df_map[t] for t in terms if t in index.df_map}
+    rows = index.termstats.filter(F.col("term").isin(terms)).select("term", "df")
+    return {r["term"]: int(r["df"]) for r in rows.collect()}
 
 
 def wand_topk(
@@ -580,7 +598,8 @@ def wand_topk(
 
     queries: iterable of (query_id, query_text). Tokenization uses the
     shared spec (driver-side tokenize_py on the tiny query set — parity
-    with the index-side tokenizer is covered by tests).
+    with the index-side tokenizer is covered by tests). ``k < 1`` returns
+    no rows.
     """
     # unconditional: load_index pins the parquet group list, so even an
     # unprepared index silently misses groups appended after load —
@@ -590,26 +609,18 @@ def wand_topk(
     _t0 = _time.perf_counter_ns()
     index.assert_serving_fresh()
     SERVING_COUNTERS["probe_ns"] += _time.perf_counter_ns() - _t0
+    if k < 1:
+        return _empty_topk(spark)
     mode = index.stats.get("mode", "text")
     queries = list(queries)
     if mode == "code":
         # exact-identifier short-circuit: expand to trigram terms only
         # for base tokens absent from the vocabulary (tokenizer.
-        # code_query_terms). has_term comes from df_map in serving mode
-        # (zero-job) or one small termstats probe on the base tokens.
-        if index.df_map is not None:
-            has_term = index.df_map.__contains__
-        else:
-            base = sorted(
-                {t for _qid, text in queries for t in tokenize_py(text, mode="text")}
-            )
-            present = {
-                r["term"]
-                for r in index.termstats.filter(F.col("term").isin(base))
-                .select("term")
-                .collect()
-            }
-            has_term = present.__contains__
+        # code_query_terms)
+        base = sorted(
+            {t for _qid, text in queries for t in tokenize_py(text, mode="text")}
+        )
+        has_term = _term_dfs(index, base).__contains__
         query_terms = {
             qid: sorted(set(code_query_terms(text, has_term)))
             for qid, text in queries
@@ -621,31 +632,15 @@ def wand_topk(
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
     if not all_terms:
         return _empty_topk(spark)
+    dfs = _term_dfs(index, all_terms)
     n_docs = index.stats["n_docs"]
-    if index.df_map is not None:
-        # serving mode (prepare_for_queries): zero-job idf lookup
-        idf_map = {
-            t: _idf(index.df_map[t], n_docs)
-            for t in all_terms
-            if t in index.df_map
-        }
-    else:
-        df_rows = (
-            index.termstats.filter(F.col("term").isin(all_terms))
-            .select("term", "df")
-            .collect()
-        )
-        idf_map = {r["term"]: _idf(int(r["df"]), n_docs) for r in df_rows}
-    avgdl_f = float(index.stats["avgdl"])
-    if index.df_map is not None and index.dl_map is not None:
-        total_df = sum(index.df_map.get(t, 0) for t in all_terms)
-        if total_df <= FAST_PATH_MAX_POSTINGS:
-            SERVING_COUNTERS["fast_path"] += 1
-            return _local_topk(spark, index, query_terms, idf_map, k, algo, avgdl_f)
-    SERVING_COUNTERS["distributed"] += 1
+    idf_map = {t: _idf(df, n_docs) for t, df in dfs.items()}
     avgdl = float(index.stats["avgdl"])
-    # algo == "auto" resolves per (query, shard) inside the scorer from
-    # idf structure + matched-postings volume (see _make_scorer)
+    if index.dl_map is not None and index.df_map is not None:
+        if sum(dfs.values()) <= FAST_PATH_MAX_POSTINGS:
+            SERVING_COUNTERS["fast_path"] += 1
+            return _local_topk(spark, index, query_terms, idf_map, k, algo, avgdl)
+    SERVING_COUNTERS["distributed"] += 1
     seg = index.segments.filter(
         F.col("term").isin(all_terms)
         | F.col("term").isNull()
@@ -657,28 +652,13 @@ def wand_topk(
     )
     # Final k-way merge: the per-shard scorers emit at most
     # n_shards x k rows per query, so when that bound is driver-small
-    # the global rank is a driver merge (one job, no extra
-    # exchange+window stage — r6; same tie-break as the window and as
-    # _local_topk). At web scale (millions of shards) the bound blows
-    # the budget and the distributed window runs as before.
+    # the global rank is the driver merge (one job, no extra
+    # exchange+window stage — r6). At web scale (millions of shards) the
+    # bound blows the budget and the distributed window runs instead,
+    # with the same tie-break.
     n_shards = int(index.stats.get("n_shards", 0))
     if 0 < n_shards * k * len(query_terms) <= DRIVER_MERGE_MAX_ROWS:
-        by_q: dict[str, list] = {}
-        for r in candidates.collect():
-            by_q.setdefault(r["query_id"], []).append(
-                (int(r["doc_id"]), float(r["score"]))
-            )
-        out = []
-        for qid in by_q:
-            hits = sorted(by_q[qid], key=lambda h: (-round(h[1], 6), h[0]))
-            for rank, (doc, score) in enumerate(hits[:k], start=1):
-                out.append((qid, doc, round(score, 6), rank))
-        if not out:
-            return _empty_topk(spark)
-        pdf = pd.DataFrame(out, columns=["query_id", "doc_id", "score", "rank"])
-        return spark.createDataFrame(
-            pdf, "query_id string, doc_id long, score double, rank int"
-        )
+        return _ranked_topk(spark, query_terms, candidates.collect(), k)
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("score"), 6).desc(), F.col("doc_id").asc()
     )

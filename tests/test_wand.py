@@ -55,9 +55,8 @@ def test_rank_identity_vs_oracle(spark, seg_index, doc_oracle, algo):
             assert abs(h[1] - e[1]) <= 1e-6, (algo, qid, h, e)
 
 
-def test_code_mode_rank_identity(spark, corpus_rows, tmp_path_factory):
-    """Code-mode (identifier + trigram terms) compressed index must be
-    rank-identical to the Python oracle in code mode."""
+@pytest.fixture(scope="module")
+def code_index(spark, corpus_rows, tmp_path_factory):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(corpus_rows)
@@ -67,10 +66,15 @@ def test_code_mode_rank_identity(spark, corpus_rows, tmp_path_factory):
     )
     d = tmp_path_factory.mktemp("codeidx") / "idx"
     build_segments(spark, docs, str(d), n_shards=4, n_groups=2, mode="code")
-    idx = load_index(spark, str(d))
-    oracle = BM25Oracle(
-        [(r["doc_id"], r["text"]) for r in docs.collect()], mode="code"
-    )
+    return str(d), [(r["doc_id"], r["text"]) for r in docs.collect()]
+
+
+def test_code_mode_rank_identity(spark, code_index):
+    """Code-mode (identifier + trigram terms) compressed index must be
+    rank-identical to the Python oracle in code mode."""
+    d, docs = code_index
+    idx = load_index(spark, d)
+    oracle = BM25Oracle(docs, mode="code")
     queries = [
         ("Q1", "parseConfig"), ("Q2", "spark flushQueue"),
         ("Q3", "blockMax"),  # trigram-only partial identifier match
@@ -157,3 +161,62 @@ def test_term_cache_lru_evicts_by_postings_budget(spark, seg_index):
         assert set(prepared.term_rows_cache) <= keep
     finally:
         W.TERM_CACHE_MAX_POSTINGS = old_cap
+
+
+SERVING_MODES = ["fast", "distributed", "unprepared"]
+# one matching query per corpus mode
+MATCHING = {"text": "data stream merge", "code": "parseConfig flushQueu"}
+TOPK_SCHEMA = [
+    ("query_id", "string"), ("doc_id", "bigint"), ("score", "double"), ("rank", "int")
+]
+
+
+@pytest.fixture(scope="module")
+def served(spark, seg_index, code_index):
+    """(corpus, serving mode) -> index: the driver fast path, the
+    distributed scorer (no driver doc lengths) and an unprepared load."""
+    out = {}
+    for corpus, root in (("text", str(seg_index.paths.root)), ("code", code_index[0])):
+        for mode in SERVING_MODES:
+            idx = load_index(spark, root)
+            if mode == "fast":
+                idx.prepare_for_queries()
+            elif mode == "distributed":
+                idx.prepare_for_queries(collect_doclen_max=0)
+            out[corpus, mode] = idx
+    return out
+
+
+def _schema(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+
+@pytest.mark.parametrize("corpus", ["text", "code"])
+@pytest.mark.parametrize("mode", SERVING_MODES)
+def test_nonpositive_k_returns_no_rows(spark, served, corpus, mode):
+    idx = served[corpus, mode]
+    for k in (0, -1):
+        for algo in ("wand", "taat", "auto"):
+            df = wand_topk(spark, idx, [("M", MATCHING[corpus])], k=k, algo=algo)
+            assert df.collect() == [] and _schema(df) == TOPK_SCHEMA, (k, algo)
+
+
+@pytest.mark.parametrize("corpus", ["text", "code"])
+@pytest.mark.parametrize("mode", SERVING_MODES)
+def test_degenerate_queries_return_no_rows(spark, served, corpus, mode):
+    """An empty or no-token query yields no rows with the top-k schema,
+    and leaves a matching query in the same batch unchanged."""
+    import alertsage_spark.query.wand as W
+
+    idx = served[corpus, mode]
+    match = ("M", MATCHING[corpus])
+    W.reset_serving_counters()
+    solo = sorted(wand_topk(spark, idx, [match], k=K).collect())
+    assert solo
+    for text in ("", "a ! ?"):
+        df = wand_topk(spark, idx, [("D", text)], k=K)
+        assert df.collect() == [] and _schema(df) == TOPK_SCHEMA, text
+        mixed = wand_topk(spark, idx, [("D", text), match], k=K).collect()
+        assert sorted(mixed) == solo, text
+    path = "fast_path" if mode == "fast" else "distributed"
+    assert W.SERVING_COUNTERS[path] == 3
