@@ -28,20 +28,19 @@ either single version: tf can come from one version and dl from the
 other, and terms present only in the old version persist. Replacing a
 document's content therefore goes through the tombstone path:
 ``delete_docs`` (segments.py) -> ``merge_segments`` (this merge drops
-tombstoned doclens/postings and recomputes stats) -> append the new
-version. Plain append + merge assumes appends carry new doc_ids or
+tombstoned doclens/postings, so stats stop counting them) -> append the
+new version. Plain append + merge assumes appends carry new doc_ids or
 identical bytes — the invariant build_segments' fidelity gate enforces
 upstream.
 
-Global stats are RECOMPUTED from the merged segments by the build's
-finalizer (segments._finalize_stats: salted termstats, doclen totals
-observed in the same job), never copied from the source index: the
-source's df/cf/n_docs/avgdl double-count re-ingested docs.
+Global stats are never copied from the source index (its df/cf/n_docs/
+avgdl double-count re-ingested docs): load_index derives them from the
+merged group, where every doc and posting appears once.
 
-Commit: the whole output (merged group, config, termstats, stats.json,
-manifest, stream sidecar) is built in a staging sibling of out_dir and
-renamed into place (segments._rename_into_place). A crash leaves
-out_dir as it was; a reused out_dir keeps nothing of its old index.
+Commit: the whole output (merged group, build_config.json, manifest,
+stream sidecar) is built in a staging sibling of out_dir and renamed
+into place (segments._rename_into_place). A crash leaves out_dir as it
+was; a reused out_dir keeps nothing of its old index.
 """
 
 from __future__ import annotations
@@ -58,7 +57,6 @@ from alertsage_spark.index.segments import (
     IndexPaths,
     SegmentIndex,
     _encode_shard,
-    _finalize_stats,
     _one_shard_per_task,
     _rename_into_place,
     _shard_key,
@@ -81,7 +79,7 @@ def _merge_shard(key, tbl):
     # 0) the shard's tombstone rows (delete_docs): these doc ids are
     #    physically dropped from doclens and postings below, and the
     #    tombstone rows themselves are not re-emitted — after the merge
-    #    the deletion is durable and stats are recomputed without them
+    #    the deletion is durable and derived stats no longer count them
     deleted = np.unique(np.concatenate(
         [_EMPTY] + [decode_doclen_row(r)[0] for r in rows if r["term"] == TOMBSTONE_TERM]
     ))
@@ -140,8 +138,8 @@ def _merge_shard(key, tbl):
 
 def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> SegmentIndex:
     """Compact all groups of ``index_dir`` into one merged segment set at
-    ``out_dir``; termstats and stats.json are RECOMPUTED from the merged
-    rows (re-ingested docs counted once). The manifest (build lineage)
+    ``out_dir``; its stats derive from the merged rows at load
+    (re-ingested docs counted once). The manifest (build lineage)
     carries over. The output is staged beside ``out_dir`` and renamed
     into place, replacing whatever ``out_dir`` held."""
     idx = load_index(spark, index_dir)
@@ -161,7 +159,6 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
                 paths.group_dir(0)
             )
         _write_json(paths.config_json, config)
-        _finalize_stats(spark, paths, config)
         if os.path.exists(src.manifest):
             spark.read.parquet(src.manifest).write.parquet(paths.manifest)
         # Carry streaming exactly-once lineage: the merged group has no

@@ -21,10 +21,12 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
     format; the scorer reads postings and doc lengths from the same
     partition-local rows (no separate table, no cogroup). Files are
     sorted by term so parquet row-group min/max stats prune term lookups.
-  * **global stats after commit**: n_docs/avgdl and the term->df table
-    derive from the committed segment rows (salted two-stage agg on
-    term — at most n_shards rows per term enter it, so hot terms cannot
-    skew a reducer).
+  * **derived global stats**: nothing index-wide is stored but the
+    build config. load_index derives n_docs/avgdl (one aggregation over
+    the pinned doclen rows) and the term->df table (a lazy salted
+    two-stage agg on term — at most n_shards rows per term enter it, so
+    hot terms cannot skew a reducer) from exactly the groups it pins,
+    so stats can never disagree with the segments they describe.
   * **manifest checkpoint/resume** (the Spark-native analog of the
     reference's chunked generator checkpoint,
     /root/reference/generator/generate_cyber_incidents.py:2779-3047:
@@ -38,11 +40,11 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
     uninterrupted build (asserted in tests/test_segments.py).
   * **one LSM commit path**: every later group (delete_docs,
     append_group, streaming ingest) lands through _land_group's
-    staging dir + rename; every termstats/stats.json comes from
-    _finalize_stats (build, refresh_stats, merge_segments); every JSON
-    file is written by _write_json (temp + rename); a whole new index
-    (a merge's output, a stream's first batch) is built in a
-    _staged_sibling and committed by _rename_into_place.
+    staging dir + rename; a build becomes loadable when its finalize
+    renames _build_config.json to build_config.json; every JSON file is
+    written by _write_json (temp + rename); a whole new index (a merge's
+    output, a stream's first batch) is built in a _staged_sibling and
+    committed by _rename_into_place.
 """
 
 from __future__ import annotations
@@ -89,11 +91,11 @@ _SEG_COLS = [
 # tokens: the tokenizer emits only [a-z][a-z0-9]+ and '#'-prefixed
 # trigrams. LSM delete semantics: a tombstone excludes its doc ids from
 # ALL query results immediately (kernels mask candidates shard-locally);
-# global stats (n_docs/avgdl/df) stay stale until merge_segments, which
-# physically drops deleted postings, doclens, and the tombstones, then
-# recomputes stats — the standard Lucene-style lifecycle. Re-ingesting a
-# deleted doc_id requires a merge first (deletion is not sequenced
-# against later appends).
+# global stats (n_docs/avgdl/df) still count the deleted docs, whose
+# doclen and term rows stay, until merge_segments physically drops
+# deleted postings, doclens, and the tombstones — the standard
+# Lucene-style lifecycle. Re-ingesting a deleted doc_id requires a merge
+# first (deletion is not sequenced against later appends).
 TOMBSTONE_TERM = "!deleted!"
 
 # Streaming-ingest exactly-once bookkeeping (streaming/ingest.py writes
@@ -108,9 +110,9 @@ STREAM_SIDECAR = "_stream_batches.json"
 
 
 def _write_json(path: str, obj) -> None:
-    """The index's one JSON writer (stats.json, build_config.json, the
-    stream sidecar and batch markers): a temp file renamed over
-    ``path``, so a reader never sees a half-written file."""
+    """The index's one JSON writer (the build config, the stream sidecar
+    and batch markers): a temp file renamed over ``path``, so a reader
+    never sees a half-written file."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
@@ -189,16 +191,14 @@ class IndexPaths:
     root: str
 
     @property
-    def stats_json(self) -> str:
-        return os.path.join(self.root, "stats.json")
-
-    @property
     def config_json(self) -> str:
         return os.path.join(self.root, "build_config.json")
 
     @property
-    def termstats(self) -> str:
-        return os.path.join(self.root, "termstats")
+    def pending_config_json(self) -> str:
+        """A build's config until its finalize renames it to
+        config_json: an index without build_config.json never loads."""
+        return os.path.join(self.root, "_build_config.json")
 
     def group_dir(self, g: int) -> str:
         return os.path.join(self.root, "segments", f"group={g}")
@@ -307,52 +307,38 @@ def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> Dat
     )
 
 
-def _finalize_stats(
-    spark: SparkSession,
-    paths: IndexPaths,
-    config: dict,
-    expect_n_docs: int | None = None,
-) -> dict:
-    """The one stats commit: termstats and stats.json recomputed from
-    the committed groups (build_segments' finalize, refresh_stats,
-    merge_segments). n_docs/sum_dl are the doclen-row totals, observed
-    in the termstats write job rather than in a second pass over the
-    segments; tombstoned docs still count until merge_segments drops
-    them (the LSM staleness contract). ``config`` (n_shards, n_groups,
-    mode) completes stats.json. ``expect_n_docs``, the build's manifest
-    total, is checked before stats.json is written."""
-    segs = spark.read.option(
-        "basePath", os.path.join(paths.root, "segments")
-    ).parquet(*paths.group_dirs())
-    doclen = F.col("term").isNull()
-    totals = [
-        F.sum(F.when(doclen, F.col("df_local"))).alias("n"),
-        F.sum(F.when(doclen, F.col("cf_local"))).alias("s"),
-    ]
-    obs = Observation("finalize_doclen")
-    salted_termstats_from_segments(segs.observe(obs, *totals)).write.mode(
-        "overwrite"
-    ).parquet(paths.termstats)
-    # AQE replaces an aggregation whose input turned out empty by an
-    # empty relation, dropping the CollectMetrics below it: the
-    # observation then never reports and get() fails on its empty row.
-    # Only an index without term rows (empty corpus, all-deleted merge)
-    # lands here, and its doclen totals are read back.
-    if obs._jo.getRow().size():
-        dl = obs.get
-    else:
-        dl = segs.agg(*totals).collect()[0]
-    n, sum_dl = int(dl["n"] or 0), int(dl["s"] or 0)
-    if expect_n_docs is not None:
-        assert expect_n_docs == n, "manifest/segment doc-count mismatch"
-    stats = {
+def _read_segments(spark: SparkSession, paths: IndexPaths, groups: list[str]) -> DataFrame:
+    """The rows of ``groups`` plus their ``group`` partition column. The
+    schema is given, not inferred: inference costs a footer-reading job
+    on every read."""
+    return (
+        spark.read.schema(f"{SEGMENT_SCHEMA}, group int")
+        .option("basePath", os.path.join(paths.root, "segments"))
+        .parquet(*groups)
+    )
+
+
+def _derive_stats(segments: DataFrame, config: dict, n_groups: int) -> dict:
+    """The index statistics of the groups ``segments`` reads: n_docs and
+    sum_dl from ONE aggregation over the doclen rows (term IS NULL; the
+    scan reads only term, df_local and cf_local). Tombstone rows are not
+    doclen rows, so deleted docs still count until merge_segments drops
+    them (the LSM contract at TOMBSTONE_TERM). ``config`` (the build
+    config) supplies n_shards and mode."""
+    row = (
+        segments.filter(F.col("term").isNull())
+        .agg(F.sum("df_local").alias("n"), F.sum("cf_local").alias("s"))
+        .collect()[0]
+    )
+    n, sum_dl = int(row["n"] or 0), int(row["s"] or 0)
+    return {
         "n_docs": n,
-        "sum_dl": sum_dl,  # exact int so incremental refresh stays exact
+        "sum_dl": sum_dl,
         "avgdl": (sum_dl / n) if n else 0.0,
-        **config,
+        "n_shards": int(config["n_shards"]),
+        "n_groups": n_groups,
+        "mode": config.get("mode", "text"),
     }
-    _write_json(paths.stats_json, stats)
-    return stats
 
 
 def _doclen_row(shard_id: int, doc_ids: np.ndarray, dls: np.ndarray, term=None):
@@ -728,13 +714,16 @@ def build_segments(
     if fidelity_hashes is not None:
         verify_corpus_fidelity(docs, fidelity_hashes, id_col, text_col)
     config = {"n_shards": n_shards, "n_groups": n_groups, "mode": mode}
-    if resume and os.path.exists(paths.config_json):
-        with open(paths.config_json) as f:
+    found = [
+        p for p in (paths.config_json, paths.pending_config_json) if os.path.exists(p)
+    ]
+    if resume and found:
+        with open(found[0]) as f:
             prev = json.load(f)
         if prev != config:
             raise ValueError("resume with different build config; wipe index_dir first")
     else:
-        _write_json(paths.config_json, config)
+        _write_json(paths.pending_config_json, config)
 
     done = committed_groups(spark, paths) if resume else set()
     sharded = docs.select(
@@ -772,88 +761,22 @@ def build_segments(
             if fail_after_group is not None and n_committed >= fail_after_group:
                 raise RuntimeError(f"injected failure after group {g}")
 
-    # finalize: global stats + termstats from the committed segments
-    # (idempotent overwrite; re-runs after a crash before finalize)
+    # finalize: the manifest's doc count must equal the committed
+    # segments' (the aggregation load_index derives n_docs with); only
+    # then does the config rename make the index loadable. Re-runs after
+    # a crash before finalize.
     all_done = done | {m["group_id"] for m in metrics}
     stats: dict = {}
     if len(all_done) >= n_groups:
         man = spark.read.parquet(paths.manifest).agg(
             F.sum("n_docs").alias("n"),
         ).collect()[0]
-        stats = _finalize_stats(
-            spark, paths, config, expect_n_docs=int(man["n"] or 0)
-        )
+        groups = paths.group_dirs()
+        stats = _derive_stats(_read_segments(spark, paths, groups), config, len(groups))
+        assert int(man["n"] or 0) == stats["n_docs"], "manifest/segment doc-count mismatch"
+        if os.path.exists(paths.pending_config_json):
+            os.replace(paths.pending_config_json, paths.config_json)
     return {"stats": stats, "metrics": metrics}
-
-
-def refresh_stats(spark: SparkSession, index_dir: str) -> dict:
-    """Recompute termstats + stats.json from ALL committed groups — the
-    documented post-append step (append_group / stream_ingest add
-    groups without touching global stats). Idempotent overwrite;
-    n_docs/avgdl come from the doclen rows (tombstoned docs still count
-    until merge_segments, by the LSM staleness contract)."""
-    paths = IndexPaths(index_dir)
-    with open(paths.config_json) as f:
-        cfg = json.load(f)
-    config = {
-        "n_shards": int(cfg["n_shards"]),
-        "n_groups": len(paths.group_dirs()),
-        "mode": cfg.get("mode", "text"),
-    }
-    return _finalize_stats(spark, paths, config)
-
-
-def refresh_stats_incremental(
-    spark: SparkSession, index_dir: str, batch_index_dir: str
-) -> dict:
-    """O(vocab + batch) stats refresh after appending ONE batch's group:
-    termstats = (old termstats UNION batch termstats) summed per term,
-    n_docs/sum_dl added as exact ints — numerically IDENTICAL to the
-    full refresh_stats recompute (all inputs are integer sums; avgdl is
-    the same single division), without rescanning every segment group.
-    This is what keeps streaming ingestion sub-linear: the full
-    recompute is O(total corpus) per micro-batch, which inverts the
-    LSM cost model at scale. Falls back to refresh_stats if the
-    existing index predates the sum_dl field."""
-    paths, bpaths = IndexPaths(index_dir), IndexPaths(batch_index_dir)
-    with open(paths.stats_json) as f:
-        old = json.load(f)
-    if "sum_dl" not in old:
-        return refresh_stats(spark, index_dir)
-    with open(bpaths.stats_json) as f:
-        batch = json.load(f)
-    merged_ts = (
-        spark.read.parquet(paths.termstats)
-        .unionByName(spark.read.parquet(bpaths.termstats))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    )
-    # swap via rename: new dir written first, then a two-step swap; a
-    # crash between the renames is recovered by refresh_stats (full)
-    new_dir = paths.termstats + ".new"
-    bak_dir = paths.termstats + ".bak"
-    for d in (new_dir, bak_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    merged_ts.write.parquet(new_dir)
-    os.rename(paths.termstats, bak_dir)
-    os.rename(new_dir, paths.termstats)
-    shutil.rmtree(bak_dir)
-    n = int(old["n_docs"]) + int(batch["n_docs"])
-    # the batch index was built by build_segments in the same ingest
-    # call, so it always records sum_dl
-    sum_dl = int(old["sum_dl"]) + int(batch["sum_dl"])
-    stats = dict(old)
-    stats.update(
-        {
-            "n_docs": n,
-            "sum_dl": sum_dl,
-            "avgdl": (sum_dl / n) if n else 0.0,
-            "n_groups": len(paths.group_dirs()),
-        }
-    )
-    _write_json(paths.stats_json, stats)
-    return stats
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
@@ -906,8 +829,7 @@ def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
     lengths / non-deduplicable re-ingests (ADVICE r01). Copies every
     source group under the next free group id (each lands through
     _land_group, crash-safe) and returns how many groups were appended.
-    Caller re-finalizes stats (refresh_stats, or merge_segments, which
-    recomputes them)."""
+    The next load_index counts the appended docs and terms."""
     dst, src = IndexPaths(dst_dir), IndexPaths(src_dir)
     with open(dst.config_json) as f:
         dcfg = json.load(f)
@@ -934,8 +856,8 @@ COLLECT_TERMSTATS_MAX = 2_000_000
 @dataclass
 class SegmentIndex:
     segments: DataFrame  # term rows AND term=NULL doclen rows
-    termstats: DataFrame
-    stats: dict
+    termstats: DataFrame  # term, df, cf: a lazy agg over ``segments``
+    stats: dict  # derived from ``segments`` at load_index
     paths: IndexPaths
     df_map: dict | None = None  # term -> df, set by prepare_for_queries
     dl_map: dict | None = None  # shard_id -> (sorted doc_ids, dls)
@@ -1000,11 +922,11 @@ class SegmentIndex:
             self.assert_serving_fresh()
         self.term_rows_cache = {}
         self.segments.cache().count()
-        if self.termstats.count() <= COLLECT_TERMSTATS_MAX:
-            self.df_map = {
-                r["term"]: int(r["df"])
-                for r in self.termstats.select("term", "df").collect()
-            }
+        # termstats aggregates the cached rows: one collect, dropped when
+        # the vocabulary is over the cap
+        rows = self.termstats.select("term", "df").limit(COLLECT_TERMSTATS_MAX + 1).collect()
+        if len(rows) <= COLLECT_TERMSTATS_MAX:
+            self.df_map = {r["term"]: int(r["df"]) for r in rows}
         if int(self.stats.get("n_docs", 0)) <= collect_doclen_max:
             by_shard: dict[int, list] = {}
             for r in self.doclen_rows.collect():
@@ -1068,9 +990,9 @@ class SegmentIndex:
         pattern_search / suggest run on the LSM segments directly.
         ``terms`` slices the decode to the query's vocabulary — the
         scale path: only the consulted posting lists are ever decoded.
-        n_docs/avgdl come from stats.json and (like the kernels) stay
-        stale between a delete and the purging merge — the Lucene
-        lifecycle contract documented at TOMBSTONE_TERM."""
+        n_docs/avgdl come from the load-time stats and (like the kernels)
+        count deleted docs between a delete and the purging merge — the
+        Lucene lifecycle contract documented at TOMBSTONE_TERM."""
         from alertsage_spark.index.build import InvertedIndex
 
         self.assert_serving_fresh()
@@ -1125,21 +1047,24 @@ def _drop_tombstoned(out: DataFrame, tomb: DataFrame | None) -> DataFrame:
 
 
 def load_index(spark: SparkSession, index_dir: str) -> SegmentIndex:
+    """Pin the committed groups and derive the index statistics from
+    exactly those groups: ``stats`` (one doclen aggregation job) and the
+    lazy ``termstats`` over the pinned segment rows. Raises on a build
+    that has not finalized (no build_config.json)."""
     paths = IndexPaths(index_dir)
-    with open(paths.stats_json) as f:
-        stats = json.load(f)
-    idx = SegmentIndex(
-        segments=spark.read.option(
-            "basePath", os.path.join(paths.root, "segments")
-        ).parquet(*paths.group_dirs()),
-        termstats=spark.read.parquet(paths.termstats),
-        stats=stats,
+    with open(paths.config_json) as f:
+        config = json.load(f)
+    # The parquet path list is pinned NOW; the snapshot makes any later
+    # on-disk mutation raise at query time rather than serve stale
+    # results (prepare_for_queries KEEPS this snapshot and re-verifies
+    # it — it must not re-list, or a mutation in the load->prepare gap
+    # would be silently adopted).
+    groups = paths.group_dirs()
+    segments = _read_segments(spark, paths, groups)
+    return SegmentIndex(
+        segments=segments,
+        termstats=salted_termstats_from_segments(segments),
+        stats=_derive_stats(segments, config, len(groups)),
         paths=paths,
+        serving_groups=tuple(groups),
     )
-    # The parquet path list above is pinned NOW; snapshot it so any
-    # later on-disk mutation raises at query time rather than serving
-    # stale results (prepare_for_queries KEEPS this snapshot and
-    # re-verifies it — it must not re-list, or a mutation in the
-    # load->prepare gap would be silently adopted).
-    idx.serving_groups = idx._group_dirs()
-    return idx

@@ -11,8 +11,9 @@ Each micro-batch builds its own one-group index in a staging sibling of
 the index dir. The first batch renames that whole index into place
 (segments._rename_into_place, merge's commit); later batches land its
 group through segments._land_group, the one group commit that
-delete_docs and append_group use too, then merge global stats
-incrementally. EXACTLY-ONCE per batch:
+delete_docs and append_group use too. No stats are written: load_index
+derives them from the groups it pins, so a committed group is counted
+from its rename on. EXACTLY-ONCE per batch:
 Structured Streaming re-delivers a batch after a crash between the
 sink's side effect and the checkpoint commit, so every group directory
 carries a ``_stream_batch.json`` marker with its batch id — a
@@ -37,7 +38,6 @@ silent drift.
 
 from __future__ import annotations
 
-import glob as _glob
 import json
 import os
 import shutil
@@ -45,57 +45,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from alertsage_spark.index.segments import (
-    STREAM_MARKER as _MARKER,
-)
-from alertsage_spark.index.segments import (
+    STREAM_MARKER,
     IndexPaths,
     _land_group,
     _rename_into_place,
     _staged_sibling,
     _write_json,
     build_segments,
-    refresh_stats,
-    refresh_stats_incremental,
     stream_committed_batch_ids,
 )
-
-# written into a group dir only AFTER its stats refresh completed; a
-# committed group missing it marks a crash in the commit->refresh gap
-_STATS_OK = "_stats_ok"
-
-
-def committed_batch_ids(index_dir: str) -> set[int]:
-    """Batch ids already durably appended: marker files inside committed
-    group dirs UNION the root sidecar that merge_segments carries when
-    it compacts marker-carrying groups away (segments.py)."""
-    return stream_committed_batch_ids(index_dir)
-
-
-def _repair_stats_if_needed(spark: SparkSession, index_dir: str) -> bool:
-    """If any STREAM-committed group (it carries a batch marker) lacks
-    its _STATS_OK stamp — a crash landed between the group rename and
-    the stats refresh — rerun the FULL stats recompute (idempotent over
-    all groups) and stamp the marker groups. Scoped to marker groups:
-    delete_docs/append_group/merge groups have their own stats
-    contract, and an unstamped tombstone group must not trigger a
-    full-corpus rescan on every stream restart."""
-    stream_groups = [
-        os.path.dirname(p)
-        for p in _glob.glob(
-            os.path.join(index_dir, "segments", "group=*", _MARKER)
-        )
-    ]
-    missing = [
-        g for g in stream_groups
-        if not os.path.exists(os.path.join(g, _STATS_OK))
-    ]
-    if not missing:
-        return False
-    refresh_stats(spark, index_dir)
-    for g in stream_groups:
-        with open(os.path.join(g, _STATS_OK), "w") as f:
-            f.write("{}")
-    return True
 
 
 def ingest_batch(
@@ -119,12 +77,7 @@ def ingest_batch(
             f"{index_dir} exists, is non-empty, and is not an "
             "index (no build_config.json) — refusing to adopt"
         )
-    if not adopting:
-        # unconditional: a crash in the commit->stats gap must be
-        # repaired even when the NEXT call carries a new batch id (the
-        # direct batch-twin usage has no re-delivery guarantee)
-        _repair_stats_if_needed(spark, index_dir)
-    if batch_id in committed_batch_ids(index_dir):
+    if batch_id in stream_committed_batch_ids(index_dir):
         return False
     rows = batch_df.limit(1).count()
     if rows == 0:
@@ -132,7 +85,7 @@ def ingest_batch(
     # build the batch's group in its own staging index, then adopt the
     # group dir. The staging build uses the SAME n_shards/mode so the
     # doc->shard layout matches (append_group's compatibility rule).
-    if os.path.exists(paths.config_json):
+    if not adopting:
         with open(paths.config_json) as f:
             cfg = json.load(f)
         if (cfg["n_shards"], cfg.get("mode", "text")) != (n_shards, mode):
@@ -154,25 +107,13 @@ def ingest_batch(
             build_id=f"stream-batch-{batch_id}",
         )
         src_group = IndexPaths(stage_root).group_dir(0)
-        _write_json(os.path.join(src_group, _MARKER), {"batch_id": int(batch_id)})
-        if not os.path.exists(paths.config_json):
-            # first batch: adopt the staging index wholesale (config,
-            # manifest, termstats, stats all already consistent — stamp
-            # the group's stats as done up front); the entry guard
-            # proved any existing index_dir empty
-            with open(os.path.join(src_group, _STATS_OK), "w") as f:
-                f.write("{}")
+        _write_json(os.path.join(src_group, STREAM_MARKER), {"batch_id": int(batch_id)})
+        if adopting:
+            # first batch: adopt the staging index wholesale; the entry
+            # guard proved any existing index_dir empty
             _rename_into_place(stage_root, index_dir)
-            return True
-        g = _land_group(paths, lambda d: shutil.move(src_group, d))
-        # O(vocab + batch) incremental stats merge — identical result to
-        # the full recompute (exact integer sums), without the
-        # O(total corpus) rescan that would invert the LSM cost model.
-        # The _STATS_OK stamp lands only after it completes; a crash in
-        # between is repaired on re-delivery (_repair_stats_if_needed).
-        refresh_stats_incremental(spark, index_dir, stage_root)
-        with open(os.path.join(paths.group_dir(g), _STATS_OK), "w") as f:
-            f.write("{}")
+        else:
+            _land_group(paths, lambda d: shutil.move(src_group, d))
         return True
 
 

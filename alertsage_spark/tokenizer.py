@@ -1,4 +1,4 @@
-"""Code-aware tokenizer — ONE spec, three parity-tested implementations.
+"""Code-aware tokenizer — ONE spec, four parity-tested implementations.
 
 Spec (applied in order):
   1. camelCase boundary:  insert a space between ``[a-z0-9]`` and ``[A-Z]``
@@ -18,15 +18,15 @@ Spec (applied in order):
 Implementations:
   * :func:`tokenize_col`  — pure Spark SQL Column expression (JVM-side,
     whole-stage-codegen friendly; ZERO Python on the hot path).
-  * :func:`tokenize_pandas_udf` — vectorized Arrow/pandas UDF variant
-    (the north rule's required UDF form; used where the SQL form gets
-    unwieldy, e.g. trigram mode on very wide rows).
+  * :func:`tokenize_arrow_base` — Arrow-native factorized token stream
+    (pyarrow.compute / RE2) used inside the segment builder.
   * :func:`tokenize_py`   — pure-Python reference implementation used by
     the independent BM25 oracle and unit tests.
   * :func:`duckdb_tokens_sql` — a DuckDB SQL fragment producing the same
     token list, used by the driver's DuckDB correctness oracle.
 
-All four MUST stay in lockstep; tests/test_tokenizer.py asserts parity.
+All four MUST stay in lockstep; tests/test_tokenizer.py asserts parity
+(with a pandas-UDF form in tests/tokenizer_oracle.py as a fifth check).
 """
 
 from __future__ import annotations
@@ -34,10 +34,8 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # one escape level per consumer; keep raw patterns here
 CAMEL1 = ("([a-z0-9])([A-Z])", " ")  # fooBar -> foo Bar
@@ -88,7 +86,7 @@ def tokenize_col(col: Column, mode: str = "text") -> Column:
     return F.concat(toks, trigrams)
 
 
-# ------------------------------------------------------------- pandas UDF
+# ------------------------------------------------------------- Python
 _CAMEL1_C = re.compile(CAMEL1[0])
 _CAMEL2_C = re.compile(CAMEL2[0])
 _TOKEN_C = re.compile(TOKEN_RE)
@@ -140,38 +138,6 @@ def code_query_terms(query_text: str, has_term) -> list[str]:
         if not has_term(tok):
             out.extend(token_trigrams(tok))
     return out
-
-
-def tokenize_pandas_udf(mode: str = "text"):
-    """Vectorized Arrow/pandas UDF form (Series[str] -> Series[list[str]]).
-
-    Arrow-batched (ArrowEvalPython in the plan, never BatchEvalPython);
-    the per-batch body leans on pandas vectorized str ops for the
-    normalization stages and a single compiled-regex findall per cell.
-    """
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        s = s.fillna("")
-        s = s.str.replace(_CAMEL1_C, r"\1 \2", regex=True)
-        s = s.str.replace(_CAMEL2_C, r"\1 \2", regex=True)
-        s = s.str.lower().str.replace("_", " ", regex=False)
-        if mode == "code":
-            return s.map(lambda x: _findall_with_trigrams(x))
-        return s.map(_TOKEN_C.findall)
-
-    return _tok
-
-
-def _findall_with_trigrams(s: str) -> list[str]:
-    toks = _TOKEN_C.findall(s)
-    tris = [
-        TRIGRAM_PREFIX + t[i : i + 3]
-        for t in toks
-        if len(t) >= TRIGRAM_MIN_LEN
-        for i in range(len(t) - 2)
-    ]
-    return toks + tris
 
 
 # ------------------------------------------------------- Arrow-native

@@ -12,7 +12,6 @@ from alertsage_spark.index.segments import (
     append_group,
     build_segments,
     load_index,
-    refresh_stats,
 )
 from alertsage_spark.query.oracle import BM25Oracle
 from alertsage_spark.query.wand import wand_topk
@@ -56,8 +55,6 @@ def test_full_lifecycle_crash_resume_append_compact(spark, tmp_path):
     b_dir = str(tmp_path / "life_b")
     build_segments(spark, corpus_b, b_dir, n_shards=8, n_groups=1, build_id="B")
     assert append_group(spark, d, b_dir) == 1
-    # refresh stats over all groups (the documented post-append step)
-    refresh_stats(spark, d)
 
     union = corpus_a.unionByName(corpus_b)
     check(load_index(spark, d), union, "post-append")

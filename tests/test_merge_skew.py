@@ -48,11 +48,8 @@ def test_merge_preserves_rank_identity(spark, code_docs, tmp_path):
 
 def test_incremental_append_then_merge(spark, code_docs, tmp_path):
     """LSM lifecycle: build A over half the corpus, append build B's
-    groups for the other half (disjoint docs), merge, re-finalize stats —
-    queries over the merged index are rank-identical to an oracle over
-    the UNION corpus."""
-    from alertsage_spark.index.segments import refresh_stats
-
+    groups for the other half (disjoint docs), merge — queries over the
+    merged index are rank-identical to an oracle over the UNION corpus."""
     half_a = code_docs.filter(F.col("doc_id") % 2 == 0)
     half_b = code_docs.filter(F.col("doc_id") % 2 == 1)
     d = tmp_path / "incr"
@@ -62,10 +59,7 @@ def test_incremental_append_then_merge(spark, code_docs, tmp_path):
     build_segments(spark, half_b, str(b_dir), n_shards=4, n_groups=1, build_id="B")
     from alertsage_spark.index.segments import append_group
     assert append_group(spark, str(d), str(b_dir)) == 1
-    # merged compaction + recomputed global stats/termstats
     merged_dir = tmp_path / "merged"
-    # refresh stats/termstats over both groups before merge
-    refresh_stats(spark, str(d))
 
     oracle = BM25Oracle([(r["doc_id"], r["text"]) for r in code_docs.collect()])
     queries = [("Q1", "spark postingList"), ("Q2", "read_buffer segmentMerge")]
@@ -250,7 +244,7 @@ def test_merge_equals_fresh_build_of_survivors(spark, tmp_path, mode):
 
 def test_merge_into_reused_dir_replaces_old_index(spark, tmp_path):
     """A merge into an out_dir that held another index keeps none of it:
-    not its groups, not its docs in stats.json, not its terms."""
+    not its groups, not its docs in the stats, not its terms."""
     import os
 
     dst, src = str(tmp_path / "dst"), str(tmp_path / "src")

@@ -20,7 +20,6 @@ from alertsage_spark.index.segments import (
     build_segments,
     delete_docs,
     load_index,
-    refresh_stats,
 )
 from alertsage_spark.query import wand
 from alertsage_spark.query.oracle import BM25Oracle
@@ -46,7 +45,6 @@ def two_groups(spark, tmp_path_factory):
     build_segments(spark, a, da, n_shards=4, n_groups=1, build_id="A")
     build_segments(spark, b, db, n_shards=4, n_groups=1, build_id="B")
     append_group(spark, da, db)
-    refresh_stats(spark, da)
     docs = [(r["doc_id"], r["text"]) for r in a.union(b).collect()]
     oracle = BM25Oracle(docs)
     # delete the current top-2 of every query, from both groups

@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.segments import append_group, build_segments, load_index
+from alertsage_spark.query import wand
+from alertsage_spark.query.oracle import BM25Oracle
 from alertsage_spark.query.wand import wand_topk
 from alertsage_spark.synth import zipf_corpus
 
@@ -83,3 +85,51 @@ def test_append_staging_invisible_to_glob(spark, two_builds, tmp_path):
     assert sorted(
         d for d in os.listdir(seg_dir) if d.startswith("group=")
     ) == groups_before
+
+
+_WORDS = ["alpha", "beta", "gamma", "parseConfig", "read_buffer", "segmentMerge"]
+
+
+def _doc(i: int, extra: str = "") -> tuple[int, str]:
+    words = [_WORDS[(i * j) % len(_WORDS)] for j in range(1, 3 + i % 5)]
+    return i, " ".join(words + [extra] * (i % 3))
+
+
+@pytest.fixture(scope="module", params=["text", "code"])
+def appended_only(request, spark, tmp_path_factory):
+    """A 50-doc index plus a 20-doc group added by append_group and no
+    other call; ``newterm`` occurs only in the appended group."""
+    mode = request.param
+    root = tmp_path_factory.mktemp(f"append_only_{mode}")
+    base = [_doc(i) for i in range(50)]
+    added = [_doc(i, "newterm") for i in range(1_000, 1_020)]
+    da, db = str(root / "a"), str(root / "b")
+    for d, rows in ((da, base), (db, added)):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        build_segments(spark, df, d, n_shards=4, n_groups=1, mode=mode)
+    assert append_group(spark, da, db) == 1
+    return da, mode, BM25Oracle(base + added, mode=mode)
+
+
+@pytest.mark.parametrize("path", ["fast", "distributed", "unprepared"])
+def test_append_group_alone_serves_the_union(spark, appended_only, path):
+    """Stats derive from the pinned groups, so an appended group counts
+    at the next load with no refresh step: n_docs is the union's, and a
+    term held only by the appended group ranks as the oracle over the
+    union ranks it, on every serving path."""
+    d, mode, oracle = appended_only
+    idx = load_index(spark, d)
+    if path == "fast":
+        idx.prepare_for_queries()
+    elif path == "distributed":
+        idx.prepare_for_queries(collect_doclen_max=0)
+    wand.reset_serving_counters()
+    got = sorted(
+        (r["rank"], r["doc_id"], r["score"])
+        for r in wand_topk(spark, idx, [("q", "newterm alpha")], k=10).collect()
+    )
+    want = [(rank, doc, score) for doc, score, rank in oracle.topk("newterm alpha", k=10)]
+    assert got == want
+    assert idx.stats["n_docs"] == oracle.n_docs == 70
+    assert idx.stats["avgdl"] == oracle.avgdl
+    assert wand.SERVING_COUNTERS["fast_path"] == (path == "fast")

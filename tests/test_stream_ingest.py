@@ -10,10 +10,10 @@ import os
 
 import pytest
 
-from alertsage_spark.index.segments import load_index
+from alertsage_spark.index.segments import load_index, stream_committed_batch_ids
 from alertsage_spark.query.oracle import BM25Oracle
 from alertsage_spark.query.wand import wand_topk
-from alertsage_spark.streaming.ingest import committed_batch_ids, ingest_batch, stream_ingest
+from alertsage_spark.streaming.ingest import ingest_batch, stream_ingest
 from alertsage_spark.synth import zipf_corpus
 
 QUERIES = [("Q1", "t1 t2"), ("Q2", "t200 t5")]
@@ -66,7 +66,7 @@ def test_stream_ingest_and_restart(spark, tmp_path):
     _check_rank_identity(spark, idx_dir, rows1)
     n_groups_1 = len(glob.glob(os.path.join(idx_dir, "segments", "group=*")))
     assert n_groups_1 >= 1
-    batches_1 = committed_batch_ids(idx_dir)
+    batches_1 = stream_committed_batch_ids(idx_dir)
     assert batches_1
 
     # restart with NEW files against the same checkpoint: only the new
@@ -118,13 +118,13 @@ def test_redelivery_skip_survives_compaction(spark, tmp_path):
     )
     assert ingest_batch(spark, b1, 0, idx_dir, n_shards=2)
     assert ingest_batch(spark, b2, 1, idx_dir, n_shards=2)
-    assert committed_batch_ids(idx_dir) == {0, 1}
+    assert stream_committed_batch_ids(idx_dir) == {0, 1}
 
     merge_segments(spark, idx_dir, merged)
     # merged dir has ONE group and no per-group markers, but the sidecar
     # carries the lineage
     assert os.path.exists(os.path.join(merged, STREAM_SIDECAR))
-    assert committed_batch_ids(merged) == {0, 1}
+    assert stream_committed_batch_ids(merged) == {0, 1}
 
     # re-delivered batch 1 against the compacted index: skipped, docs
     # not double-counted
@@ -137,42 +137,35 @@ def test_redelivery_skip_survives_compaction(spark, tmp_path):
                         2, merged, n_shards=2) is True
     merged2 = str(tmp_path / "cmerged2")
     merge_segments(spark, merged, merged2)
-    assert committed_batch_ids(merged2) == {0, 1, 2}
+    assert stream_committed_batch_ids(merged2) == {0, 1, 2}
 
 
-def test_incremental_stats_match_full_recompute(spark, tmp_path):
-    """refresh_stats_incremental (O(vocab+batch)) must produce EXACTLY
-    the same stats.json and termstats as the full O(corpus) recompute —
-    all inputs are integer sums, so not even float drift is allowed."""
-    import json
-
+def test_ingested_stats_equal_fresh_build(spark, tmp_path):
+    """Two ingests and a delete: the loaded stats and termstats equal a
+    fresh build over both batches, and the delete leaves n_docs as it
+    was (tombstoned docs count until merge)."""
     from pyspark.sql import functions as F
 
-    from alertsage_spark.index.segments import IndexPaths, refresh_stats
+    from alertsage_spark.index.segments import build_segments, delete_docs
 
-    idx_dir = str(tmp_path / "inc")
+    def stats_and_terms(d):
+        idx = load_index(spark, d)
+        terms = sorted((r["term"], r["df"], r["cf"]) for r in idx.termstats.collect())
+        keys = ("n_docs", "sum_dl", "avgdl", "n_shards", "mode")
+        return {k: idx.stats[k] for k in keys}, terms
+
+    idx_dir, fresh = str(tmp_path / "inc"), str(tmp_path / "fresh")
     b1 = zipf_corpus(spark, 400, seed=41)
     b2 = (zipf_corpus(spark, 250, seed=42)
           .select((F.col("doc_id") + 400).alias("doc_id"), "text"))
     assert ingest_batch(spark, b1, 0, idx_dir, n_shards=4)
     assert ingest_batch(spark, b2, 1, idx_dir, n_shards=4)
-    paths = IndexPaths(idx_dir)
-    with open(paths.stats_json) as f:
-        stats_inc = json.load(f)
-    ts_inc = sorted(
-        (r["term"], int(r["df"]), int(r["cf"]))
-        for r in spark.read.parquet(paths.termstats).collect()
-    )
-    refresh_stats(spark, idx_dir)  # full recompute over every group
-    with open(paths.stats_json) as f:
-        stats_full = json.load(f)
-    ts_full = sorted(
-        (r["term"], int(r["df"]), int(r["cf"]))
-        for r in spark.read.parquet(paths.termstats).collect()
-    )
-    assert stats_inc == stats_full
-    assert ts_inc == ts_full
-    assert stats_full["n_docs"] == 650
+    build_segments(spark, b1.unionByName(b2), fresh, n_shards=4, n_groups=1)
+    want = stats_and_terms(fresh)
+    assert stats_and_terms(idx_dir) == want
+    assert want[0]["n_docs"] == 650
+    delete_docs(spark, idx_dir, [1, 2, 401])
+    assert stats_and_terms(idx_dir) == want
 
 
 def test_adopt_into_precreated_empty_dir(spark, tmp_path):
@@ -198,88 +191,6 @@ def test_adopt_refuses_nonempty_non_index_dir(spark, tmp_path):
         ingest_batch(spark, docs, 0, idx_dir, n_shards=2)
 
 
-def test_crash_between_commit_and_stats_is_repaired_on_redelivery(spark, tmp_path):
-    """A crash AFTER the group rename but BEFORE the stats refresh must
-    be repaired when Structured Streaming re-delivers the batch — the
-    marker skip alone would make the stats gap permanent."""
-    import json as _json
-
-    from alertsage_spark.streaming.ingest import _STATS_OK
-
-    idx_dir = str(tmp_path / "gap")
-    d1 = zipf_corpus(spark, 300, seed=9)
-    d2 = zipf_corpus(spark, 200, seed=10).selectExpr(
-        "doc_id + 1000 AS doc_id", "text"
-    )
-    assert ingest_batch(spark, d1, 0, idx_dir, n_shards=2)
-    assert ingest_batch(spark, d2, 1, idx_dir, n_shards=2)
-    good = _json.load(open(os.path.join(idx_dir, "stats.json")))
-
-    # simulate the crash window: batch 1's group committed (marker
-    # present) but its stats stamp missing and stats.json stale
-    groups = sorted(glob.glob(os.path.join(idx_dir, "segments", "group=*")))
-    os.remove(os.path.join(groups[-1], _STATS_OK))
-    stale = dict(good)
-    stale["n_docs"] = 300  # pretend batch 1 never reached the stats
-    with open(os.path.join(idx_dir, "stats.json"), "w") as f:
-        _json.dump(stale, f)
-
-    # re-delivery of batch 1: skipped (exactly-once) AND repaired
-    assert ingest_batch(spark, d2, 1, idx_dir, n_shards=2) is False
-    repaired = _json.load(open(os.path.join(idx_dir, "stats.json")))
-    assert repaired["n_docs"] == good["n_docs"] == 500
-    assert abs(repaired["avgdl"] - good["avgdl"]) < 1e-9
-    assert os.path.exists(os.path.join(groups[-1], _STATS_OK))
-
-
-def test_stats_gap_repaired_even_on_new_batch_id(spark, tmp_path):
-    """The direct batch-twin usage has no re-delivery guarantee: a crash
-    in the commit->stats gap followed by a NEW batch id must still
-    repair before the new batch's incremental merge compounds on the
-    gapped stats."""
-    import json as _json
-
-    from alertsage_spark.streaming.ingest import _STATS_OK
-
-    idx_dir = str(tmp_path / "gap2")
-    d1 = zipf_corpus(spark, 300, seed=21)
-    d2 = zipf_corpus(spark, 150, seed=22).selectExpr("doc_id + 1000 AS doc_id", "text")
-    d3 = zipf_corpus(spark, 100, seed=23).selectExpr("doc_id + 5000 AS doc_id", "text")
-    assert ingest_batch(spark, d1, 0, idx_dir, n_shards=2)
-    assert ingest_batch(spark, d2, 1, idx_dir, n_shards=2)
-    # simulate crash window on batch 1, then continue with batch 2
-    groups = sorted(glob.glob(os.path.join(idx_dir, "segments", "group=*")))
-    os.remove(os.path.join(groups[-1], _STATS_OK))
-    stats = _json.load(open(os.path.join(idx_dir, "stats.json")))
-    stats["n_docs"] = 300
-    with open(os.path.join(idx_dir, "stats.json"), "w") as f:
-        _json.dump(stats, f)
-    assert ingest_batch(spark, d3, 2, idx_dir, n_shards=2)
-    final = _json.load(open(os.path.join(idx_dir, "stats.json")))
-    assert final["n_docs"] == 550  # 300 + 150 (repaired) + 100
-
-
-def test_tombstone_group_does_not_trigger_stats_repair(spark, tmp_path):
-    """delete_docs groups carry no batch marker; their (deliberate)
-    missing stamp must not cause a full-corpus refresh on re-delivery —
-    and the LSM staleness contract (stats untouched until merge) must
-    survive the repair scoping."""
-    import json as _json
-
-    from alertsage_spark.index.segments import delete_docs
-
-    idx_dir = str(tmp_path / "tomb")
-    d1 = zipf_corpus(spark, 200, seed=24)
-    assert ingest_batch(spark, d1, 0, idx_dir, n_shards=2)
-    before = _json.load(open(os.path.join(idx_dir, "stats.json")))
-    delete_docs(spark, idx_dir, [1, 2, 3])
-    # re-delivery of batch 0: skipped, and NO repair fires (stats
-    # byte-identical — the tombstone group is out of repair scope)
-    assert ingest_batch(spark, d1, 0, idx_dir, n_shards=2) is False
-    after = _json.load(open(os.path.join(idx_dir, "stats.json")))
-    assert after == before
-
-
 def test_merge_into_reused_dir_clears_stale_sidecar(spark, tmp_path):
     """A merge destination that previously hosted a streamed index must
     not inherit its sidecar: stale committed-batch claims would make a
@@ -290,7 +201,7 @@ def test_merge_into_reused_dir_clears_stale_sidecar(spark, tmp_path):
     dst = str(tmp_path / "reused")
     # first life: streamed index at dst
     assert ingest_batch(spark, zipf_corpus(spark, 120, seed=71), 0, dst, n_shards=2)
-    assert committed_batch_ids(dst) == {0}
+    assert stream_committed_batch_ids(dst) == {0}
     import shutil
 
     shutil.rmtree(dst)
@@ -304,7 +215,7 @@ def test_merge_into_reused_dir_clears_stale_sidecar(spark, tmp_path):
     build_segments(spark, zipf_corpus(spark, 150, seed=72), src,
                    n_shards=2, n_groups=1)
     merge_segments(spark, src, dst)
-    assert committed_batch_ids(dst) == set()
+    assert stream_committed_batch_ids(dst) == set()
     # batch 0 against the merged index must INGEST, not be skipped
     assert ingest_batch(spark, zipf_corpus(spark, 50, seed=73).selectExpr(
         "doc_id + 5000 AS doc_id", "text"), 0, dst, n_shards=2) is True

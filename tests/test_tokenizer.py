@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from alertsage_spark.tokenizer import (
     duckdb_tokens_sql,
     tokenize_col,
-    tokenize_pandas_udf,
     tokenize_py,
 )
+from tokenizer_oracle import tokenize_pandas_udf
 
 CASES = [
     "User received an email claiming to be from IT asking them to verify",
