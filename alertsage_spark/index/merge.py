@@ -66,6 +66,7 @@ from alertsage_spark.index.segments import (
     load_index,
     persist_stream_batch_ids,
     stream_committed_batch_ids,
+    tombstoned_docs,
 )
 
 _EMPTY = np.empty(0, dtype=np.int64)
@@ -80,9 +81,7 @@ def _merge_shard(key, tbl):
     #    physically dropped from doclens and postings below, and the
     #    tombstone rows themselves are not re-emitted — after the merge
     #    the deletion is durable and derived stats no longer count them
-    deleted = np.unique(np.concatenate(
-        [_EMPTY] + [decode_doclen_row(r)[0] for r in rows if r["term"] == TOMBSTONE_TERM]
-    ))
+    deleted = tombstoned_docs(r for r in rows if r["term"] == TOMBSTONE_TERM)
     # 1) merge the shard's doclen rows; re-ingested docs keep MAX dl (the
     #    same deterministic rule as the max-tf posting merge)
     dl_parts = [decode_doclen_row(r) for r in rows if r["term"] is None]

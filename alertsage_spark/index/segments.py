@@ -49,17 +49,21 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
 import tempfile
 import time
+from collections import OrderedDict
+from collections.abc import Mapping
 from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import partial
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -588,6 +592,12 @@ def merged_doclen(rows) -> tuple[np.ndarray, np.ndarray]:
     return docs[order], dls[order]
 
 
+def tombstoned_docs(rows) -> np.ndarray:
+    """Sorted doc ids deleted by one shard's tombstone rows."""
+    parts = [decode_doclen_row(r)[0] for r in rows]
+    return np.unique(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
+
+
 def _group_metric_exprs():
     """Aggregates for one group's manifest row, observed during the
     group's write job (build_segments)."""
@@ -852,6 +862,183 @@ def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:
 # collects to the driver (~30 B/term)
 COLLECT_TERMSTATS_MAX = 2_000_000
 
+# driver byte budget of the fast path's term-row store (TermRowStore):
+# Arrow bytes of the serving columns held. An index whose serving
+# columns fit is snapshotted whole at prepare_for_queries; a larger one
+# fills the store per miss and evicts by bytes.
+TERM_CACHE_MAX_BYTES = 12 * 2**20
+
+# the columns the fast path reads (cf_local and the group column stay on
+# the executors)
+_SERVING_COLS = [
+    "shard_id", "term", "df_local", "n_postings", "doc_bytes", "tf_bytes",
+    "block_last_docs", "block_max_tfs", "block_min_dls",
+    "block_doc_offsets", "block_tf_offsets",
+]
+
+
+def _serving_row_bytes():
+    """Arrow bytes of one row's serving columns: 50 B of fixed-width
+    values, offsets and validity bits, plus the variable-width data (an
+    upper bound of what toArrow() holds for the row)."""
+    return (
+        F.lit(50)
+        + F.coalesce(F.length("term"), F.lit(0))
+        + F.length("doc_bytes")
+        + F.length("tf_bytes")
+        + 8 * (F.size("block_last_docs") + F.size("block_max_tfs") + F.size("block_min_dls"))
+        + 4 * (F.size("block_doc_offsets") + F.size("block_tf_offsets"))
+    )
+
+
+def _term_sorted_arrow(rows: DataFrame) -> pa.Table:
+    """``rows``' serving columns as one Arrow table sorted by term, nulls
+    (the doclen rows) first, then the tombstone rows (TOMBSTONE_TERM sorts
+    below every token). The sort runs in the JVM, in the collect's own
+    job, so the driver never holds a second, re-ordered copy."""
+    return (
+        rows.select(_SERVING_COLS)
+        .coalesce(1)
+        .sortWithinPartitions(F.col("term").asc_nulls_first())
+        .toArrow()
+    )
+
+
+def _collect_df_map(seg: DataFrame) -> dict[str, int] | None:
+    """term -> df as one per-term sum of df_local, collected as Arrow;
+    None when the vocabulary is over COLLECT_TERMSTATS_MAX."""
+    tbl = (
+        seg.filter(F.col("term").isNotNull() & (F.col("term") != TOMBSTONE_TERM))
+        .groupBy("term")
+        .agg(F.sum("df_local").alias("df"))
+        .limit(COLLECT_TERMSTATS_MAX + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > COLLECT_TERMSTATS_MAX:
+        return None
+    return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+
+
+def _split_meta(tbl: pa.Table) -> tuple[list[dict], pa.Table]:
+    """A term-sorted table -> (its doclen and tombstone rows as dicts,
+    the term rows as a zero-copy slice)."""
+    term = tbl.column("term")
+    n_meta = term.null_count + int(pc.sum(pc.equal(term, TOMBSTONE_TERM)).as_py() or 0)
+    return tbl.slice(0, n_meta).to_pylist(), tbl.slice(n_meta)
+
+
+def _shard_doclen_maps(meta_rows: list[dict]) -> tuple[dict, dict]:
+    """Doclen and tombstone rows -> (shard_id -> (sorted doc_ids, dls),
+    shard_id -> sorted tombstoned doc ids)."""
+    dl_rows: dict[int, list] = {}
+    tomb_rows: dict[int, list] = {}
+    for r in meta_rows:
+        out = dl_rows if r["term"] is None else tomb_rows
+        out.setdefault(int(r["shard_id"]), []).append(r)
+    return (
+        {sid: merged_doclen(rs) for sid, rs in dl_rows.items()},
+        {sid: tombstoned_docs(rs) for sid, rs in tomb_rows.items()},
+    )
+
+
+class _TermRuns:
+    """Term rows sorted by term, found per term by binary search over the
+    distinct terms: only those are decoded to Python, the rows of a term
+    only when asked for."""
+
+    def __init__(self, tbl: pa.Table):
+        self.table = tbl
+        n = tbl.num_rows
+        term = tbl.column("term")
+        starts = np.zeros(0, dtype=np.int64)
+        if n:
+            change = pc.not_equal(term.slice(1), term.slice(0, n - 1))
+            starts = np.flatnonzero(
+                np.concatenate([[True], change.to_numpy(zero_copy_only=False)])
+            )
+        self.terms = term.take(starts).to_pylist()
+        self.bounds = np.append(starts, n)
+        self.nbytes = tbl.get_total_buffer_size()
+
+    def rows(self, t: str) -> list[dict]:
+        i = bisect.bisect_left(self.terms, t)
+        if i == len(self.terms) or self.terms[i] != t:
+            return []
+        s, e = int(self.bounds[i]), int(self.bounds[i + 1])
+        return self.table.slice(s, e - s).to_pylist()
+
+    def df_map(self) -> dict[str, int]:
+        """term -> df: df_local summed over each term's run."""
+        if not self.terms:
+            return {}
+        dfs = np.add.reduceat(
+            self.table.column("df_local").to_numpy().astype(np.int64), self.bounds[:-1]
+        )
+        return dict(zip(self.terms, dfs.tolist()))
+
+
+class TermRowStore(Mapping):
+    """The fast path's driver store of segment rows: term -> that term's
+    rows (one per shard and group holding it) as ``to_pylist()`` dicts,
+    the row type the distributed scorer hands the kernels. Rows are held
+    as term-sorted Arrow tables, at most ``budget`` bytes of them.
+
+    A complete snapshot (prepare_for_queries, when the index's serving
+    columns fit the budget) holds every term's rows, so every term is
+    ``in`` it, an absent one with no rows. Otherwise ``rows()`` adds one
+    table per call with the rows of the terms not yet held (an absent
+    term held with none), and evicts whole tables, least recently used
+    first, until the bytes held fit the budget again."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.bytes_held = 0
+        self._snapshot: _TermRuns | None = None
+        # fill -> the terms it was fetched for, least recently used first
+        self._fills: OrderedDict[_TermRuns, list[str]] = OrderedDict()
+        self._where: dict[str, _TermRuns] = {}  # held term -> its fill
+
+    @property
+    def complete(self) -> bool:
+        return self._snapshot is not None
+
+    def hold_snapshot(self, runs: _TermRuns) -> None:
+        self._snapshot = runs
+        self.bytes_held = runs.nbytes
+
+    def __contains__(self, t) -> bool:
+        return self.complete or t in self._where
+
+    def __getitem__(self, t: str) -> list[dict]:
+        if self.complete:
+            return self._snapshot.rows(t)
+        runs = self._where[t]
+        self._fills.move_to_end(runs)
+        return runs.rows(t)
+
+    def __iter__(self):
+        return iter(self._snapshot.terms if self.complete else list(self._where))
+
+    def __len__(self) -> int:
+        return len(self._snapshot.terms) if self.complete else len(self._where)
+
+    def rows(self, terms: list[str], fetch) -> dict[str, list[dict]]:
+        """term -> rows for ``terms``; ``fetch(missing)`` returns the term
+        rows of the terms not held as one term-sorted Arrow table."""
+        missing = [t for t in terms if t not in self]
+        if missing:
+            runs = _TermRuns(fetch(missing))
+            self._fills[runs] = missing
+            self._where.update(dict.fromkeys(missing, runs))
+            self.bytes_held += runs.nbytes
+        out = {t: self[t] for t in terms}
+        while self.bytes_held > self.budget and self._fills:
+            runs, held = self._fills.popitem(last=False)
+            for t in held:
+                del self._where[t]
+            self.bytes_held -= runs.nbytes
+        return out
+
 
 @dataclass
 class SegmentIndex:
@@ -859,15 +1046,16 @@ class SegmentIndex:
     termstats: DataFrame  # term, df, cf: a lazy agg over ``segments``
     stats: dict  # derived from ``segments`` at load_index
     paths: IndexPaths
-    df_map: dict | None = None  # term -> df, set by prepare_for_queries
+    # set by prepare_for_queries (serving mode):
+    df_map: dict | None = None  # term -> df
     dl_map: dict | None = None  # shard_id -> (sorted doc_ids, dls)
+    deleted_map: dict | None = None  # shard_id -> sorted tombstoned doc ids
     serving_groups: tuple | None = None  # on-disk group snapshot at load/prepare time
-    # serving-mode LRU of collected segment rows keyed by term (misses
-    # cached as empty lists); query/wand.py fills and evicts it. Bounded
-    # by postings count, invalidated with the whole snapshot by
-    # assert_serving_fresh (mutations force a re-load -> fresh cache).
-    term_rows_cache: dict | None = None
-    tomb_rows_cache: list | None = None  # tombstone rows, collected once
+    # the fast path's TermRowStore: the whole snapshot's term rows when
+    # they fit TERM_CACHE_MAX_BYTES, else filled per miss and evicted by
+    # bytes. Invalidated with the whole snapshot by assert_serving_fresh
+    # (mutations force a re-load -> a fresh store).
+    term_rows_cache: TermRowStore | None = None
 
     def _group_dirs(self) -> tuple:
         return tuple(self.paths.group_dirs())
@@ -899,15 +1087,23 @@ class SegmentIndex:
         self, collect_doclen_max: int = 10_000_000
     ) -> "SegmentIndex":
         """Serving-mode warm-up: pin the segment rows in executor memory
-        and, when small enough to hold on the driver, collect
-        (a) the term->df table (<= COLLECT_TERMSTATS_MAX terms,
-        ~30 B/term) so per-query idf lookups stop costing a Spark job,
-        and (b) the per-shard doc-length arrays (<= collect_doclen_max
-        docs, 16 B/doc) which unlock the driver-local fast path for
-        selective queries (query/wand.py). At web scale (10^8+ term
-        vocabularies, 10^12 docs) both collects skip automatically and
-        queries use the distributed path; segment caching remains valid
-        at any scale because Spark caches per-partition and evicts LRU."""
+        and, when the index has at most ``collect_doclen_max`` docs, hold
+        on the driver what the driver-local fast path (query/wand.py)
+        reads: the per-shard doc-length arrays (16 B/doc), the tombstoned
+        doc ids and the TermRowStore.
+
+        When the serving columns also fit TERM_CACHE_MAX_BYTES (summed
+        in the job that materializes the cache), ONE more job pulls every
+        row as a term-sorted Arrow table: the doclen and tombstone maps,
+        the term->df table and a complete store all come from it, and a
+        prepared query runs no Spark job. Otherwise the term->df table
+        (<= COLLECT_TERMSTATS_MAX terms, ~30 B/term) is one per-term sum
+        collected as Arrow, the doclen and tombstone rows one more
+        collect, and the store fills per miss. At web scale (10^8+ term
+        vocabularies, 10^12 docs) the driver collects skip automatically
+        and queries use the distributed path; segment caching remains
+        valid at any scale because Spark caches per-partition and evicts
+        LRU."""
         # ADVICE r04: never RE-snapshot here. The parquet path list was
         # pinned at load_index time; re-listing the directory would
         # silently adopt a group appended/deleted between load_index()
@@ -920,26 +1116,41 @@ class SegmentIndex:
             self.serving_groups = self._group_dirs()
         else:
             self.assert_serving_fresh()
-        self.term_rows_cache = {}
-        self.segments.cache().count()
-        # termstats aggregates the cached rows: one collect, dropped when
-        # the vocabulary is over the cap
-        rows = self.termstats.select("term", "df").limit(COLLECT_TERMSTATS_MAX + 1).collect()
-        if len(rows) <= COLLECT_TERMSTATS_MAX:
-            self.df_map = {r["term"]: int(r["df"]) for r in rows}
-        if int(self.stats.get("n_docs", 0)) <= collect_doclen_max:
-            by_shard: dict[int, list] = {}
-            for r in self.doclen_rows.collect():
-                by_shard.setdefault(int(r["shard_id"]), []).append(r)
-            self.dl_map = {sid: merged_doclen(rs) for sid, rs in by_shard.items()}
+        self.term_rows_cache = store = TermRowStore(TERM_CACHE_MAX_BYTES)
+        seg = self.segments.cache()
+        if int(self.stats.get("n_docs", 0)) > collect_doclen_max:
+            self.df_map = _collect_df_map(seg)  # its scan fills the cache
+            return self
+        serving_bytes = seg.agg(F.sum(_serving_row_bytes())).collect()[0][0] or 0
+        if serving_bytes <= store.budget:
+            meta, term_rows = _split_meta(_term_sorted_arrow(seg))
+            runs = _TermRuns(term_rows)
+            store.hold_snapshot(runs)
+            self.df_map = runs.df_map()
+        else:
+            self.df_map = _collect_df_map(seg)
+            meta = _term_sorted_arrow(
+                seg.filter(F.col("term").isNull() | (F.col("term") == TOMBSTONE_TERM))
+            ).to_pylist()
+        self.dl_map, self.deleted_map = _shard_doclen_maps(meta)
         return self
+
+    def term_rows(self, terms: list[str]) -> dict[str, list[dict]]:
+        """term -> its segment rows from the TermRowStore; terms it does
+        not hold are fetched from the cached segment rows in one job."""
+        return self.term_rows_cache.rows(
+            terms,
+            lambda missing: _term_sorted_arrow(
+                self.segments.filter(F.col("term").isin(missing))
+            ),
+        )
 
     def unpersist(self) -> None:
         """Release what prepare_for_queries() pinned: the cached segment
-        rows and the driver-side df/doclen maps and term-row caches."""
+        rows and the driver-side maps and term-row store."""
         self.segments.unpersist()
-        self.df_map = self.dl_map = None
-        self.term_rows_cache = self.tomb_rows_cache = None
+        self.df_map = self.dl_map = self.deleted_map = None
+        self.term_rows_cache = None
 
     def postings_df(self, terms: list[str] | None = None) -> DataFrame:
         """Decoded (term, doc_id, tf) postings — the RELATIONAL view of

@@ -12,11 +12,16 @@ Two serving paths, one scoring loop:
           groupBy(shard_id) -> applyInArrow(scorer)
 
   * driver fast path (serving mode, few matched postings): the matched
-    rows come from the driver's term-row LRU and the doc lengths from
-    the pre-collected ``dl_map``; no Spark job until the result.
+    rows come from the index's TermRowStore (index/segments.py) — one
+    term-sorted Arrow snapshot of every segment row, searched per term,
+    when the index fits its byte budget, else term-sorted Arrow fills per
+    miss evicted by bytes — and the doc lengths and tombstones from the
+    maps prepare_for_queries built; a prepared query over a snapshot
+    runs no Spark job.
 
-Both hand one shard's rows per term, doc lengths and tombstones to
-``_score_shard`` (every query of the batch against that shard), and
+Both hand one shard's rows per term (``to_pylist()`` dicts on both
+paths), doc lengths and tombstones to ``_score_shard`` (every query of
+the batch against that shard), and
 both rank the per-shard top-k in ``_ranked_topk`` (round(score,6)
 desc, doc_id asc). The distributed path uses that driver merge when
 n_shards * k * |Q| <= DRIVER_MERGE_MAX_ROWS; above that budget a
@@ -71,8 +76,8 @@ from alertsage_spark.index.compress import (
 from alertsage_spark.index.segments import (
     TOMBSTONE_TERM,
     SegmentIndex,
-    decode_doclen_row,
     merged_doclen,
+    tombstoned_docs,
 )
 from alertsage_spark.tokenizer import code_query_terms, tokenize_py
 
@@ -352,12 +357,6 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
     )
 
 
-def _tombstoned(tomb_rows: list) -> np.ndarray:
-    """Sorted doc ids deleted in one shard, from its tombstone rows."""
-    parts = [decode_doclen_row(r)[0] for r in tomb_rows]
-    return np.unique(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
-
-
 def _score_shard(
     query_terms: dict[str, list[str]],
     by_term: dict[str, list],
@@ -437,24 +436,21 @@ def _local_topk(
     When the matched-postings volume is tiny relative to the corpus, a
     full Spark job (one task per shard through Python workers) is pure
     scheduling overhead: instead, take ONLY the matched segment rows from
-    the term-row LRU (_cached_term_rows), run _score_shard per shard in
-    the driver against the pre-collected doc-length arrays, and rank
-    through the same final merge as the distributed path."""
+    the index's TermRowStore, run _score_shard per shard in the driver
+    against the doc-length and tombstone maps of prepare_for_queries, and
+    rank through the same final merge as the distributed path."""
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
-    term_rows, tomb_rows = _cached_term_rows(index, all_terms)
     by_shard: dict[int, dict[str, list]] = {}
-    for t, rows_t in term_rows.items():
+    for t, rows_t in index.term_rows(all_terms).items():
         for r in rows_t:
-            by_shard.setdefault(int(r["shard_id"]), {}).setdefault(t, []).append(r)
-    tombs: dict[int, list] = {}
-    for r in tomb_rows:
-        tombs.setdefault(int(r["shard_id"]), []).append(r)
+            by_shard.setdefault(r["shard_id"], {}).setdefault(t, []).append(r)
+    no_deletes = np.empty(0, dtype=np.int64)
     hits = (
         hit
         for sid, by_term in by_shard.items()
         for hit in _score_shard(
             query_terms, by_term, idf_map, index.dl_map[sid],
-            _tombstoned(tombs.get(sid, [])), k, algo, avgdl,
+            index.deleted_map.get(sid, no_deletes), k, algo, avgdl,
         )
     )
     return _ranked_topk(spark, query_terms, hits, k)
@@ -468,62 +464,6 @@ FAST_PATH_MAX_POSTINGS = 2_000_000
 # ceiling on n_shards * k * |Q| for the distributed path's driver-side
 # final merge (~40 B/row); above it the global window rank runs instead
 DRIVER_MERGE_MAX_ROWS = 200_000
-
-# serving LRU budget: total encoded postings held in the driver's
-# term-row cache (compressed rows, ~1.5 B/posting -> ~12 MB at the cap).
-# Evicting by postings rather than term count keeps the bound meaningful
-# under mixed rare/hot terms.
-TERM_CACHE_MAX_POSTINGS = 8_000_000
-
-
-def _cached_term_rows(
-    index: SegmentIndex, all_terms: list[str]
-) -> tuple[dict[str, list], list]:
-    """Serving-mode LRU over collected segment rows, keyed by term.
-    Every fast-path query previously re-collected its matched rows from
-    the cached DataFrame — a per-query JVM->driver transfer that was the
-    fast path's latency ceiling (r3 verdict). Now only terms absent from
-    the cache (misses cached as [] too) pay a collect; tombstone rows
-    are collected once per snapshot. Staleness is inherited from the
-    serving snapshot: any on-disk mutation raises in wand_topk before
-    this cache is consulted."""
-    cache = index.term_rows_cache
-    if cache is None:
-        cache = index.term_rows_cache = {}
-    missing = [t for t in all_terms if t not in cache]
-    need_tomb = index.tomb_rows_cache is None
-    if missing or need_tomb:
-        cond = F.col("term").isin(missing) if missing else F.lit(False)
-        if need_tomb:
-            cond = cond | (F.col("term") == TOMBSTONE_TERM)
-        fetched: dict[str, list] = {t: [] for t in missing}
-        tombs: list = []
-        for r in index.segments.filter(cond).collect():
-            if r["term"] == TOMBSTONE_TERM:
-                tombs.append(r)
-            else:
-                fetched[r["term"]].append(r)
-        if need_tomb:
-            index.tomb_rows_cache = tombs
-        for t in missing:
-            cache[t] = fetched[t]
-        # LRU eviction by total postings (dict preserves insertion order;
-        # hits below reinsert to mark recency)
-        total = sum(
-            int(r["n_postings"]) for rows_t in cache.values() for r in rows_t
-        )
-        while total > TERM_CACHE_MAX_POSTINGS and len(cache) > len(all_terms):
-            victim = next(iter(cache))
-            if victim in all_terms:  # keep this query's working set
-                cache[victim] = cache.pop(victim)
-                continue
-            total -= sum(int(r["n_postings"]) for r in cache.pop(victim))
-    out: dict[str, list] = {}
-    for t in all_terms:
-        rows_t = cache.pop(t)  # reinsert = LRU touch
-        cache[t] = rows_t
-        out[t] = rows_t
-    return out, index.tomb_rows_cache or []
 
 # which path served each wand_topk call — bench reads this so a latency
 # regression is diagnosable (fast-path miss vs slow fast-path).
@@ -569,7 +509,7 @@ def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
             return out_schema.empty_table()
         hits = list(_score_shard(
             query_terms, by_term, idf_map, merged_doclen(dl_rows),
-            _tombstoned(tomb_rows), k, algo, avgdl,
+            tombstoned_docs(tomb_rows), k, algo, avgdl,
         ))
         q, d, s = zip(*hits) if hits else ((), (), ())
         return pa.table({"query_id": q, "doc_id": d, "score": s}, schema=out_schema)

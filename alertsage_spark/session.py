@@ -155,6 +155,16 @@ def get_spark(
     not built here (the one handed to ``__spark_entry__.entry``, the
     ``spark-submit --py-files`` launch in ``scripts/build_and_query.py``)
     run the stock daemon, unchanged.
+
+    DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.
+    enabled=false``). With it on, every Column call (``F.col``, ``isin``,
+    ``|``, ``==``: a query plan makes dozens) walks the Python stack,
+    makes several py4j round trips and tries ``import IPython`` and
+    ``import ipykernel`` to name the call site; where IPython is
+    installed the first call loads it (~26 MB of driver memory) and every
+    later call retries the failing ipykernel import. What is lost: a
+    DataFrame error's query context no longer names the Python file and
+    line that built the failing expression (the JVM-side context stays).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -185,6 +195,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "alertsage_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     if extra_conf:

@@ -120,47 +120,122 @@ def test_fast_path_identical_to_distributed(spark, seg_index, doc_oracle):
         assert [h[0] for h in hits] == [e[0] for e in expected], qid
 
 
+class _Poison:
+    """Stands in for ``SegmentIndex.segments``: any use raises."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"fast-path query touched the segments DataFrame ({name})")
+
+
 def test_fast_path_repeat_query_serves_from_term_cache(spark, seg_index):
-    """Second identical query must not touch the JVM at all for postings:
-    the serving LRU (term_rows_cache) holds the collected rows, so the
-    fast path works even if the segments DataFrame is unusable."""
-    from alertsage_spark.index.segments import load_index
-
+    """A prepared index that fits the store's byte budget is snapshotted
+    whole at prepare: even the FIRST query reads no segment rows from
+    the JVM, so it works with the segments DataFrame unusable."""
     prepared = load_index(spark, str(seg_index.paths.root)).prepare_for_queries()
+    assert prepared.term_rows_cache.complete
     q = [("R1", "data stream merge join window")]
-    first = _collect(wand_topk(spark, prepared, q, k=K, algo="auto"))
-    assert first
-
-    class _Poison:
-        def filter(self, *_a, **_k):
-            raise AssertionError("repeat query hit the JVM for postings")
-
+    want = _collect(wand_topk(spark, seg_index, q, k=K, algo="auto"))
     real_segments = prepared.segments
     prepared.segments = _Poison()
     try:
+        first = _collect(wand_topk(spark, prepared, q, k=K, algo="auto"))
         second = _collect(wand_topk(spark, prepared, q, k=K, algo="auto"))
     finally:
         prepared.segments = real_segments
-    assert second == first
+    assert first and first == second == want
 
 
-def test_term_cache_lru_evicts_by_postings_budget(spark, seg_index):
+def test_term_store_fills_and_evicts_by_byte_budget(spark, seg_index, doc_oracle, monkeypatch):
+    """Under a byte budget too small for the snapshot, prepare does not
+    prefill; every query still takes the fast path, filling the store
+    with the rows of its missing terms, stays rank-identical to the
+    distributed scorer, and the bytes held never exceed the budget."""
+    import random
+
+    import alertsage_spark.index.segments as S
     import alertsage_spark.query.wand as W
-    from alertsage_spark.index.segments import load_index
+
+    budget = 40_000
+    monkeypatch.setattr(S, "TERM_CACHE_MAX_BYTES", budget)
+    prepared = load_index(spark, str(seg_index.paths.root)).prepare_for_queries()
+    store = prepared.term_rows_cache
+    assert not store.complete and len(store) == 0 and store.bytes_held == 0
+    rng = random.Random(11)
+    vocab = sorted(doc_oracle.df)
+    queries = [(f"B{i}", " ".join(rng.sample(vocab, 3))) for i in range(24)]
+    queries += queries[:4]  # repeats: served from what is still held
+    want = _collect(wand_topk(spark, seg_index, queries, k=K, algo="auto"))
+    asked: set[str] = set()
+    held_ever = 0
+    W.reset_serving_counters()
+    for qid, text in queries:
+        got = _collect(wand_topk(spark, prepared, [(qid, text)], k=K, algo="auto"))
+        assert got.get(qid, []) == want.get(qid, []), qid
+        assert store.bytes_held <= budget, (qid, store.bytes_held)
+        asked.update(text.split())
+        held_ever = max(held_ever, len(store))
+    assert W.SERVING_COUNTERS["fast_path"] == len(queries)
+    assert W.SERVING_COUNTERS["distributed"] == 0
+    assert held_ever > 0  # fills were held ...
+    assert len(store) < len(asked)  # ... and evicted by bytes
+
+
+def test_term_store_mapping_contract(spark, seg_index):
+    """perfbench's traced helpers read ``term_rows_cache`` as a Mapping:
+    truthy after prepare, ``t in cache`` for every indexed term and
+    ``cache[t]`` rows that compress.decode_posting_list decodes."""
+    from alertsage_spark.index.compress import decode_posting_list
 
     prepared = load_index(spark, str(seg_index.paths.root)).prepare_for_queries()
-    wand_topk(spark, prepared, [("A", "data stream merge")], k=K)
-    assert prepared.term_rows_cache
-    old_cap = W.TERM_CACHE_MAX_POSTINGS
-    W.TERM_CACHE_MAX_POSTINGS = 0  # force eviction of everything non-current
-    try:
-        wand_topk(spark, prepared, [("B", "window join")], k=K)
-        from alertsage_spark.tokenizer import tokenize_py
+    cache = prepared.term_rows_cache or {}
+    assert cache and cache is prepared.term_rows_cache
+    terms = sorted(prepared.df_map)
+    assert terms and all(t in cache for t in terms)
+    assert sorted(cache) == terms and len(cache) == len(terms)
+    for t in terms[:: max(1, len(terms) // 50)]:
+        rows = cache[t]
+        assert sum(r["df_local"] for r in rows) == prepared.df_map[t]
+        for r in rows:
+            docs, tfs = decode_posting_list(r)
+            assert len(docs) == len(tfs) == r["n_postings"] > 0
+    assert cache["zzzznotaterm"] == []
 
-        keep = set(tokenize_py("window join", mode="text"))
-        assert set(prepared.term_rows_cache) <= keep
+
+def test_prepared_code_query_runs_no_spark_job(spark, code_index, tmp_path):
+    """A prepared 2-group code index with tombstones answers a cold query
+    without one Spark job, with the rows of the distributed path
+    (collect_doclen_max=0) and of the oracle (stats still count the
+    deleted docs until a merge; they only leave the results)."""
+    import shutil
+
+    from alertsage_spark.index.segments import delete_docs
+
+    src, docs = code_index
+    d = str(tmp_path / "idx")
+    shutil.copytree(src, d)
+    queries = [("Q1", "parseConfig spark"), ("Q2", "flushQueu blockMax"),
+               ("Q3", "read_buffer deltaEncode")]
+    oracle = BM25Oracle(docs, mode="code")
+    victims = {oracle.topk(text, k=2)[0][0] for _q, text in queries}
+    delete_docs(spark, d, sorted(victims))
+    fast = load_index(spark, d).prepare_for_queries()
+    dist = load_index(spark, d).prepare_for_queries(collect_doclen_max=0)
+    assert fast.term_rows_cache.complete and any(len(v) for v in fast.deleted_map.values())
+    sc = spark.sparkContext
+    sc.setJobGroup("cold_fast_query", "cold fast-path query")
+    try:
+        df = wand_topk(spark, fast, queries, k=8, algo="auto")
     finally:
-        W.TERM_CACHE_MAX_POSTINGS = old_cap
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("cold_fast_query") == []
+    got = _collect(df)
+    assert got == _collect(wand_topk(spark, dist, queries, k=8, algo="auto"))
+    for qid, text in queries:
+        expected = [h for h in oracle.topk(text, k=8 + len(victims)) if h[0] not in victims][:8]
+        hits = got.get(qid, [])
+        assert [h[0] for h in hits] == [e[0] for e in expected], qid
+        for h, e in zip(hits, expected):
+            assert abs(h[1] - e[1]) <= 1e-6, qid
 
 
 SERVING_MODES = ["fast", "distributed", "unprepared"]
