@@ -3120,9 +3120,9 @@ def ft_stream_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming-ingestion certificate: the SAME 18-query BM25
     oracle as the flagship entry, but the index is built through
     Structured Streaming micro-batches (exactly-once marker-committed
-    group appends + stats refresh, streaming/ingest.py). A hash-green
-    row proves the streamed index is result-identical to the batch
-    build — ingestion path cannot change answers."""
+    group appends, stats derived at load: streaming/ingest.py). A
+    hash-green row proves the streamed index is result-identical to the
+    batch build — ingestion path cannot change answers."""
     from alertsage_spark.query.wand import wand_topk
 
     idx = _stream_index_for(spark, sf_dir)

@@ -11,7 +11,8 @@ task first merges ITS shard's doclen rows (partition-local — no
 driver-side corpus map, no broadcast), then decodes every term row with
 compress.decode_posting_list, keeps max-tf per (term, doc) with one
 lexsort over the whole shard, and re-encodes through the build's shard
-encoder (segments._encode_shard), so merged rows are byte-identical to
+encoder (segments._encode_shard) and writes through the build's group
+writer (segments._write_group), so merged rows are byte-identical to
 a fresh build of the surviving docs. Document-sharding
 keeps this balanced: a hot term contributes at most one run per
 (group, shard), and task memory is corpus/n_shards — the same memory
@@ -61,6 +62,7 @@ from alertsage_spark.index.segments import (
     _rename_into_place,
     _shard_key,
     _staged_sibling,
+    _write_group,
     _write_json,
     decode_doclen_row,
     load_index,
@@ -154,9 +156,7 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
             merged = idx.segments.groupBy("shard_id").applyInArrow(
                 _merge_shard, schema=SEGMENT_SCHEMA
             )
-            merged.sortWithinPartitions("term").write.mode("overwrite").parquet(
-                paths.group_dir(0)
-            )
+            _write_group(merged, paths.group_dir(0))
         _write_json(paths.config_json, config)
         if os.path.exists(src.manifest):
             spark.read.parquet(src.manifest).write.parquet(paths.manifest)

@@ -38,13 +38,15 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
     half-written uncommitted group directory is overwritten
     idempotently, so the final index is byte-identical to an
     uninterrupted build (asserted in tests/test_segments.py).
-  * **one LSM commit path**: every later group (delete_docs,
-    append_group, streaming ingest) lands through _land_group's
-    staging dir + rename; a build becomes loadable when its finalize
-    renames _build_config.json to build_config.json; every JSON file is
-    written by _write_json (temp + rename); a whole new index (a merge's
-    output, a stream's first batch) is built in a _staged_sibling and
-    committed by _rename_into_place.
+  * **one group writer, one LSM commit path**: build, merge and
+    streaming ingest write a group's files through _write_group; every
+    later group (delete_docs, append_group, streaming ingest) lands
+    through _land_group's staging dir + rename; a build becomes
+    loadable when its finalize renames _build_config.json to
+    build_config.json; every JSON file is written by _write_json (temp
+    + rename); a whole new index (a merge's output, a stream's first
+    batch) is built in a _staged_sibling and committed by
+    _rename_into_place.
 """
 
 from __future__ import annotations
@@ -75,6 +77,7 @@ from alertsage_spark.index.compress import (
     varbyte_decode,
     varbyte_encode,
 )
+from alertsage_spark.session import local_df
 from alertsage_spark.tokenizer import tokenize_arrow_base, vocab_trigram_mapping
 
 SEGMENT_SCHEMA = (
@@ -574,6 +577,17 @@ def _segment_builder_arrow(mode: str = "text"):
     return fn
 
 
+def _segment_rows(docs: DataFrame, n_shards: int, mode: str) -> DataFrame:
+    """The segment rows of (doc_id, text) docs: each doc routed to its
+    shard, one applyInArrow task per shard, so the output is already
+    partitioned by shard_id."""
+    return (
+        docs.withColumn("shard_id", shard_col(F.col("doc_id"), n_shards))
+        .groupBy("shard_id")
+        .applyInArrow(_segment_builder_arrow(mode), schema=SEGMENT_SCHEMA)
+    )
+
+
 def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
     """(sorted doc_ids int64, dls int64) from a doclen-format row (the
     term=NULL doclen row or a tombstone row)."""
@@ -600,7 +614,7 @@ def tombstoned_docs(rows) -> np.ndarray:
 
 def _group_metric_exprs():
     """Aggregates for one group's manifest row, observed during the
-    group's write job (build_segments)."""
+    group's write job (_write_group)."""
     return [
         F.count(F.when(F.col("term").isNotNull(), 1)).alias("n_terms"),
         F.sum(F.when(F.col("term").isNotNull(), F.col("n_postings"))).alias("n_postings"),
@@ -608,6 +622,19 @@ def _group_metric_exprs():
         F.sum(F.length("doc_bytes")).alias("doc_bytes"),
         F.sum(F.length("tf_bytes")).alias("tf_bytes"),
     ]
+
+
+def _write_group(rows: DataFrame, group_dir: str) -> dict:
+    """The one writer of a segment group's parquet files (build, merge
+    and stream ingest): ``rows`` (segment rows, already partitioned by
+    shard_id) sorted by term within each file, so parquet row-group
+    min/max stats prune query-term lookups. Returns the group's
+    _group_metric_exprs, observed in the write job itself (a read-back
+    would re-read the whole group); sums over no rows are None."""
+    obs = Observation()
+    out = rows.observe(obs, *_group_metric_exprs()).sortWithinPartitions("term")
+    out.write.mode("overwrite").parquet(group_dir)
+    return obs.get
 
 
 def _commit_group(
@@ -622,12 +649,10 @@ def _commit_group(
     m: dict,
 ) -> None:
     """Append the manifest row (lineage + build metrics). The manifest
-    append IS the commit point. ``m``: the _group_metric_exprs captured
-    by a DataFrame Observation DURING the write job — a read-back would
-    re-read the whole group's parquet, a full extra pass per group (r6,
-    guide §1.4: measure in the job you already run)."""
+    append IS the commit point. ``m``: the metrics _write_group
+    observed."""
     n_docs_g = int(m["n_docs"] or 0)
-    row = {
+    row = {  # in MANIFEST_SCHEMA order: local_df matches by position
         "build_id": build_id,
         "group_id": g,
         "n_shards": n_shards,
@@ -642,9 +667,8 @@ def _commit_group(
         "postings_per_sec": int(m["n_postings"] or 0) / (wall_ms / 1000.0) if wall_ms else 0.0,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    spark.createDataFrame([row], MANIFEST_SCHEMA).write.mode("append").parquet(
-        paths.manifest
-    )
+    manifest_row = local_df(spark, [tuple(row.values())], MANIFEST_SCHEMA)
+    manifest_row.write.mode("append").parquet(paths.manifest)
     metrics.append(row)
 
 
@@ -736,11 +760,7 @@ def build_segments(
         _write_json(paths.pending_config_json, config)
 
     done = committed_groups(spark, paths) if resume else set()
-    sharded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shard_col(F.col(id_col), n_shards).alias("shard_id"),
-        F.col(text_col).alias("text"),
-    )
+    docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     metrics = []
     n_committed = 0
     with _one_shard_per_task(spark, n_shards):
@@ -748,24 +768,13 @@ def build_segments(
             if g in done:
                 continue
             t0 = time.monotonic()
-            part = sharded.filter(F.pmod(F.col("shard_id"), F.lit(n_groups)) == g)
-            seg = part.groupBy("shard_id").applyInArrow(
-                _segment_builder_arrow(mode), schema=SEGMENT_SCHEMA
+            part = docs.filter(
+                F.pmod(shard_col(F.col("doc_id"), n_shards), F.lit(n_groups)) == g
             )
-            # manifest metrics ride the write job itself (Observation):
-            # the former post-commit read-back re-read the whole group
-            obs = Observation(f"commit_group_{g}")
-            seg = seg.observe(obs, *_group_metric_exprs())
-            # applyInArrow output is already hash-partitioned by shard_id;
-            # no extra repartition — just sort by term within files so
-            # parquet row-group min/max stats prune query-term lookups
-            seg.sortWithinPartitions("term").write.mode("overwrite").parquet(
-                paths.group_dir(g)
-            )
+            m = _write_group(_segment_rows(part, n_shards, mode), paths.group_dir(g))
             wall_ms = (time.monotonic() - t0) * 1000.0
             _commit_group(
-                spark, paths, g, build_id, n_shards, n_groups, wall_ms, metrics,
-                obs.get,
+                spark, paths, g, build_id, n_shards, n_groups, wall_ms, metrics, m
             )
             n_committed += 1
             if fail_after_group is not None and n_committed >= fail_after_group:
@@ -807,9 +816,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         cfg = json.load(f)
     n_shards = int(cfg["n_shards"])
     if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
+        doc_ids = local_df(spark, [(int(i),) for i in doc_ids], "doc_id long")
     ids = doc_ids.select(F.col("doc_id").cast("long")).distinct()
     if not ids.take(1):
         # empty delete is a no-op: committing an empty tombstone group

@@ -62,7 +62,6 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -79,6 +78,7 @@ from alertsage_spark.index.segments import (
     merged_doclen,
     tombstoned_docs,
 )
+from alertsage_spark.session import local_df
 from alertsage_spark.tokenizer import code_query_terms, tokenize_py
 
 
@@ -344,19 +344,6 @@ def _resolve_algo(algo: str, rows: list[tuple[dict, float]]) -> str:
     return "wand" if sel and n_post > 5_000 else "taat"
 
 
-def _empty_topk(spark: SparkSession) -> DataFrame:
-    """0-row result with the standard top-k schema, as a range(0) plan:
-    createDataFrame([]) (and an empty pandas batch) both fall back to a
-    defaultParallelism-partition parallelize whose empty tasks cost
-    ~0.35 s of scheduling on local[32]."""
-    return spark.range(0).select(
-        F.lit("").alias("query_id"),
-        F.col("id").alias("doc_id"),
-        F.lit(0.0).alias("score"),
-        F.lit(0).cast("int").alias("rank"),
-    )
-
-
 def _score_shard(
     query_terms: dict[str, list[str]],
     by_term: dict[str, list],
@@ -396,16 +383,9 @@ def _ranked_topk(
 ) -> DataFrame:
     """Driver-side final merge of per-shard (query_id, doc_id, score)
     hits: rank <= k per query by (round(score, 6) desc, doc_id asc), rows
-    in ``query_ids`` order.
-
-    Arrow path: createDataFrame(pandas) materializes as a single local
-    batch (~25 ms) where createDataFrame(list) parallelizes to
-    defaultParallelism tasks and costs ~0.35 s of pure scheduling per
-    query on local[32] — measured 13x, once the dominant term of serving
-    latency. The EMPTY case must not go through pandas either (an empty
-    batch falls back to parallelize and costs the same 0.35 s — measured;
-    it made no-match queries 2.5x slower than matching ones): emit a
-    0-row plan from range(0) instead."""
+    in ``query_ids`` order, as one Arrow local batch (session.local_df):
+    a LocalTableScan that runs no job to collect, with the same nullable
+    schema whether or not anything matched."""
     by_q: dict[str, list] = {qid: [] for qid in query_ids}
     for qid, doc, score in hits:
         by_q[qid].append((doc, score))
@@ -414,12 +394,7 @@ def _ranked_topk(
         q_hits.sort(key=lambda h: (-round(h[1], 6), h[0]))
         for rank, (doc, score) in enumerate(q_hits[:k], start=1):
             out.append((qid, int(doc), round(score, 6), rank))
-    if not out:
-        return _empty_topk(spark)
-    pdf = pd.DataFrame(out, columns=["query_id", "doc_id", "score", "rank"])
-    return spark.createDataFrame(
-        pdf, "query_id string, doc_id long, score double, rank int"
-    )
+    return local_df(spark, out, "query_id string, doc_id long, score double, rank int")
 
 
 def _local_topk(
@@ -539,8 +514,11 @@ def wand_topk(
     queries: iterable of (query_id, query_text). Tokenization uses the
     shared spec (driver-side tokenize_py on the tiny query set — parity
     with the index-side tokenizer is covered by tests). ``k < 1`` returns
-    no rows.
+    no rows. ``algo``: "wand", "taat" or "auto" (_resolve_algo); any
+    other value raises ValueError.
     """
+    if algo not in ("wand", "taat", "auto"):
+        raise ValueError(f"unknown algo {algo!r}: expected 'wand', 'taat' or 'auto'")
     # unconditional: load_index pins the parquet group list, so even an
     # unprepared index silently misses groups appended after load —
     # raise instead of serving stale results
@@ -550,7 +528,7 @@ def wand_topk(
     index.assert_serving_fresh()
     SERVING_COUNTERS["probe_ns"] += _time.perf_counter_ns() - _t0
     if k < 1:
-        return _empty_topk(spark)
+        return _ranked_topk(spark, (), (), k)
     mode = index.stats.get("mode", "text")
     queries = list(queries)
     if mode == "code":
@@ -571,7 +549,7 @@ def wand_topk(
         }
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
     if not all_terms:
-        return _empty_topk(spark)
+        return _ranked_topk(spark, (), (), k)
     dfs = _term_dfs(index, all_terms)
     n_docs = index.stats["n_docs"]
     idf_map = {t: _idf(df, n_docs) for t, df in dfs.items()}

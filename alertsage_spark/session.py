@@ -69,27 +69,25 @@ def session_registry(spark: SparkSession) -> IndexRegistry:
 
 
 def local_df(spark: SparkSession, rows, schema: str):
-    """Small driver-side literal relation as ONE Arrow local batch.
+    """Small driver-side literal relation as ONE Arrow local batch: the
+    rows (tuples, matched positionally to the DDL ``schema``) become one
+    ``pyarrow.Table`` with the schema's names and types, which plans as
+    a LocalTableScan (``<empty>`` for no rows) and broadcasts without a
+    scan stage. ``createDataFrame(list)`` instead parallelizes even an
+    18-row set into a defaultParallelism-task RDD scan that every action
+    and every join on it pays again (~0.3 s on local[32]). A None is
+    NULL and a float NaN stays NaN."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    ``createDataFrame(list)`` parallelizes even an 18-row query set into
-    a defaultParallelism-task RDD scan: every action pays ~0.3s of pure
-    task scheduling on local[32], and every join/broadcast whose child
-    is the literal relation pays the same stage again. The pandas path
-    plans as a LocalTableScan (~25ms, measured 11x faster to collect)
-    and broadcasts without a scan stage. Schema names/types apply
-    positionally to the row tuples, exactly like createDataFrame(list).
-    Callers pass fixed NON-EMPTY literal sets (an empty pandas frame
-    falls back to the parallelize path, same as an empty list) of
-    NON-NULL values: pandas dtype inference turns a None in a numeric
-    column into NaN (not NULL) and may overflow unsigned or very large
-    ints to int64."""
-    import pandas as pd
-
-    rows = list(rows)
-    if not rows:  # empty pandas frames can't carry the schema — keep
-        # the createDataFrame([]) semantics for the degenerate case
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(pd.DataFrame(rows), schema)
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def spread_small_scan(df, probe=None):

@@ -7,18 +7,21 @@ Shape:
 
     readStream(docs) -> writeStream.foreachBatch(ingest_batch)
 
-Each micro-batch builds its own one-group index in a staging sibling of
-the index dir. The first batch renames that whole index into place
-(segments._rename_into_place, merge's commit); later batches land its
-group through segments._land_group, the one group commit that
-delete_docs and append_group use too. No stats are written: load_index
-derives them from the groups it pins, so a committed group is counted
-from its rename on. EXACTLY-ONCE per batch:
+Each micro-batch is written as ONE segment group by the build's group
+writer (segments._write_group) into a staging sibling of the index
+dir. That write is the batch's only Spark work; the doc count it
+observes tells an empty batch (nothing committed) from a real one. The
+first batch puts build_config.json beside its group and renames the
+staged index into place (segments._rename_into_place, merge's commit);
+later batches land the group through segments._land_group, the group
+commit of delete_docs and append_group too. No stats and no manifest
+are written: load_index derives the stats from the groups it pins, so
+a committed group counts from its rename on. EXACTLY-ONCE per batch:
 Structured Streaming re-delivers a batch after a crash between the
 sink's side effect and the checkpoint commit, so every group directory
 carries a ``_stream_batch.json`` marker with its batch id — a
 re-delivered batch whose id is already committed is skipped before any
-work. The rename IS the commit point; a crash mid-build leaves only an
+work. The rename IS the commit point; a crash mid-write leaves only an
 invisible staging dir (underscore-prefixed, ignored by the segment
 glob and parquet discovery). Compaction (merge_segments) drops the
 marker-carrying groups but carries their batch ids into a root
@@ -26,7 +29,7 @@ marker-carrying groups but carries their batch ids into a root
 stop -> compact -> restart window (segments.stream_committed_batch_ids
 reads markers UNION sidecar).
 
-At scale each micro-batch is one bounded build (the batch's docs
+At scale each micro-batch is one bounded write (the batch's docs
 shuffle once on shard_id into n_shards single-shard tasks); group count
 grows with stream time, so run ``merge_segments`` /
 ``maybe_compact`` out-of-band to bound query-time read amplification —
@@ -48,10 +51,12 @@ from alertsage_spark.index.segments import (
     STREAM_MARKER,
     IndexPaths,
     _land_group,
+    _one_shard_per_task,
     _rename_into_place,
+    _segment_rows,
     _staged_sibling,
+    _write_group,
     _write_json,
-    build_segments,
     stream_committed_batch_ids,
 )
 
@@ -70,21 +75,17 @@ def ingest_batch(
     paths = IndexPaths(index_dir)
     adopting = not os.path.exists(paths.config_json)
     if adopting and os.path.isdir(index_dir) and os.listdir(index_dir):
-        # checked BEFORE the batch build: the refusal is permanent, so
-        # discovering it after building the whole group would re-waste
-        # the build on every streaming retry
+        # checked BEFORE the batch's write: the refusal is permanent, so
+        # discovering it after writing the whole group would re-waste
+        # the write on every streaming retry
         raise ValueError(
             f"{index_dir} exists, is non-empty, and is not an "
             "index (no build_config.json) — refusing to adopt"
         )
     if batch_id in stream_committed_batch_ids(index_dir):
         return False
-    rows = batch_df.limit(1).count()
-    if rows == 0:
-        return False
-    # build the batch's group in its own staging index, then adopt the
-    # group dir. The staging build uses the SAME n_shards/mode so the
-    # doc->shard layout matches (append_group's compatibility rule).
+    # the batch's group uses the index's n_shards/mode, so the doc->shard
+    # layout matches (append_group's compatibility rule)
     if not adopting:
         with open(paths.config_json) as f:
             cfg = json.load(f)
@@ -96,24 +97,21 @@ def ingest_batch(
     # staged on the SAME filesystem as index_dir, so both commits below
     # are atomic renames, never a crashable cross-device copy
     with _staged_sibling(index_dir) as stage_root:
-        build_segments(
-            spark,
-            batch_df,
-            stage_root,
-            n_shards=n_shards,
-            n_groups=1,
-            mode=mode,
-            resume=False,
-            build_id=f"stream-batch-{batch_id}",
-        )
-        src_group = IndexPaths(stage_root).group_dir(0)
-        _write_json(os.path.join(src_group, STREAM_MARKER), {"batch_id": int(batch_id)})
+        stage = IndexPaths(stage_root)
+        group = stage.group_dir(0)
+        with _one_shard_per_task(spark, n_shards):
+            seg = _segment_rows(batch_df.select("doc_id", "text"), n_shards, mode)
+            if not _write_group(seg, group)["n_docs"]:
+                return False  # an empty batch commits nothing
+        _write_json(os.path.join(group, STREAM_MARKER), {"batch_id": int(batch_id)})
         if adopting:
-            # first batch: adopt the staging index wholesale; the entry
+            # first batch: the staged group becomes the index; the entry
             # guard proved any existing index_dir empty
+            config = {"n_shards": n_shards, "n_groups": 1, "mode": mode}
+            _write_json(stage.config_json, config)
             _rename_into_place(stage_root, index_dir)
         else:
-            _land_group(paths, lambda d: shutil.move(src_group, d))
+            _land_group(paths, lambda d: shutil.move(group, d))
         return True
 
 

@@ -295,3 +295,26 @@ def test_degenerate_queries_return_no_rows(spark, served, corpus, mode):
         assert sorted(mixed) == solo, text
     path = "fast_path" if mode == "fast" else "distributed"
     assert W.SERVING_COUNTERS[path] == 3
+
+
+@pytest.mark.parametrize("mode", SERVING_MODES)
+def test_unknown_algo_raises(spark, served, mode):
+    idx = served["text", mode]
+    for algo in ("WAND", "Taat", "maxscore", ""):
+        with pytest.raises(ValueError, match="unknown algo"):
+            wand_topk(spark, idx, [("M", MATCHING["text"])], k=K, algo=algo)
+
+
+@pytest.mark.parametrize("mode", SERVING_MODES)
+def test_empty_and_matching_results_share_one_schema(spark, served, mode):
+    """Nullability included: the result schema does not depend on
+    whether anything matched."""
+    idx = served["text", mode]
+    match = wand_topk(spark, idx, [("M", MATCHING["text"])], k=K)
+    assert match.collect()
+    for df in (
+        wand_topk(spark, idx, [("D", "zzz qqq notindocs")], k=K),
+        wand_topk(spark, idx, [("D", "")], k=K),
+        wand_topk(spark, idx, [("M", MATCHING["text"])], k=0),
+    ):
+        assert df.collect() == [] and df.schema == match.schema
