@@ -17,7 +17,10 @@ et al., block-max metadata a la Ding & Suel's Block-Max WAND):
     applied at query time; avgdl is a build-time global scalar).
 
 All encode/decode paths are numpy-vectorized (no per-value Python loops)
-because they run inside Arrow-batched UDFs on the executors.
+because they run inside Arrow-batched UDFs on the executors. Rows stay
+Arrow until they are decoded: decode_rows reads a whole batch of term,
+doclen or tombstone rows in one pass for the scorer, the driver fast
+path, the merge and the relational view alike.
 """
 
 from __future__ import annotations
@@ -175,19 +178,6 @@ def bm25_norm(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
-def block_norm_bounds(
-    max_tfs: np.ndarray, min_dls: np.ndarray, avgdl: float
-) -> np.ndarray:
-    """Query-time per-block upper bound on the BM25 tf-norm.
-
-    norm(tf, dl) is increasing in tf and decreasing in dl, so
-    norm(block_max_tf, block_min_dl) >= norm(tf_i, dl_i) for every
-    posting i in the block — a valid (slightly loose) block-max bound
-    that does NOT bake avgdl into the stored index, letting the build run
-    in a single pass with no global-stats barrier."""
-    return bm25_norm(np.asarray(max_tfs), np.asarray(min_dls), avgdl)
-
-
 def _reset_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:
     """Doc ids from a delta stream whose value at each index in
     ``starts`` (sorted, first 0) is ABSOLUTE: one cumsum, then subtract
@@ -198,23 +188,13 @@ def _reset_cumsum(deltas: np.ndarray, starts: np.ndarray) -> np.ndarray:
     return (c - np.repeat(offs, counts)).astype(np.int64)
 
 
-def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray]:
-    """The one decoder of a term row -> (doc_ids int64, tfs int64).
-
-    ``row``: any mapping with ``doc_bytes``/``tf_bytes`` (a Spark Row, a
-    dict, a collected term row). Two varbyte calls (one per stream)
-    decode the FULL list instead of two per block: the delta stream
-    restarts (absolute doc_id) at every BLOCK_SIZE boundary, so the
-    decoded cumsum is corrected per block (vectorized reset-cumsum)."""
-    deltas = varbyte_decode(bytes(row["doc_bytes"]))
-    tfs = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
-    starts = np.arange(0, len(deltas), BLOCK_SIZE, dtype=np.int64)
-    return _reset_cumsum(deltas, starts), tfs
-
-
-def _binary_values(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+def _binary_values(arr) -> tuple[np.ndarray, np.ndarray]:
     """(bytes as uint8, per-row byte offsets from 0) of a null-free
-    binary Arrow array, read from its buffers without a copy."""
+    binary Arrow array, read from its buffers without a copy (a chunked
+    column of several chunks is combined first, one copy of its rows'
+    bytes)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
     if len(arr) == 0:
         return np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
     otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
@@ -226,10 +206,12 @@ def _binary_values(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 
 def decode_rows(
-    doc_bytes: pa.Array, tf_bytes: pa.Array, block_size: int | None = BLOCK_SIZE
+    doc_bytes, tf_bytes, block_size: int | None = BLOCK_SIZE
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """decode_posting_list over EVERY row of an Arrow batch in one pass
-    -> (values per row, doc_ids int64, tfs int64), rows concatenated.
+    """The one decoder of the segment row format: EVERY row of an Arrow
+    batch (``doc_bytes``/``tf_bytes`` binary arrays or table columns) in
+    one pass -> (values per row, doc_ids int64, tfs int64), rows
+    concatenated.
 
     The rows' varbyte streams are one contiguous buffer, so each stream
     is one varbyte call for the whole batch; the delta stream restarts
@@ -247,9 +229,12 @@ def decode_rows(
     return counts, docs, tfs
 
 
-def decode_block(row: dict, block_idx: int) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a single block (for WAND skipping)."""
-    do, to = row["block_doc_offsets"], row["block_tf_offsets"]
-    deltas = varbyte_decode(row["doc_bytes"][do[block_idx] : do[block_idx + 1]])
-    tfs = varbyte_decode(row["tf_bytes"][to[block_idx] : to[block_idx + 1]])
-    return delta_decode(deltas).astype(np.int64), tfs.astype(np.int64)
+def decode_posting_list(row) -> tuple[np.ndarray, np.ndarray]:
+    """One term row -> (doc_ids int64, tfs int64): decode_rows over a
+    one-row batch. ``row``: any mapping with ``doc_bytes``/``tf_bytes``
+    (a dict, a pyspark Row)."""
+    _, docs, tfs = decode_rows(
+        pa.array([bytes(row["doc_bytes"])], pa.binary()),
+        pa.array([bytes(row["tf_bytes"])], pa.binary()),
+    )
+    return docs, tfs

@@ -8,13 +8,13 @@ every shard's doclen rows to one row.
 
 Plan: segments.groupBy(shard_id) -> applyInArrow(shard merger). Each
 task first merges ITS shard's doclen rows (partition-local — no
-driver-side corpus map, no broadcast), then decodes every term row with
-compress.decode_posting_list, keeps max-tf per (term, doc) with one
-lexsort over the whole shard, and re-encodes through the build's shard
-encoder (segments._encode_shard) and writes through the build's group
-writer (segments._write_group), so merged rows are byte-identical to
-a fresh build of the surviving docs. Document-sharding
-keeps this balanced: a hot term contributes at most one run per
+driver-side corpus map, no broadcast), then decodes all of its term
+rows, still Arrow, in one compress.decode_rows pass, keeps max-tf per
+(term, doc) with one lexsort over the whole shard, and re-encodes
+through the build's shard encoder (segments._encode_shard) and writes
+through the build's group writer (segments._write_group), so merged
+rows are byte-identical to a fresh build of the surviving docs.
+Document-sharding keeps this balanced: a hot term contributes at most one run per
 (group, shard), and task memory is corpus/n_shards — the same memory
 shape as the build stage itself, with n_shards as the scaling knob
 (at 10^12 docs you raise n_shards, exactly as for the build).
@@ -51,44 +51,40 @@ import os
 import numpy as np
 from pyspark.sql import SparkSession
 
-from alertsage_spark.index.compress import decode_posting_list
+from alertsage_spark.index.compress import decode_rows
 from alertsage_spark.index.segments import (
     SEGMENT_SCHEMA,
-    TOMBSTONE_TERM,
     IndexPaths,
     SegmentIndex,
     _encode_shard,
     _one_shard_per_task,
     _rename_into_place,
+    _row_kinds,
     _shard_key,
     _staged_sibling,
     _write_group,
     _write_json,
-    decode_doclen_row,
     load_index,
+    merged_doclen,
     persist_stream_batch_ids,
     stream_committed_batch_ids,
     tombstoned_docs,
 )
-
-_EMPTY = np.empty(0, dtype=np.int64)
 
 
 def _merge_shard(key, tbl):
     """applyInArrow group fn: all of one shard's rows (every group's
     doclen, tombstone and term rows) -> the shard's merged rows."""
     shard_id = _shard_key(key)
-    rows = tbl.select(["term", "doc_bytes", "tf_bytes"]).to_pylist()
+    dl_rows, tomb_rows, term_rows = _row_kinds(tbl.select(["term", "doc_bytes", "tf_bytes"]))
     # 0) the shard's tombstone rows (delete_docs): these doc ids are
     #    physically dropped from doclens and postings below, and the
     #    tombstone rows themselves are not re-emitted — after the merge
     #    the deletion is durable and derived stats no longer count them
-    deleted = tombstoned_docs(r for r in rows if r["term"] == TOMBSTONE_TERM)
+    deleted = tombstoned_docs(tomb_rows)
     # 1) merge the shard's doclen rows; re-ingested docs keep MAX dl (the
     #    same deterministic rule as the max-tf posting merge)
-    dl_parts = [decode_doclen_row(r) for r in rows if r["term"] is None]
-    docs = np.concatenate([_EMPTY] + [p[0] for p in dl_parts])
-    dls = np.concatenate([_EMPTY] + [p[1] for p in dl_parts])
+    docs, dls = merged_doclen(dl_rows)
     uniq_docs = np.unique(docs)
     dl_merged = np.zeros(len(uniq_docs), dtype=np.int64)
     np.maximum.at(dl_merged, np.searchsorted(uniq_docs, docs), dls)
@@ -98,17 +94,14 @@ def _merge_shard(key, tbl):
         # no live docs (all deleted, or only tombstones of ids that never
         # lived here): like the builder, the shard emits no rows
         return _encode_shard(shard_id, uniq_docs, dl_merged, None)
-    # 2) every term row's postings as (term code, doc, tf), tombstoned
-    #    docs dropped, then ONE lexsort and max-tf per (term, doc) —
-    #    the same doc in several runs was re-ingested
-    term_rows = [r for r in rows if r["term"] not in (None, TOMBSTONE_TERM)]
-    decoded = [decode_posting_list(r) for r in term_rows]
+    # 2) every term row's postings as (term code, doc, tf) in one
+    #    decode, tombstoned docs dropped, then ONE lexsort and max-tf
+    #    per (term, doc) — the same doc in several runs was re-ingested
+    counts, d, t = decode_rows(term_rows.column("doc_bytes"), term_rows.column("tf_bytes"))
     names, codes = np.unique(
-        np.array([r["term"] for r in term_rows], dtype=object), return_inverse=True
+        term_rows.column("term").to_numpy(zero_copy_only=False), return_inverse=True
     )
-    c = np.repeat(codes, [len(p[0]) for p in decoded]).astype(np.int64)
-    d = np.concatenate([_EMPTY] + [p[0] for p in decoded])
-    t = np.concatenate([_EMPTY] + [p[1] for p in decoded])
+    c = np.repeat(codes, counts).astype(np.int64)
     keep = np.isin(d, deleted, invert=True)
     c, d, t = c[keep], d[keep], t[keep]
     if not len(d):

@@ -71,10 +71,8 @@ from pyspark.sql import functions as F
 
 from alertsage_spark.index.compress import (
     decode_rows,
-    delta_decode,
     delta_encode,
     encode_posting_lists_columnar,
-    varbyte_decode,
     varbyte_encode,
 )
 from alertsage_spark.session import local_df
@@ -293,7 +291,11 @@ def _one_shard_per_task(spark: SparkSession, n_shards: int):
             spark.conf.set(k, v)
 
 
-def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> DataFrame:
+# salts of the term -> (df, cf) aggregation's partial stage
+TERMSTATS_SALTS = 8
+
+
+def salted_termstats_from_segments(segments: DataFrame) -> DataFrame:
     """Global term -> (df, cf) from the per-shard segment rows, via the
     EXPLICIT two-stage salted aggregation on term (north rule §4.2-3):
     partial agg on (term, salt), final combine on term.
@@ -307,7 +309,7 @@ def salted_termstats_from_segments(segments: DataFrame, n_salts: int = 8) -> Dat
         segments.filter(
             F.col("term").isNotNull() & (F.col("term") != TOMBSTONE_TERM)
         )
-        .groupBy("term", F.pmod(F.col("shard_id"), F.lit(n_salts)).alias("salt"))
+        .groupBy("term", F.pmod(F.col("shard_id"), F.lit(TERMSTATS_SALTS)).alias("salt"))
         .agg(F.sum("df_local").alias("df_p"), F.sum("cf_local").alias("cf_p"))
         .groupBy("term")
         .agg(F.sum("df_p").alias("df"), F.sum("cf_p").alias("cf"))
@@ -588,28 +590,27 @@ def _segment_rows(docs: DataFrame, n_shards: int, mode: str) -> DataFrame:
     )
 
 
-def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
-    """(sorted doc_ids int64, dls int64) from a doclen-format row (the
-    term=NULL doclen row or a tombstone row)."""
-    docs = delta_decode(varbyte_decode(bytes(row["doc_bytes"]))).astype(np.int64)
-    dls = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
-    return docs, dls
+def _row_kinds(rows: pa.Table) -> tuple[pa.Table, pa.Table, pa.Table]:
+    """Segment rows -> (doclen rows, tombstone rows, term rows)."""
+    term = rows.column("term")
+    is_tomb = pc.fill_null(pc.equal(term, TOMBSTONE_TERM), False)
+    is_term = pc.invert(pc.or_(pc.is_null(term), is_tomb))
+    return rows.filter(pc.is_null(term)), rows.filter(is_tomb), rows.filter(is_term)
 
 
-def merged_doclen(rows) -> tuple[np.ndarray, np.ndarray]:
+def merged_doclen(rows: pa.Table) -> tuple[np.ndarray, np.ndarray]:
     """One shard's doclen rows (one per committed group; an un-compacted
-    index has several) -> (doc_ids, dls) sorted by doc_id."""
-    parts = [decode_doclen_row(r) for r in rows]
-    docs = np.concatenate([p[0] for p in parts])
-    dls = np.concatenate([p[1] for p in parts])
+    index has several), decoded in one pass -> (doc_ids, dls) sorted by
+    doc_id."""
+    _, docs, dls = decode_rows(rows.column("doc_bytes"), rows.column("tf_bytes"), None)
     order = np.argsort(docs, kind="stable")
     return docs[order], dls[order]
 
 
-def tombstoned_docs(rows) -> np.ndarray:
+def tombstoned_docs(rows: pa.Table) -> np.ndarray:
     """Sorted doc ids deleted by one shard's tombstone rows."""
-    parts = [decode_doclen_row(r)[0] for r in rows]
-    return np.unique(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
+    _, docs, _ = decode_rows(rows.column("doc_bytes"), rows.column("tf_bytes"), None)
+    return np.unique(docs)
 
 
 def _group_metric_exprs():
@@ -926,32 +927,30 @@ def _collect_df_map(seg: DataFrame) -> dict[str, int] | None:
     return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
 
 
-def _split_meta(tbl: pa.Table) -> tuple[list[dict], pa.Table]:
-    """A term-sorted table -> (its doclen and tombstone rows as dicts,
-    the term rows as a zero-copy slice)."""
+def _split_meta(tbl: pa.Table) -> tuple[pa.Table, pa.Table]:
+    """A term-sorted table -> (its doclen and tombstone rows, its term
+    rows), both zero-copy slices."""
     term = tbl.column("term")
     n_meta = term.null_count + int(pc.sum(pc.equal(term, TOMBSTONE_TERM)).as_py() or 0)
-    return tbl.slice(0, n_meta).to_pylist(), tbl.slice(n_meta)
+    return tbl.slice(0, n_meta), tbl.slice(n_meta)
 
 
-def _shard_doclen_maps(meta_rows: list[dict]) -> tuple[dict, dict]:
+def _shard_doclen_maps(meta: pa.Table) -> tuple[dict, dict]:
     """Doclen and tombstone rows -> (shard_id -> (sorted doc_ids, dls),
     shard_id -> sorted tombstoned doc ids)."""
-    dl_rows: dict[int, list] = {}
-    tomb_rows: dict[int, list] = {}
-    for r in meta_rows:
-        out = dl_rows if r["term"] is None else tomb_rows
-        out.setdefault(int(r["shard_id"]), []).append(r)
-    return (
-        {sid: merged_doclen(rs) for sid, rs in dl_rows.items()},
-        {sid: tombstoned_docs(rs) for sid, rs in tomb_rows.items()},
-    )
+    dl_rows, tomb_rows, _ = _row_kinds(meta)
+
+    def per_shard(rows: pa.Table, decode) -> dict:
+        sid = rows.column("shard_id").to_numpy()
+        return {int(s): decode(rows.take(np.flatnonzero(sid == s))) for s in np.unique(sid)}
+
+    return per_shard(dl_rows, merged_doclen), per_shard(tomb_rows, tombstoned_docs)
 
 
 class _TermRuns:
     """Term rows sorted by term, found per term by binary search over the
-    distinct terms: only those are decoded to Python, the rows of a term
-    only when asked for."""
+    distinct terms: only those are converted to Python, a term's rows
+    are a zero-copy slice."""
 
     def __init__(self, tbl: pa.Table):
         self.table = tbl
@@ -963,20 +962,20 @@ class _TermRuns:
             starts = np.flatnonzero(
                 np.concatenate([[True], change.to_numpy(zero_copy_only=False)])
             )
-        self.terms = term.take(starts).to_pylist()
+        self.terms = term.take(starts).to_numpy(zero_copy_only=False)
         self.bounds = np.append(starts, n)
         self.nbytes = tbl.get_total_buffer_size()
 
-    def rows(self, t: str) -> list[dict]:
+    def rows(self, t: str) -> pa.Table:
         i = bisect.bisect_left(self.terms, t)
         if i == len(self.terms) or self.terms[i] != t:
-            return []
+            return self.table.slice(0, 0)
         s, e = int(self.bounds[i]), int(self.bounds[i + 1])
-        return self.table.slice(s, e - s).to_pylist()
+        return self.table.slice(s, e - s)
 
     def df_map(self) -> dict[str, int]:
         """term -> df: df_local summed over each term's run."""
-        if not self.terms:
+        if not len(self.terms):
             return {}
         dfs = np.add.reduceat(
             self.table.column("df_local").to_numpy().astype(np.int64), self.bounds[:-1]
@@ -985,10 +984,11 @@ class _TermRuns:
 
 
 class TermRowStore(Mapping):
-    """The fast path's driver store of segment rows: term -> that term's
-    rows (one per shard and group holding it) as ``to_pylist()`` dicts,
-    the row type the distributed scorer hands the kernels. Rows are held
-    as term-sorted Arrow tables, at most ``budget`` bytes of them.
+    """The fast path's driver store of segment rows, held as term-sorted
+    Arrow tables, at most ``budget`` bytes of them. ``rows()`` serves the
+    fast path one Arrow table of the asked terms' rows (one row per shard
+    and group holding a term); the Mapping view, term -> that term's rows
+    as dicts, is for readers outside the serving path.
 
     A complete snapshot (prepare_for_queries, when the index's serving
     columns fit the budget) holds every term's rows, so every term is
@@ -1017,6 +1017,9 @@ class TermRowStore(Mapping):
         return self.complete or t in self._where
 
     def __getitem__(self, t: str) -> list[dict]:
+        return self._rows(t).to_pylist()
+
+    def _rows(self, t: str) -> pa.Table:
         if self.complete:
             return self._snapshot.rows(t)
         runs = self._where[t]
@@ -1029,16 +1032,17 @@ class TermRowStore(Mapping):
     def __len__(self) -> int:
         return len(self._snapshot.terms) if self.complete else len(self._where)
 
-    def rows(self, terms: list[str], fetch) -> dict[str, list[dict]]:
-        """term -> rows for ``terms``; ``fetch(missing)`` returns the term
-        rows of the terms not held as one term-sorted Arrow table."""
+    def rows(self, terms: list[str], fetch) -> pa.Table:
+        """The rows of ``terms`` (sorted) as one term-sorted Arrow table of
+        zero-copy slices; ``fetch(missing)`` returns the term rows of the
+        terms not held as one term-sorted Arrow table."""
         missing = [t for t in terms if t not in self]
         if missing:
             runs = _TermRuns(fetch(missing))
             self._fills[runs] = missing
             self._where.update(dict.fromkeys(missing, runs))
             self.bytes_held += runs.nbytes
-        out = {t: self[t] for t in terms}
+        out = pa.concat_tables([self._rows(t) for t in terms])
         while self.bytes_held > self.budget and self._fills:
             runs, held = self._fills.popitem(last=False)
             for t in held:
@@ -1138,13 +1142,14 @@ class SegmentIndex:
             self.df_map = _collect_df_map(seg)
             meta = _term_sorted_arrow(
                 seg.filter(F.col("term").isNull() | (F.col("term") == TOMBSTONE_TERM))
-            ).to_pylist()
+            )
         self.dl_map, self.deleted_map = _shard_doclen_maps(meta)
         return self
 
-    def term_rows(self, terms: list[str]) -> dict[str, list[dict]]:
-        """term -> its segment rows from the TermRowStore; terms it does
-        not hold are fetched from the cached segment rows in one job."""
+    def term_rows(self, terms: list[str]) -> pa.Table:
+        """The segment rows of ``terms`` (sorted) from the TermRowStore as
+        one term-sorted Arrow table; terms it does not hold are fetched
+        from the cached segment rows in one job."""
         return self.term_rows_cache.rows(
             terms,
             lambda missing: _term_sorted_arrow(

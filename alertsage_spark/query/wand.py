@@ -19,10 +19,12 @@ Two serving paths, one scoring loop:
     maps prepare_for_queries built; a prepared query over a snapshot
     runs no Spark job.
 
-Both hand one shard's rows per term (``to_pylist()`` dicts on both
-paths), doc lengths and tombstones to ``_score_shard`` (every query of
-the batch against that shard), and
-both rank the per-shard top-k in ``_ranked_topk`` (round(score,6)
+Rows stay Arrow until the kernels: both paths decode their matched
+term rows in one compress.decode_rows pass (``_decoded_runs``: a
+scorer task its shard's rows, the fast path every shard's), hand each
+shard's decoded runs, doc lengths and tombstones to ``_score_shard``
+(every query of the batch against that shard), and both rank the
+per-shard top-k in ``_ranked_topk`` (round(score,6)
 desc, doc_id asc). The distributed path uses that driver merge when
 n_shards * k * |Q| <= DRIVER_MERGE_MAX_ROWS; above that budget a
 global window rank <= k runs instead.
@@ -36,45 +38,43 @@ the Python oracle — property-tested), sharing one core: the per-posting
 score (``_exact_scores``), the per-doc sum with the tombstone mask
 (``_sum_live``) and the final selection (``_select_topk``):
 
-  * ``taat``: vectorized term-at-a-time — decode all matched postings,
+  * ``taat``: vectorized term-at-a-time — score every matched posting,
     one np.add.at group-sum, exact top-k with rounded-tie margin. Zero
     per-row Python; optimal for few/selective terms or small shards.
   * ``wand``: vectorized Block-Max evaluation (the block-skipping idea
     of Broder et al. WAND + Ding & Suel block-max bounds, restructured
     for SIMD instead of doc-at-a-time cursors): the doc-id space is cut
     into windows at the union of all terms' block boundaries, so each
-    window is covered by exactly one block per term; window upper
-    bounds are the sums of per-block bounds idf * norm(block_max_tf,
-    block_min_dl) — valid because the BM25 tf-norm is monotone in tf
-    and anti-monotone in dl. Windows are processed in DESCENDING
-    upper-bound order with whole-window numpy scoring (every doc in a
-    processed window gets its full exact score, since the window's
-    covering blocks contain all of its postings); processing stops as
-    soon as the best remaining window bound cannot beat the running
-    kth-best exact score minus the rounding margin. Per-window work is
-    numpy over whole blocks — no per-document Python. Exactness is
-    protected by the 1e-6 margin under the rounded tie-break
-    comparator (property-tested vs the oracle and vs TAAT).
+    window is covered by exactly one block per term; a window's upper
+    bound sums, over the terms with a posting in it, the covering
+    block's bound idf * norm(block_max_tf, block_min_dl) — valid because
+    the BM25 tf-norm is monotone in tf and anti-monotone in dl.
+    Windows are processed in DESCENDING upper-bound order with
+    whole-window numpy scoring (every doc in a processed window gets
+    its full exact score; a window's postings are found by searchsorted
+    on the decoded docs); processing stops as soon as the best remaining
+    window bound cannot beat the running kth-best exact score minus the
+    rounding margin, so skipped windows' postings are never scored.
+    Per-window work is numpy slices — no per-document Python.
+    Exactness is protected by the 1e-6 margin under the rounded
+    tie-break comparator (property-tested vs the oracle and vs TAAT).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alertsage_spark.index.compress import (
-    B,
-    K1,
-    bm25_norm,
-    decode_block,
-    decode_posting_list,
-)
+from alertsage_spark.index.compress import B, BLOCK_SIZE, K1, bm25_norm, decode_rows
 from alertsage_spark.index.segments import (
     TOMBSTONE_TERM,
     SegmentIndex,
+    _row_kinds,
     merged_doclen,
     tombstoned_docs,
 )
@@ -95,9 +95,6 @@ def _in_sorted(a: np.ndarray, sorted_vals: np.ndarray) -> np.ndarray:
 # round(score, 6) tie-break so a pruned window/candidate can never hold
 # a doc that rounds into the top-k boundary
 THETA_EPS = 1e-6
-# terms with at most this many postings are decoded eagerly so their
-# bounds charge only posting-bearing windows (see wand_topk_shard)
-EAGER_DECODE_POSTINGS = 4096
 # idf at/above which a term counts as "selective" for the auto scorer
 # choice (roughly df <= n_docs/100)
 IDF_SELECTIVE = 4.6
@@ -117,16 +114,36 @@ def _check_dl_coverage(dl_docs: np.ndarray, dl_idx: np.ndarray, docs: np.ndarray
         )
 
 
-def decode_term_row(row, cache: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """decode_posting_list behind a batch-shared decode cache keyed by
-    id(row): reference batches share their hot terms, so each posting
-    list decodes once per task, not once per query."""
-    if cache is None:
-        return decode_posting_list(row)
-    hit = cache.get(id(row))
-    if hit is None:
-        hit = cache[id(row)] = decode_posting_list(row)
-    return hit
+class _Run(NamedTuple):
+    """One decoded term row: its postings (docs ascending, tfs) and its
+    blocks' metadata (last doc, max tf, min dl), BLOCK_SIZE postings
+    per block."""
+
+    docs: np.ndarray
+    tfs: np.ndarray
+    block_last: np.ndarray
+    block_max_tf: np.ndarray
+    block_min_dl: np.ndarray
+
+
+def _decoded_runs(rows: pa.Table) -> Iterator[tuple[int, str, _Run]]:
+    """(shard_id, term, run) of every term row of ``rows``: the postings
+    of all rows decoded in one decode_rows pass, each run a view into
+    that one decode."""
+    counts, docs, tfs = decode_rows(rows.column("doc_bytes"), rows.column("tf_bytes"))
+    p_off = np.concatenate(([0], np.cumsum(counts)))
+    n_blocks = pc.list_value_length(rows.column("block_last_docs"))
+    b_off = np.concatenate(([0], np.cumsum(n_blocks.to_numpy(zero_copy_only=False))))
+    last, max_tf, min_dl = (
+        pc.list_flatten(rows.column(c)).to_numpy(zero_copy_only=False)
+        for c in ("block_last_docs", "block_max_tfs", "block_min_dls")
+    )
+    shards = rows.column("shard_id").to_numpy()
+    terms = rows.column("term").to_numpy(zero_copy_only=False)
+    for i in range(rows.num_rows):
+        p, q, b, c = p_off[i], p_off[i + 1], b_off[i], b_off[i + 1]
+        run = _Run(docs[p:q], tfs[p:q], last[b:c], max_tf[b:c], min_dl[b:c])
+        yield int(shards[i]), terms[i], run
 
 
 def _exact_scores(
@@ -182,13 +199,12 @@ def _select_topk(
 
 
 def wand_topk_shard(
-    term_rows: list[tuple[dict, float]],
+    runs: list[tuple[_Run, float]],
     dl_docs: np.ndarray,
     dl_vals: np.ndarray,
     k: int,
     avgdl: float,
     deleted: np.ndarray | None = None,
-    cache: dict | None = None,
 ) -> list[tuple[int, float]]:
     """Vectorized Block-Max evaluation over one shard (exact top-k).
 
@@ -197,66 +213,27 @@ def wand_topk_shard(
     tombstoned doc's score.
 
     The doc-id space is partitioned into windows at the union of all
-    terms' block-boundary doc ids; each window is covered by exactly one
-    block per term, so scoring a window yields FULL exact scores for
-    every doc in it. Windows run in descending upper-bound order; the
-    loop stops when the best remaining bound cannot beat the running
-    kth-best exact score minus the rounding margin. Blocks are decoded
-    lazily at most once; skipped windows' blocks are never decoded.
+    terms' block-boundary doc ids; each window lies inside one block
+    per term, so scoring a window yields FULL exact scores for every doc
+    in it. A term's block bound is charged only to the windows holding
+    one of its postings (elsewhere it contributes nothing): a selective
+    term's few blocks span wide doc ranges and would otherwise raise
+    every window's bound. Windows run in descending upper-bound order;
+    the loop stops when the best remaining bound cannot beat the running
+    kth-best exact score minus the rounding margin, and skipped windows'
+    postings are never scored.
     """
-    lasts, bounds, idfs, rows = [], [], [], []
-    for row, idf in term_rows:
-        ld = np.asarray(row["block_last_docs"], dtype=np.int64)
-        if len(ld) == 0:
-            continue
-        lasts.append(ld)
-        bounds.append(
-            idf
-            * bm25_norm(
-                np.asarray(row["block_max_tfs"], dtype=np.int64),
-                np.asarray(row["block_min_dls"], dtype=np.int64),
-                avgdl,
-            )
-        )
-        idfs.append(idf)
-        rows.append(row)
-    if not rows:
+    if not runs:
         return []
-    n_terms = len(rows)
-    boundary = np.unique(np.concatenate(lasts))  # sorted window END doc ids
-    ub = np.zeros(len(boundary))
-    cover: list[tuple[np.ndarray, np.ndarray]] = []
-    # lazily decoded blocks, keyed (id(row), block) so a batch-shared
-    # cache (r6) lets queries that share a term reuse its decodes
-    decoded: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = (
-        cache if cache is not None else {}
-    )
-    for t in range(n_terms):
-        bi = np.searchsorted(lasts[t], boundary, side="left")
-        valid = bi < len(lasts[t])
-        bi_c = np.minimum(bi, len(lasts[t]) - 1)
-        contrib = np.where(valid, bounds[t][bi_c], 0.0)
-        if int(rows[t]["n_postings"]) <= EAGER_DECODE_POSTINGS:
-            # A selective term's few blocks span WIDE doc ranges (a
-            # single-block term spans everything), which would charge its
-            # large idf bound to every window and defeat pruning. Its
-            # postings are cheap to decode, so decode them now and charge
-            # the bound ONLY to windows that actually contain a posting
-            # (the true max contribution elsewhere is zero).
-            docs_t = []
-            rid = id(rows[t])
-            for b in range(len(lasts[t])):
-                blk = decoded.get((rid, b))
-                if blk is None:
-                    blk = decode_block(rows[t], b)
-                    decoded[(rid, b)] = blk
-                docs_t.append(blk[0])
-            widx = np.searchsorted(boundary, np.concatenate(docs_t), side="left")
-            haspost = np.zeros(len(boundary), dtype=bool)
-            haspost[widx] = True
-            contrib = np.where(haspost, contrib, 0.0)
-        ub += contrib
-        cover.append((bi_c, valid))
+    boundary = np.unique(np.concatenate([r.block_last for r, _ in runs]))
+    ub = np.zeros(len(boundary))  # window w is (boundary[w-1], boundary[w]]
+    cuts = []  # per run: its postings in window w are [cut[w], cut[w+1])
+    for r, idf in runs:
+        cut = np.concatenate(([0], np.searchsorted(r.docs, boundary, side="right")))
+        held = cut[1:] > cut[:-1]
+        bound = idf * bm25_norm(r.block_max_tf, r.block_min_dl, avgdl)
+        ub[held] += bound[cut[:-1][held] // BLOCK_SIZE]
+        cuts.append(cut)
     order = np.argsort(-ub, kind="stable")
     out_docs: list[np.ndarray] = []
     out_scores: list[np.ndarray] = []
@@ -264,29 +241,15 @@ def wand_topk_shard(
     for w in order.tolist():
         if len(topbuf) >= k and ub[w] <= topbuf.min() - THETA_EPS:
             break  # no remaining window can reach the top-k margin
-        lo = int(boundary[w - 1]) if w > 0 else -1  # window is (lo, hi]
-        hi = int(boundary[w])
         docs_parts, score_parts = [], []
-        for t in range(n_terms):
-            bi_c, valid = cover[t]
-            if not valid[w]:
-                continue
-            key = (id(rows[t]), int(bi_c[w]))
-            blk = decoded.get(key)
-            if blk is None:
-                blk = decode_block(rows[t], key[1])
-                decoded[key] = blk
-            d, tf = blk
-            s = int(np.searchsorted(d, lo, side="right"))
-            e = int(np.searchsorted(d, hi, side="right"))
+        for (r, idf), cut in zip(runs, cuts):
+            s, e = cut[w], cut[w + 1]
             if s == e:
                 continue
-            docs_parts.append(d[s:e])
+            docs_parts.append(r.docs[s:e])
             score_parts.append(
-                _exact_scores(idfs[t], d[s:e], tf[s:e], dl_docs, dl_vals, avgdl)
+                _exact_scores(idf, r.docs[s:e], r.tfs[s:e], dl_docs, dl_vals, avgdl)
             )
-        if not docs_parts:
-            continue
         u, sums = _sum_live(docs_parts, score_parts, deleted)
         if not len(u):
             continue
@@ -302,40 +265,36 @@ def wand_topk_shard(
 
 
 def taat_topk_shard(
-    term_rows: list[tuple[dict, float]],
+    runs: list[tuple[_Run, float]],
     dl_docs: np.ndarray,
     dl_vals: np.ndarray,
     k: int,
     avgdl: float,
     deleted: np.ndarray | None = None,
-    cache: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Vectorized exact TAAT: decode every matched posting, one group-sum.
-    ``deleted``: sorted doc ids dropped before the top-k selection.
-    ``cache``: optional batch-shared decode cache (decode_term_row)."""
-    docs_parts, score_parts = [], []
-    for row, idf in term_rows:
-        docs, tfs = decode_term_row(row, cache)
-        docs_parts.append(docs)
-        score_parts.append(_exact_scores(idf, docs, tfs, dl_docs, dl_vals, avgdl))
-    if not docs_parts:
+    """Vectorized exact TAAT: score every posting, one group-sum.
+    ``deleted``: sorted doc ids dropped before the top-k selection."""
+    if not runs:
         return []
+    docs_parts = [r.docs for r, _ in runs]
+    score_parts = [
+        _exact_scores(idf, r.docs, r.tfs, dl_docs, dl_vals, avgdl) for r, idf in runs
+    ]
     return _select_topk(*_sum_live(docs_parts, score_parts, deleted), k)
 
 
-def _resolve_algo(algo: str, rows: list[tuple[dict, float]]) -> str:
+def _resolve_algo(algo: str, runs: list[tuple[_Run, float]]) -> str:
     """'auto' -> 'wand'/'taat' per (query, shard). WAND pays off when a
     selective (high-idf) term can push the top-k threshold above the
     combined bound of the flat terms, letting whole flat-term blocks be
-    skipped; otherwise TAAT's single decode-everything pass wins.
+    skipped; otherwise TAAT's single score-everything pass wins.
     Measured on local[32], sf0.1 x16 (BENCH/wand_auto.md): zipf needle
     wand 0.96-3.3s vs taat 2.6-7.5s; flat reference queries taat ~1.0s
     vs wand ~1.4s."""
     if algo != "auto":
         return algo
-    idfs = [idf for _r, idf in rows]
-    sel = [i for i in idfs if i >= IDF_SELECTIVE]
-    n_post = sum(int(r["n_postings"]) for r, _ in rows)
+    sel = [idf for _r, idf in runs if idf >= IDF_SELECTIVE]
+    n_post = sum(len(r.docs) for r, _ in runs)
     # any selective term + enough postings to be worth skipping -> WAND.
     # Measured: WAND wins even when the flat terms' summed bound exceeds
     # the selective idf (code query parseConfig17: wand 1.22s vs taat
@@ -346,7 +305,7 @@ def _resolve_algo(algo: str, rows: list[tuple[dict, float]]) -> str:
 
 def _score_shard(
     query_terms: dict[str, list[str]],
-    by_term: dict[str, list],
+    by_term: dict[str, list[_Run]],
     idf_map: dict[str, float],
     doclen: tuple[np.ndarray, np.ndarray],
     deleted: np.ndarray,
@@ -355,23 +314,20 @@ def _score_shard(
     avgdl: float,
 ) -> Iterator[tuple[str, int, float]]:
     """One shard, every query: (query_id, doc_id, score) of the shard's
-    exact top-k per query. ``by_term`` holds the shard's rows per term:
-    one row per (term, committed group), since an un-compacted index has
-    several runs per term and all of them are scored (disjoint doc
-    appends are exact; re-ingests of the SAME doc require
+    exact top-k per query. ``by_term`` holds the shard's decoded runs per
+    term: one run per (term, committed group), since an un-compacted
+    index has several runs per term and all of them are scored (disjoint
+    doc appends are exact; re-ingests of the SAME doc require
     merge_segments). ``algo == "auto"`` resolves per (query, shard)."""
     dl_docs, dl_vals = doclen
-    decode_cache: dict = {}  # shared across the batch's queries (r6)
     for qid, terms in query_terms.items():
-        rows = [(run, idf_map[t]) for t in terms for run in by_term.get(t, ())]
-        if not rows:
+        runs = [(run, idf_map[t]) for t in terms for run in by_term.get(t, ())]
+        if not runs:
             continue
         kernel = (
-            wand_topk_shard if _resolve_algo(algo, rows) == "wand" else taat_topk_shard
+            wand_topk_shard if _resolve_algo(algo, runs) == "wand" else taat_topk_shard
         )
-        for doc, score in kernel(
-            rows, dl_docs, dl_vals, k, avgdl, deleted=deleted, cache=decode_cache
-        ):
+        for doc, score in kernel(runs, dl_docs, dl_vals, k, avgdl, deleted=deleted):
             yield qid, doc, score
 
 
@@ -411,14 +367,15 @@ def _local_topk(
     When the matched-postings volume is tiny relative to the corpus, a
     full Spark job (one task per shard through Python workers) is pure
     scheduling overhead: instead, take ONLY the matched segment rows from
-    the index's TermRowStore, run _score_shard per shard in the driver
-    against the doc-length and tombstone maps of prepare_for_queries, and
-    rank through the same final merge as the distributed path."""
+    the index's TermRowStore (one Arrow table), decode them in one pass,
+    run _score_shard per shard in the driver against the doc-length and
+    tombstone maps of prepare_for_queries, and rank through the same
+    final merge as the distributed path. Decoded postings live for this
+    call only."""
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
-    by_shard: dict[int, dict[str, list]] = {}
-    for t, rows_t in index.term_rows(all_terms).items():
-        for r in rows_t:
-            by_shard.setdefault(r["shard_id"], {}).setdefault(t, []).append(r)
+    by_shard: dict[int, dict[str, list[_Run]]] = {}
+    for sid, t, run in _decoded_runs(index.term_rows(all_terms)):
+        by_shard.setdefault(sid, {}).setdefault(t, []).append(run)
     no_deletes = np.empty(0, dtype=np.int64)
     hits = (
         hit
@@ -460,28 +417,20 @@ def _make_scorer(query_terms: dict[str, list[str]], idf_map: dict[str, float],
                  avgdl: float, k: int, algo: str):
     """applyInArrow group fn: one shard's matched term rows, doclen rows
     and tombstone rows in, that shard's per-query top-k (_score_shard)
-    out. Rows reach the kernels as plain dicts (``to_pylist``): a shard
-    carries only the query terms' rows, so the per-row cost is a few
-    dicts, and the Arrow grouped map skips the pandas conversions in
-    both directions."""
-    import pyarrow as pa
-
+    out. The rows stay Arrow: the term rows decode in one decode_rows
+    pass, the doclen and tombstone rows in one more each, and the Arrow
+    grouped map skips the pandas conversions in both directions."""
     out_schema = pa.schema(
         [("query_id", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64())]
     )
 
     def scorer(_key, tbl):
-        dl_rows, tomb_rows, by_term = [], [], {}
-        for r in tbl.to_pylist():
-            t = r["term"]
-            if t is None:
-                dl_rows.append(r)
-            elif t == TOMBSTONE_TERM:
-                tomb_rows.append(r)
-            else:
-                by_term.setdefault(t, []).append(r)
-        if not dl_rows or not by_term:
+        dl_rows, tomb_rows, term_rows = _row_kinds(tbl)
+        if not dl_rows.num_rows or not term_rows.num_rows:
             return out_schema.empty_table()
+        by_term: dict[str, list[_Run]] = {}
+        for _sid, t, run in _decoded_runs(term_rows):
+            by_term.setdefault(t, []).append(run)
         hits = list(_score_shard(
             query_terms, by_term, idf_map, merged_doclen(dl_rows),
             tombstoned_docs(tomb_rows), k, algo, avgdl,

@@ -1,16 +1,23 @@
-"""Per-term posting-list encoder: the test oracle for the engine's one
-columnar shard encoder (compress.encode_posting_lists_columnar through
-segments._encode_shard).
+"""Per-term posting-list encoder and per-row decoders: the test oracles
+for the engine's one columnar shard encoder
+(compress.encode_posting_lists_columnar through segments._encode_shard)
+and its one batch decoder (compress.decode_rows).
 
-It encodes one term block by block with the scalar codec pieces, so a
-match against the columnar encoder checks the row format from an
-independent, obviously-correct construction."""
+They encode one term, and decode one block or one doclen-format row,
+with the scalar codec pieces, so a match against the engine checks the
+row format from an independent, obviously-correct construction."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from alertsage_spark.index.compress import BLOCK_SIZE, delta_encode, varbyte_encode
+from alertsage_spark.index.compress import (
+    BLOCK_SIZE,
+    delta_decode,
+    delta_encode,
+    varbyte_decode,
+    varbyte_encode,
+)
 
 
 def encode_posting_list(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> dict:
@@ -79,3 +86,21 @@ def assert_rows_match(got: dict, want: dict, ctx=()) -> None:
             assert list(g) == w, (*ctx, k)
         else:
             assert g == w, (*ctx, k)
+
+
+def decode_block(row, block_idx: int) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_ids, tfs) of one block of a term row, decoded from the
+    block's own byte ranges (block_doc_offsets / block_tf_offsets)."""
+    do, to = row["block_doc_offsets"], row["block_tf_offsets"]
+    deltas = varbyte_decode(bytes(row["doc_bytes"])[do[block_idx] : do[block_idx + 1]])
+    tfs = varbyte_decode(bytes(row["tf_bytes"])[to[block_idx] : to[block_idx + 1]])
+    return delta_decode(deltas).astype(np.int64), tfs.astype(np.int64)
+
+
+def decode_doclen_row(row) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted doc_ids, dls) of one doclen-format row (a shard's
+    term=NULL doclen row or a tombstone row): one delta stream, the
+    lengths in the same order."""
+    docs = delta_decode(varbyte_decode(bytes(row["doc_bytes"]))).astype(np.int64)
+    dls = varbyte_decode(bytes(row["tf_bytes"])).astype(np.int64)
+    return docs, dls

@@ -11,9 +11,7 @@ from hypothesis import strategies as st
 
 from alertsage_spark.index.compress import (
     BLOCK_SIZE,
-    block_norm_bounds,
     bm25_norm,
-    decode_block,
     decode_posting_list,
     decode_rows,
     delta_decode,
@@ -22,7 +20,13 @@ from alertsage_spark.index.compress import (
     varbyte_encode,
 )
 from alertsage_spark.index.segments import _encode_shard
-from posting_oracle import assert_rows_match, encode_posting_list, encoded_term_rows
+from posting_oracle import (
+    assert_rows_match,
+    decode_block,
+    decode_doclen_row,
+    encode_posting_list,
+    encoded_term_rows,
+)
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=400))
@@ -77,7 +81,7 @@ def test_posting_list_roundtrip(postings):
     norms = bm25_norm(tfs, dls, avgdl)
     n_blocks = len(enc["block_last_docs"])
     assert n_blocks == (len(docs) + BLOCK_SIZE - 1) // BLOCK_SIZE
-    bounds = block_norm_bounds(
+    bounds = bm25_norm(
         np.array(enc["block_max_tfs"]), np.array(enc["block_min_dls"]), avgdl
     )
     for bi in range(n_blocks):
@@ -170,19 +174,31 @@ def test_batch_encode_property(terms):
 
 @pytest.mark.parametrize("n", [1, 127, 128, 129, 1000])
 def test_decode_posting_list_equals_block_decodes(n):
-    """The one full-list decoder (vectorized reset-cumsum) equals the
-    concatenation of decode_block over every block — the lazy per-block
-    path WAND uses."""
+    """decode_posting_list (a one-row call of decode_rows) on a dict and
+    on a pyspark Row equals decode_rows on a sliced Arrow batch holding
+    the row, and the oracle's per-block decodes concatenated."""
+    import pyarrow as pa
+    from pyspark.sql import Row
+
     rng = np.random.RandomState(n)
     d = np.cumsum(rng.randint(1, 2**20, size=n)).astype(np.int64)
     t = rng.randint(1, 300, size=n).astype(np.int64)
     (row,), _want = _shard_term_rows([(d, t, np.full(n, 9, dtype=np.int64))])
     blocks = [decode_block(row, b) for b in range(len(row["block_last_docs"]))]
     assert len(blocks) == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    docs, tfs = decode_posting_list(row)
-    assert np.array_equal(docs, np.concatenate([b[0] for b in blocks]))
-    assert np.array_equal(tfs, np.concatenate([b[1] for b in blocks]))
-    assert np.array_equal(docs, d) and np.array_equal(tfs, t)
+    assert np.array_equal(d, np.concatenate([b[0] for b in blocks]))
+    assert np.array_equal(t, np.concatenate([b[1] for b in blocks]))
+    other = {"doc_bytes": b"\x05\x01", "tf_bytes": b"\x02\x03"}  # docs 5, 6
+    batch = pa.table({c: [other[c], row[c], other[c]] for c in ("doc_bytes", "tf_bytes")})
+    batch = batch.slice(1, 1)  # the row at a non-zero array offset
+    counts, bdocs, btfs = decode_rows(batch["doc_bytes"], batch["tf_bytes"])
+    assert counts.tolist() == [n]
+    assert np.array_equal(bdocs, d) and np.array_equal(btfs, t)
+    spark_row = Row(doc_bytes=bytearray(row["doc_bytes"]), tf_bytes=bytearray(row["tf_bytes"]))
+    for r in (row, spark_row):
+        docs, tfs = decode_posting_list(r)
+        assert docs.dtype == tfs.dtype == np.int64
+        assert np.array_equal(docs, d) and np.array_equal(tfs, t)
 
 
 def test_decode_rows_equals_per_row_decodes():
@@ -192,7 +208,7 @@ def test_decode_rows_equals_per_row_decodes():
     sliced batch whose lists cross block boundaries."""
     import pyarrow as pa
 
-    from alertsage_spark.index.segments import _doclen_row, decode_doclen_row
+    from alertsage_spark.index.segments import _doclen_row
 
     rng = np.random.RandomState(7)
     lists = []

@@ -110,7 +110,7 @@ def test_merge_drops_tombstones_and_refreshes_stats(spark, built, tmp_path):
         load_index(spark, d).segments
         .filter(F.col("term") == TOMBSTONE_TERM).collect()
     ):
-        from alertsage_spark.index.segments import decode_doclen_row
+        from posting_oracle import decode_doclen_row
 
         deleted_ids |= set(decode_doclen_row(r)[0].tolist())
     live = [(r["doc_id"], r["text"]) for r in corpus.collect()

@@ -65,7 +65,7 @@ def test_build_and_integrity(spark, docs, tmp_path):
     assert joined.filter(F.col("df_seg") != F.col("df")).count() == 0
 
     # decode every posting list: sorted doc_ids; sum(tf) per doc == dl
-    from alertsage_spark.index.segments import decode_doclen_row
+    from posting_oracle import decode_doclen_row
 
     tf_by_doc: dict[int, int] = {}
     for r in term_rows.collect():
@@ -173,9 +173,8 @@ def test_arrow_builder_matches_per_term_oracle(spark, docs):
         _SEG_COLS,
         _segment_builder_arrow,
         _shard_postings,
-        decode_doclen_row,
     )
-    from posting_oracle import assert_rows_match, encoded_term_rows
+    from posting_oracle import assert_rows_match, decode_doclen_row, encoded_term_rows
 
     pdf = docs.toPandas()
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)

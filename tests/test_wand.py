@@ -318,3 +318,53 @@ def test_empty_and_matching_results_share_one_schema(spark, served, mode):
         wand_topk(spark, idx, [("M", MATCHING["text"])], k=0),
     ):
         assert df.collect() == [] and df.schema == match.schema
+
+
+def test_wand_prunes_flat_term_blocks_and_keeps_exact_topk(monkeypatch):
+    """One shard: a selective term (30 postings, high idf) and a flat term
+    in every doc (157 blocks, low idf). WAND charges the selective term's
+    bound only to the windows holding its postings, so once the top-k is
+    filled from those windows every other window is skipped: it returns
+    TAAT's exact top-k (bit-identical scores) while scoring far fewer
+    postings, counted through the shared kernel core ``_exact_scores``."""
+    import numpy as np
+
+    import alertsage_spark.query.wand as W
+    from alertsage_spark.index.segments import _encode_shard
+
+    rng = np.random.RandomState(5)
+    n_docs = 20_000
+    all_docs = np.arange(n_docs, dtype=np.int64)
+    dls = rng.randint(20, 200, size=n_docs).astype(np.int64)
+    sel_docs = np.sort(rng.choice(n_docs, size=30, replace=False)).astype(np.int64)
+    p_docs = np.concatenate([all_docs, sel_docs])  # term 0 "flat", term 1 "sel"
+    p_tf = np.concatenate([rng.randint(1, 4, size=n_docs), rng.randint(3, 9, size=30)])
+    parts = {
+        "p_docs": p_docs, "p_tf": p_tf.astype(np.int64), "p_dls": dls[p_docs],
+        "term_starts": np.array([0, n_docs, n_docs + 30]),
+        "terms": np.array(["flat", "sel"], dtype=object),
+    }
+    rows = _encode_shard(0, all_docs, dls, parts).slice(1)  # the term rows
+    runs = {t: run for _sid, t, run in W._decoded_runs(rows)}
+    assert len(runs["flat"].block_last) == 157 and len(runs["sel"].block_last) == 1
+    query = [(runs["flat"], 0.05), (runs["sel"], 8.0)]
+    avgdl = float(dls.mean())
+    deleted = sel_docs[:2]  # tombstoned docs never fill the top-k
+
+    scored = []
+    core = W._exact_scores
+
+    def counting(idf, docs, *rest):
+        scored.append(len(docs))
+        return core(idf, docs, *rest)
+
+    monkeypatch.setattr(W, "_exact_scores", counting)
+    out = {}
+    for name, kernel in (("wand", W.wand_topk_shard), ("taat", W.taat_topk_shard)):
+        scored.clear()
+        out[name] = (kernel(query, all_docs, dls, 10, avgdl, deleted=deleted), sum(scored))
+    (wand_hits, wand_scored), (taat_hits, taat_scored) = out["wand"], out["taat"]
+    assert wand_hits == taat_hits and len(wand_hits) == 10
+    assert {d for d, _s in wand_hits} <= set(sel_docs[2:].tolist())
+    assert taat_scored == n_docs + 30
+    assert wand_scored < taat_scored / 4, (wand_scored, taat_scored)
