@@ -38,26 +38,34 @@ Global stats are never copied from the source index (its df/cf/n_docs/
 avgdl double-count re-ingested docs): load_index derives them from the
 merged group, where every doc and posting appears once.
 
-Commit: the whole output (merged group, build_config.json, manifest,
-stream sidecar) is built in a staging sibling of out_dir and renamed
-into place (segments._rename_into_place). A crash leaves out_dir as it
-was; a reused out_dir keeps nothing of its old index.
+Commit: the whole output (the merged group with its lineage file,
+build_config.json, a copy of the manifest) is built in a staging
+sibling of out_dir and renamed into place (segments._rename_into_place).
+A crash leaves out_dir as it was; a reused out_dir keeps nothing of its
+old index. The merge reads the source's groups and config as they are
+on disk: it derives no stats of its input, and its only Spark work is
+the merged group's write.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import numpy as np
 from pyspark.sql import SparkSession
 
 from alertsage_spark.index.compress import decode_rows
 from alertsage_spark.index.segments import (
+    GROUP_LINEAGE,
     SEGMENT_SCHEMA,
     IndexPaths,
     SegmentIndex,
+    _batch_ids,
     _encode_shard,
     _one_shard_per_task,
+    _read_segments,
     _rename_into_place,
     _row_kinds,
     _shard_key,
@@ -66,8 +74,6 @@ from alertsage_spark.index.segments import (
     _write_json,
     load_index,
     merged_doclen,
-    persist_stream_batch_ids,
-    stream_committed_batch_ids,
     tombstoned_docs,
 )
 
@@ -134,31 +140,31 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
     """Compact all groups of ``index_dir`` into one merged segment set at
     ``out_dir``; its stats derive from the merged rows at load
     (re-ingested docs counted once). The manifest (build lineage)
-    carries over. The output is staged beside ``out_dir`` and renamed
-    into place, replacing whatever ``out_dir`` held."""
-    idx = load_index(spark, index_dir)
+    carries over, and the merged group's lineage file lists the union
+    of the source groups' stream batch ids, so a micro-batch
+    re-delivered after a stop -> compact -> restart window is still
+    recognized as committed and skipped (streaming/ingest.py). The
+    output is staged beside ``out_dir`` and renamed into place,
+    replacing whatever ``out_dir`` held."""
     src = IndexPaths(index_dir)
-    config = {
-        "n_shards": int(idx.stats["n_shards"]),
-        "n_groups": 1,
-        "mode": idx.stats.get("mode", "text"),
-    }
+    with open(src.config_json) as f:
+        cfg = json.load(f)
+    config = {"n_shards": int(cfg["n_shards"]), "n_groups": 1, "mode": cfg.get("mode", "text")}
+    groups = src.group_dirs()
     with _staged_sibling(out_dir) as stage:
         paths = IndexPaths(stage)
         with _one_shard_per_task(spark, config["n_shards"]):
-            merged = idx.segments.groupBy("shard_id").applyInArrow(
+            merged = _read_segments(spark, src, groups).groupBy("shard_id").applyInArrow(
                 _merge_shard, schema=SEGMENT_SCHEMA
             )
             _write_group(merged, paths.group_dir(0))
+        _write_json(
+            os.path.join(paths.group_dir(0), GROUP_LINEAGE),
+            {"batch_ids": sorted(_batch_ids(groups))},
+        )
         _write_json(paths.config_json, config)
         if os.path.exists(src.manifest):
-            spark.read.parquet(src.manifest).write.parquet(paths.manifest)
-        # Carry streaming exactly-once lineage: the merged group has no
-        # per-group batch markers, so the union of the source's markers
-        # and sidecar moves into the destination sidecar — a micro-batch
-        # re-delivered after a stop -> compact -> restart window is
-        # still recognized as committed and skipped (streaming/ingest.py).
-        persist_stream_batch_ids(stage, stream_committed_batch_ids(index_dir))
+            shutil.copytree(src.manifest, paths.manifest)
         _rename_into_place(stage, out_dir)
     return load_index(spark, out_dir)
 

@@ -1,4 +1,4 @@
-"""Doc-sharded compressed index segments + manifest checkpoint/resume.
+"""Doc-sharded compressed index segments + group checkpoint/resume.
 
 Physical design (for 10^12-file corpora; tested at fixture scale):
 
@@ -27,26 +27,22 @@ Physical design (for 10^12-file corpora; tested at fixture scale):
     two-stage agg on term — at most n_shards rows per term enter it, so
     hot terms cannot skew a reducer) from exactly the groups it pins,
     so stats can never disagree with the segments they describe.
-  * **manifest checkpoint/resume** (the Spark-native analog of the
-    reference's chunked generator checkpoint,
-    /root/reference/generator/generate_cyber_incidents.py:2779-3047:
-    JSON {last_completed_event, chunks_written} + append resume):
-    shards are processed in groups; each group commits its parquet
-    directory THEN appends a manifest row with lineage + build metrics
-    (n_docs, n_postings, bytes, wall_ms, docs/sec). Resume anti-joins
-    pending groups against the manifest and reprocesses only those; a
-    half-written uncommitted group directory is overwritten
-    idempotently, so the final index is byte-identical to an
-    uninterrupted build (asserted in tests/test_segments.py).
-  * **one group writer, one LSM commit path**: build, merge and
-    streaming ingest write a group's files through _write_group; every
-    later group (delete_docs, append_group, streaming ingest) lands
-    through _land_group's staging dir + rename; a build becomes
-    loadable when its finalize renames _build_config.json to
-    build_config.json; every JSON file is written by _write_json (temp
-    + rename); a whole new index (a merge's output, a stream's first
+  * **one commit rule, group checkpoint/resume** (the Spark-native
+    analog of the reference generator's chunked checkpoint, JSON
+    {last_completed_event, chunks_written} + append resume): a new group
+    (build, delete_docs, streaming ingest: written by _write_group;
+    append_group: copied) is filled into a '_'-prefixed staging dir with
+    its GROUP_LINEAGE file, and _land_group's rename to ``group={g}``
+    commits it; a whole new index (a merge's output, a stream's first
     batch) is built in a _staged_sibling and committed by
-    _rename_into_place.
+    _rename_into_place. A build processes shards in groups and resume
+    skips the committed group dirs, so the final index is byte-identical
+    to an uninterrupted build (tests/test_segments.py). Once every group
+    is committed, finalize checks the lineage doc count against the
+    segments', writes manifest/ from the lineage rows (n_docs,
+    n_postings, bytes, wall_ms, docs/sec) and renames _build_config.json
+    to build_config.json: only then does the index load. Every JSON file
+    is written by _write_json (temp + rename).
 """
 
 from __future__ import annotations
@@ -103,57 +99,45 @@ _SEG_COLS = [
 # first (deletion is not sequenced against later appends).
 TOMBSTONE_TERM = "!deleted!"
 
-# Streaming-ingest exactly-once bookkeeping (streaming/ingest.py writes
-# these; merge carries them): each stream-committed group dir holds a
-# STREAM_MARKER with its micro-batch id, and the index root may hold a
-# STREAM_SIDECAR recording batch ids whose groups were since compacted
-# away — merge_segments drops the marker-carrying groups, so without the
-# sidecar a batch re-delivered across a stop->compact->restart window
-# would re-append and double-count docs.
-STREAM_MARKER = "_stream_batch.json"
-STREAM_SIDECAR = "_stream_batches.json"
+# Each group's lineage, a JSON object inside the group dir, written in
+# its staging dir before the commit rename: a build group's is its
+# manifest row (MANIFEST_SCHEMA's fields, in order); a stream-ingested
+# group's lists its micro-batch id (batch_ids), and merge_segments writes
+# the union of its source groups' batch ids into the merged group's, so
+# a batch re-delivered across a stop -> compact -> restart window is
+# still skipped. '_'-prefixed: parquet discovery ignores it.
+GROUP_LINEAGE = "_lineage.json"
 
 
 def _write_json(path: str, obj) -> None:
-    """The index's one JSON writer (the build config, the stream sidecar
-    and batch markers): a temp file renamed over ``path``, so a reader
-    never sees a half-written file."""
+    """The index's one JSON writer (the build config and the group
+    lineage files): a temp file renamed over ``path``, so a reader never
+    sees a half-written file."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
 
 
-def stream_committed_batch_ids(index_dir: str) -> set[int]:
-    """Micro-batch ids durably ingested: per-group markers UNION the
-    root sidecar (batches whose groups were compacted away)."""
-    import glob as _glob
-
-    out: set[int] = set()
-    side = os.path.join(index_dir, STREAM_SIDECAR)
+def _group_lineage(group_dir: str) -> dict:
+    """A group's GROUP_LINEAGE object; {} for a group without one (a
+    delete_docs tombstone group)."""
     try:
-        # open-or-miss, not exists-then-open: a merge into this dir
-        # replaces the whole directory, sidecar included, concurrently
-        with open(side) as f:
-            out.update(int(b) for b in json.load(f)["batch_ids"])
+        with open(os.path.join(group_dir, GROUP_LINEAGE)) as f:
+            return json.load(f)
     except FileNotFoundError:
-        pass
-    for p in _glob.glob(os.path.join(index_dir, "segments", "group=*", STREAM_MARKER)):
-        with open(p) as f:
-            out.add(int(json.load(f)["batch_id"]))
-    return out
+        return {}
 
 
-def persist_stream_batch_ids(index_dir: str, ids: set[int]) -> None:
-    """Write the root sidecar (nothing for an empty id set). Its one
-    caller is merge_segments, whose destination is a fresh staging dir,
-    so no sidecar of a previous index at out_dir can survive and falsely
-    claim stream batches as committed."""
-    if ids:
-        _write_json(
-            os.path.join(index_dir, STREAM_SIDECAR),
-            {"batch_ids": sorted(int(b) for b in ids)},
-        )
+def _batch_ids(group_dirs) -> set[int]:
+    return {int(b) for g in group_dirs for b in _group_lineage(g).get("batch_ids", ())}
+
+
+def stream_committed_batch_ids(index_dir: str) -> set[int]:
+    """Micro-batch ids durably ingested: the union of the committed
+    groups' lineage batch ids (a merged group carries its sources')."""
+    return _batch_ids(IndexPaths(index_dir).group_dirs())
+
 
 MANIFEST_SCHEMA = (
     "build_id string, group_id int, n_shards int, n_groups int, "
@@ -226,19 +210,25 @@ class IndexPaths:
         return os.path.join(self.root, "manifest")
 
 
-def _land_group(paths: IndexPaths, fill) -> int:
-    """The LSM commit of one new segment group; delete_docs, append_group
-    and streaming ingest land groups only through here. ``fill(dir)``
-    writes the group into a '_'-prefixed staging dir under segments/
-    named for g, the next free group id; its rename to ``group={g}`` is
-    the commit point. Readers list group=* dirs and parquet discovery
-    skips '_' names, so a crash before the rename leaves the committed
-    groups and every serving snapshot unchanged; the retry clears the
-    leftover. Returns g."""
-    g = 1 + max((int(p.rsplit("=", 1)[1]) for p in paths.group_dirs()), default=-1)
+def _land_group(paths: IndexPaths, fill, g: int | None = None) -> int:
+    """The one commit of a segment group; build_segments, delete_docs,
+    append_group and streaming ingest create group dirs only through
+    here. ``fill(dir)`` writes the group (parquet files and any
+    GROUP_LINEAGE file) into a '_'-prefixed staging dir under segments/
+    named for g (the build passes its own group id; the others take the
+    next free one); its rename to ``group={g}`` is the commit point.
+    Readers list group=* dirs and parquet discovery skips '_' names, so
+    a crash before the rename leaves the committed groups and every
+    serving snapshot unchanged; the retry clears the leftover. A fill
+    that returns False (it wrote nothing worth a group) commits nothing
+    and gets -1. Returns g."""
+    if g is None:
+        g = 1 + max((int(p.rsplit("=", 1)[1]) for p in paths.group_dirs()), default=-1)
     stage = os.path.join(paths.root, "segments", f"_staging_group_{g}")
     shutil.rmtree(stage, ignore_errors=True)
-    fill(stage)
+    if fill(stage) is False:
+        shutil.rmtree(stage, ignore_errors=True)
+        return -1
     os.rename(stage, paths.group_dir(g))
     return g
 
@@ -638,51 +628,39 @@ def _write_group(rows: DataFrame, group_dir: str) -> dict:
     return obs.get
 
 
-def _commit_group(
-    spark: SparkSession,
-    paths: IndexPaths,
-    g: int,
-    build_id: str,
-    n_shards: int,
-    n_groups: int,
-    wall_ms: float,
-    metrics: list,
-    m: dict,
-) -> None:
-    """Append the manifest row (lineage + build metrics). The manifest
-    append IS the commit point. ``m``: the metrics _write_group
-    observed."""
-    n_docs_g = int(m["n_docs"] or 0)
-    row = {  # in MANIFEST_SCHEMA order: local_df matches by position
+def _build_lineage(
+    build_id: str, g: int, n_shards: int, n_groups: int, wall_ms: float, m: dict
+) -> dict:
+    """A build group's lineage and manifest row, in MANIFEST_SCHEMA order
+    (local_df matches by position). ``m``: the metrics _write_group
+    observed; ``wall_ms``: the group's write time."""
+    n_docs, n_postings = int(m["n_docs"] or 0), int(m["n_postings"] or 0)
+    secs = wall_ms / 1000.0
+    return {
         "build_id": build_id,
         "group_id": g,
         "n_shards": n_shards,
         "n_groups": n_groups,
-        "n_docs": n_docs_g,
+        "n_docs": n_docs,
         "n_terms": int(m["n_terms"] or 0),
-        "n_postings": int(m["n_postings"] or 0),
+        "n_postings": n_postings,
         "doc_bytes": int(m["doc_bytes"] or 0),
         "tf_bytes": int(m["tf_bytes"] or 0),
         "wall_ms": wall_ms,
-        "docs_per_sec": n_docs_g / (wall_ms / 1000.0) if wall_ms else 0.0,
-        "postings_per_sec": int(m["n_postings"] or 0) / (wall_ms / 1000.0) if wall_ms else 0.0,
+        "docs_per_sec": n_docs / secs if secs else 0.0,
+        "postings_per_sec": n_postings / secs if secs else 0.0,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    manifest_row = local_df(spark, [tuple(row.values())], MANIFEST_SCHEMA)
-    manifest_row.write.mode("append").parquet(paths.manifest)
-    metrics.append(row)
 
 
-def committed_groups(spark: SparkSession, paths: IndexPaths) -> set[int]:
-    # probe for part-files before spark.read: reading an empty/partial
-    # manifest dir raises AnalysisException, and catching it after the
-    # fact spews a Java stack trace into the caller's logs
-    import glob as _glob
-
-    if not _glob.glob(os.path.join(paths.manifest, "*.parquet")):
-        return set()
-    rows = spark.read.parquet(paths.manifest).select("group_id").distinct().collect()
-    return {r["group_id"] for r in rows}
+def _clear_index(paths: IndexPaths) -> None:
+    """Remove what an index leaves at its root (the configs first, so an
+    interrupted clear never loads) and nothing else."""
+    for p in (paths.config_json, paths.pending_config_json):
+        if os.path.exists(p):
+            os.remove(p)
+    for d in (os.path.join(paths.root, "segments"), paths.manifest):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def verify_corpus_fidelity(
@@ -737,8 +715,12 @@ def build_segments(
     fail_after_group: int | None = None,
     fidelity_hashes: DataFrame | None = None,
 ) -> dict:
-    """Full checkpointed single-pass build. Returns stats + metrics list.
+    """Full checkpointed single-pass build. Returns stats + metrics list
+    (the lineage rows of the groups this call committed).
 
+    ``resume`` continues a build of the same config at ``index_dir``,
+    skipping its committed groups; otherwise (or when there is none) the
+    build first removes what an index leaves there (_clear_index).
     ``fidelity_hashes`` (doc_id, content_sha256) enables the north-rule
     per-row corpus fidelity gate before indexing.
     ``fail_after_group`` injects a crash for the resume test (kill after
@@ -758,43 +740,46 @@ def build_segments(
         if prev != config:
             raise ValueError("resume with different build config; wipe index_dir first")
     else:
+        _clear_index(paths)
         _write_json(paths.pending_config_json, config)
 
-    done = committed_groups(spark, paths) if resume else set()
     docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     metrics = []
-    n_committed = 0
+
+    def fill(g: int, part: DataFrame, stage: str) -> None:
+        t0 = time.monotonic()
+        m = _write_group(_segment_rows(part, n_shards, mode), stage)
+        wall_ms = (time.monotonic() - t0) * 1000.0
+        row = _build_lineage(build_id, g, n_shards, n_groups, wall_ms, m)
+        _write_json(os.path.join(stage, GROUP_LINEAGE), row)
+        metrics.append(row)
+
     with _one_shard_per_task(spark, n_shards):
         for g in range(n_groups):
-            if g in done:
-                continue
-            t0 = time.monotonic()
+            if os.path.isdir(paths.group_dir(g)):
+                continue  # committed before a crash
             part = docs.filter(
                 F.pmod(shard_col(F.col("doc_id"), n_shards), F.lit(n_groups)) == g
             )
-            m = _write_group(_segment_rows(part, n_shards, mode), paths.group_dir(g))
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            _commit_group(
-                spark, paths, g, build_id, n_shards, n_groups, wall_ms, metrics, m
-            )
-            n_committed += 1
-            if fail_after_group is not None and n_committed >= fail_after_group:
+            _land_group(paths, partial(fill, g, part), g)
+            if fail_after_group is not None and len(metrics) >= fail_after_group:
                 raise RuntimeError(f"injected failure after group {g}")
 
-    # finalize: the manifest's doc count must equal the committed
-    # segments' (the aggregation load_index derives n_docs with); only
-    # then does the config rename make the index loadable. Re-runs after
-    # a crash before finalize.
-    all_done = done | {m["group_id"] for m in metrics}
+    # finalize, once every group is committed: the lineage doc count must
+    # equal the segments' (the aggregation load_index derives n_docs
+    # with); then the manifest is written from the lineage rows and the
+    # config rename makes the index loadable. Re-runs after a crash
+    # before the rename.
     stats: dict = {}
-    if len(all_done) >= n_groups:
-        man = spark.read.parquet(paths.manifest).agg(
-            F.sum("n_docs").alias("n"),
-        ).collect()[0]
+    if all(os.path.isdir(paths.group_dir(g)) for g in range(n_groups)):
+        lineage = [_group_lineage(paths.group_dir(g)) for g in range(n_groups)]
         groups = paths.group_dirs()
         stats = _derive_stats(_read_segments(spark, paths, groups), config, len(groups))
-        assert int(man["n"] or 0) == stats["n_docs"], "manifest/segment doc-count mismatch"
+        if sum(r.get("n_docs", 0) for r in lineage) != stats["n_docs"]:
+            raise RuntimeError("lineage/segment doc-count mismatch")
         if os.path.exists(paths.pending_config_json):
+            manifest = local_df(spark, [tuple(r.values()) for r in lineage], MANIFEST_SCHEMA)
+            manifest.write.mode("overwrite").parquet(paths.manifest)
             os.replace(paths.pending_config_json, paths.config_json)
     return {"stats": stats, "metrics": metrics}
 
@@ -807,11 +792,12 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     iterable of ids. Ids are routed to their shard with the build's
     shard_col rule and encoded per shard exactly like a doclen row
     (sorted delta+varbyte ids, zero lengths), so every decoder already
-    understands the row. The group lands through _land_group
-    (crash-safe); returns the new group id, or -1 for
-    an empty ``doc_ids`` (no-op: no group is committed, serving
-    snapshots stay valid). Scales: one narrow shuffle on shard_id, one
-    tombstone row per touched shard, no driver-side id list."""
+    understands the row. The group is written by _write_group into its
+    staging dir and lands through _land_group (crash-safe); returns the
+    new group id, or -1 for an empty ``doc_ids`` (no-op: no group is
+    committed, serving snapshots stay valid). Scales: one narrow
+    shuffle on shard_id, one tombstone row per touched shard, no
+    driver-side id list."""
     paths = IndexPaths(index_dir)
     with open(paths.config_json) as f:
         cfg = json.load(f)
@@ -819,11 +805,6 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     if not isinstance(doc_ids, DataFrame):
         doc_ids = local_df(spark, [(int(i),) for i in doc_ids], "doc_id long")
     ids = doc_ids.select(F.col("doc_id").cast("long")).distinct()
-    if not ids.take(1):
-        # empty delete is a no-op: committing an empty tombstone group
-        # would bump the group count and invalidate every serving
-        # snapshot (assert_serving_fresh) for nothing
-        return -1
 
     def tomb_row(key, tbl):
         d = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -836,7 +817,10 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
         .groupBy("shard_id")
         .applyInArrow(tomb_row, schema=SEGMENT_SCHEMA)
     )
-    return _land_group(paths, lambda d: tomb.write.mode("overwrite").parquet(d))
+    # an empty delete commits nothing: an empty tombstone group would
+    # invalidate every serving snapshot (assert_serving_fresh) for
+    # nothing. The write observes the tombstone count (n_postings).
+    return _land_group(paths, lambda d: bool(_write_group(tomb, d)["n_postings"]))
 
 
 def append_group(spark: SparkSession, dst_dir: str, src_dir: str) -> int:

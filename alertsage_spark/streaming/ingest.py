@@ -8,26 +8,26 @@ Shape:
     readStream(docs) -> writeStream.foreachBatch(ingest_batch)
 
 Each micro-batch is written as ONE segment group by the build's group
-writer (segments._write_group) into a staging sibling of the index
-dir. That write is the batch's only Spark work; the doc count it
-observes tells an empty batch (nothing committed) from a real one. The
-first batch puts build_config.json beside its group and renames the
-staged index into place (segments._rename_into_place, merge's commit);
-later batches land the group through segments._land_group, the group
-commit of delete_docs and append_group too. No stats and no manifest
-are written: load_index derives the stats from the groups it pins, so
-a committed group counts from its rename on. EXACTLY-ONCE per batch:
-Structured Streaming re-delivers a batch after a crash between the
-sink's side effect and the checkpoint commit, so every group directory
-carries a ``_stream_batch.json`` marker with its batch id — a
-re-delivered batch whose id is already committed is skipped before any
-work. The rename IS the commit point; a crash mid-write leaves only an
+writer (segments._write_group). That write is the batch's only Spark
+work; the doc count it observes tells an empty batch (nothing
+committed) from a real one. Later batches land their group through
+segments._land_group (a staging dir renamed to group={g}), the one
+group commit of build_segments, delete_docs and append_group too; the
+first batch puts build_config.json beside its group in a staging
+sibling of the index dir and renames that into place
+(segments._rename_into_place, merge's commit). No stats and no
+manifest are written: load_index derives the stats from the groups it
+pins, so a committed group counts from its rename on. EXACTLY-ONCE per
+batch: Structured Streaming re-delivers a batch after a crash between
+the sink's side effect and the checkpoint commit, so every group's
+lineage file (segments.GROUP_LINEAGE, written in the stage before the
+rename) lists its batch id — a re-delivered batch whose id is already
+committed is skipped before any work. A crash mid-write leaves only an
 invisible staging dir (underscore-prefixed, ignored by the segment
-glob and parquet discovery). Compaction (merge_segments) drops the
-marker-carrying groups but carries their batch ids into a root
-``_stream_batches.json`` sidecar, so the skip survives a
-stop -> compact -> restart window (segments.stream_committed_batch_ids
-reads markers UNION sidecar).
+glob and parquet discovery). Compaction (merge_segments) writes the
+union of its source groups' batch ids into the merged group's lineage
+file, so the skip survives a stop -> compact -> restart window
+(segments.stream_committed_batch_ids reads every group's file).
 
 At scale each micro-batch is one bounded write (the batch's docs
 shuffle once on shard_id into n_shards single-shard tasks); group count
@@ -43,12 +43,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from alertsage_spark.index.segments import (
-    STREAM_MARKER,
+    GROUP_LINEAGE,
     IndexPaths,
     _land_group,
     _one_shard_per_task,
@@ -94,24 +93,26 @@ def ingest_batch(
                 "stream_ingest config mismatch with existing index: "
                 f"{cfg} vs n_shards={n_shards} mode={mode}"
             )
-    # staged on the SAME filesystem as index_dir, so both commits below
-    # are atomic renames, never a crashable cross-device copy
-    with _staged_sibling(index_dir) as stage_root:
-        stage = IndexPaths(stage_root)
-        group = stage.group_dir(0)
+
+    def write(group: str) -> bool:
         with _one_shard_per_task(spark, n_shards):
             seg = _segment_rows(batch_df.select("doc_id", "text"), n_shards, mode)
             if not _write_group(seg, group)["n_docs"]:
                 return False  # an empty batch commits nothing
-        _write_json(os.path.join(group, STREAM_MARKER), {"batch_id": int(batch_id)})
-        if adopting:
-            # first batch: the staged group becomes the index; the entry
-            # guard proved any existing index_dir empty
-            config = {"n_shards": n_shards, "n_groups": 1, "mode": mode}
-            _write_json(stage.config_json, config)
-            _rename_into_place(stage_root, index_dir)
-        else:
-            _land_group(paths, lambda d: shutil.move(group, d))
+        _write_json(os.path.join(group, GROUP_LINEAGE), {"batch_ids": [int(batch_id)]})
+        return True
+
+    if not adopting:
+        return _land_group(paths, write) >= 0
+    # first batch: the staged group becomes the index, staged on the SAME
+    # filesystem as index_dir so the commit is an atomic rename; the
+    # entry guard proved any existing index_dir empty
+    with _staged_sibling(index_dir) as stage_root:
+        stage = IndexPaths(stage_root)
+        if not write(stage.group_dir(0)):
+            return False
+        _write_json(stage.config_json, {"n_shards": n_shards, "n_groups": 1, "mode": mode})
+        _rename_into_place(stage_root, index_dir)
         return True
 
 

@@ -13,9 +13,12 @@ cluster; master/executor conf comes from spark-submit):
         [--mode code] [--resume] [--fidelity /path/to/hashes_parquet] \
         [--query "terms ..."] [--k 10]
 
-Per-group manifest rows (lineage + docs/sec + postings/sec + bytes) are
-committed to <index-dir>/manifest; a killed build resumes from the last
-committed group when --resume is set.
+Each group commits by the rename of its staged dir, with its lineage
+row (docs/sec + postings/sec + bytes) inside; once every group is
+committed the rows are written to <index-dir>/manifest. A killed build
+resumes from its committed groups when --resume is set; without it the
+build first removes any index already at --index-dir (its segments/,
+manifest/ and config files, nothing else).
 """
 
 from __future__ import annotations

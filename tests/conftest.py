@@ -63,9 +63,15 @@ def synth_corpus(n_docs: int = 200, seed: int = 42) -> list[dict]:
 def spark():
     # a bounded driver heap: with the 64g default the JVM's heap can grow
     # past a small host's memory and get the JVM killed; the suite needs
-    # far less
+    # far less.
+    # Retained stages: tests that count their own jobs' tasks through
+    # statusTracker() read every stage of those jobs. Past Spark's default
+    # of 1000 retained stages the status store evicts skipped stages
+    # first, so such a read returned None or not depending on how many
+    # stages the tests before it ran.
     s = get_spark(app_name="alertsage_tests", master="local[4]", shuffle_partitions=4,
-                  extra_conf={"spark.driver.memory": "8g"})
+                  extra_conf={"spark.driver.memory": "8g",
+                              "spark.ui.retainedStages": "100000"})
     yield s
 
 

@@ -11,6 +11,7 @@
 
 from __future__ import annotations
 
+import os
 import warnings
 
 import pytest
@@ -70,6 +71,19 @@ def test_delete_excludes_docs_immediately(spark, built, tmp_path):
     after_fast = _topk(spark, idx3, k=10)
     for q in after_fast:
         assert after_fast[q] == [x for x in before[q] if x not in vict][:10]
+
+
+def test_empty_delete_commits_nothing(spark, tmp_path):
+    """An empty delete (no ids, as a list or as a DataFrame) returns -1
+    and leaves no group and no staging dir: a prepared snapshot stays
+    fresh."""
+    d = str(tmp_path / "e")
+    build_segments(spark, zipf_corpus(spark, 100, seed=3), d, n_shards=2, n_groups=1)
+    idx = load_index(spark, d).prepare_for_queries()
+    assert delete_docs(spark, d, []) == -1
+    assert delete_docs(spark, d, spark.range(0).selectExpr("id AS doc_id")) == -1
+    idx.assert_serving_fresh()
+    assert os.listdir(os.path.join(d, "segments")) == ["group=0"]
 
 
 def test_delete_after_prepare_is_detected_stale(spark, built):

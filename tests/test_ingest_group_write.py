@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.segments import (
-    STREAM_MARKER,
+    GROUP_LINEAGE,
     IndexPaths,
     _one_shard_per_task,
     _segment_rows,
@@ -84,7 +84,7 @@ def test_ingested_group_equals_one_group_build(spark, documents_df, tmp_path, mo
     for i, b in enumerate(batches):
         fresh = str(tmp_path / f"fresh{i}")
         build_segments(spark, b, fresh, n_shards=4, n_groups=1, mode=mode)
-        assert os.path.exists(os.path.join(paths.group_dir(i), STREAM_MARKER))
+        assert os.path.exists(os.path.join(paths.group_dir(i), GROUP_LINEAGE))
         assert _group_rows(spark, paths.group_dir(i)) == _group_rows(
             spark, IndexPaths(fresh).group_dir(0)
         ), i

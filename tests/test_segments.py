@@ -1,16 +1,19 @@
-"""Segment build, manifest checkpoint/resume, and compressed-index
-integrity (north-rule gates: resume from last committed segment manifest;
-sum(tf) per doc == doc length; postings sorted & delta-decodable)."""
+"""Segment build, group checkpoint/resume, and compressed-index
+integrity (north-rule gates: resume from the last committed segment
+group, each group committed by the rename of its staged dir with its
+lineage row inside; sum(tf) per doc == doc length; postings sorted &
+delta-decodable)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from alertsage_spark.index.build import build_index
 from alertsage_spark.index.compress import decode_posting_list
-from alertsage_spark.index.segments import build_segments, load_index
+from alertsage_spark.index.segments import MANIFEST_SCHEMA, build_segments, load_index
 
 N_SHARDS = 8
 N_GROUPS = 4
@@ -99,6 +102,62 @@ def test_resume_after_failure_is_identical(spark, docs, tmp_path):
     assert _index_fingerprint(spark, crashed) == _index_fingerprint(spark, full)
 
 
+def test_crash_before_group_rename_resumes_identical(spark, docs, tmp_path, monkeypatch):
+    """A build that dies after its first group's staged write, before the
+    rename, has committed no group and no manifest; resume equals an
+    uninterrupted build and writes one manifest row per group."""
+    from alertsage_spark.index import segments
+
+    full, crashed = tmp_path / "full", tmp_path / "crashed"
+    _build(spark, docs, full)
+    land = segments._land_group
+
+    def crash_before_rename(paths, fill, g=None):
+        def fill_then_crash(stage):
+            fill(stage)
+            raise RuntimeError("injected crash before the commit rename")
+
+        return land(paths, fill_then_crash, g)
+
+    monkeypatch.setattr(segments, "_land_group", crash_before_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _build(spark, docs, crashed)
+    monkeypatch.undo()
+    seg_dir = crashed / "segments"
+    assert not list(seg_dir.glob("group=*"))
+    assert [p.name for p in seg_dir.iterdir()] == ["_staging_group_0"]
+    assert not (crashed / "manifest").exists()
+
+    out = _build(spark, docs, crashed)
+    assert len(out["metrics"]) == N_GROUPS
+    assert not list(seg_dir.glob("_staging_group_*"))
+    assert _index_fingerprint(spark, crashed) == _index_fingerprint(spark, full)
+    man = spark.read.parquet(str(crashed / "manifest")).collect()
+    assert sorted(r["group_id"] for r in man) == list(range(N_GROUPS))
+
+
+@pytest.mark.parametrize("n_groups", [2, N_GROUPS])
+def test_rebuild_without_resume_replaces_the_old_index(spark, docs, tmp_path, n_groups):
+    """resume=False over a dir holding an index removes that index's
+    segments, manifest and configs first: the rebuild (other docs, same
+    or fewer groups) equals a fresh build's rows and stats, and a file
+    that is not the index's stays."""
+    d, fresh = tmp_path / "reused", tmp_path / "fresh"
+    _build(spark, docs, d)
+    (d / "notes.txt").write_text("not the index's")
+    other = docs.filter(F.col("doc_id") % 2 == 0).selectExpr(
+        "doc_id + 100000 AS doc_id", "text"
+    )
+    kw = dict(n_shards=N_SHARDS, n_groups=n_groups, resume=False)
+    out = build_segments(spark, other, str(d), **kw)
+    want = build_segments(spark, other, str(fresh), **kw)
+    assert out["stats"] == want["stats"]
+    assert load_index(spark, str(d)).stats == want["stats"]
+    assert _index_fingerprint(spark, d) == _index_fingerprint(spark, fresh)
+    assert spark.read.parquet(str(d / "manifest")).count() == n_groups
+    assert (d / "notes.txt").read_text() == "not the index's"
+
+
 def test_corpus_fidelity_gate(spark, docs, tmp_path):
     """North-rule per-row invariant: sha2(content,256) equality vs the
     reference hashes; a single tampered row aborts the build."""
@@ -129,6 +188,7 @@ def test_manifest_metrics(spark, docs, tmp_path):
     d = tmp_path / "m"
     _build(spark, docs, d)
     man = spark.read.parquet(str(d / "manifest"))
+    assert man.schema == StructType.fromDDL(MANIFEST_SCHEMA)
     rows = man.collect()
     assert len(rows) == N_GROUPS
     for r in rows:

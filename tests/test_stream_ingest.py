@@ -103,12 +103,14 @@ def test_redelivered_batch_is_skipped(spark, tmp_path):
 
 
 def test_redelivery_skip_survives_compaction(spark, tmp_path):
-    """merge_segments drops the marker-carrying groups; the batch ids
-    must carry into the root sidecar so a batch re-delivered across a
-    stop -> compact -> restart window is still skipped (the ADVICE r3
-    double-count scenario)."""
+    """merge_segments replaces the ingested groups; their batch ids must
+    carry into the merged group's lineage file so a batch re-delivered
+    across a stop -> compact -> restart window is still skipped (the
+    ADVICE r3 double-count scenario)."""
+    import json
+
     from alertsage_spark.index.merge import merge_segments
-    from alertsage_spark.index.segments import STREAM_SIDECAR
+    from alertsage_spark.index.segments import GROUP_LINEAGE, IndexPaths
 
     idx_dir = str(tmp_path / "cidx")
     merged = str(tmp_path / "cmerged")
@@ -121,9 +123,9 @@ def test_redelivery_skip_survives_compaction(spark, tmp_path):
     assert stream_committed_batch_ids(idx_dir) == {0, 1}
 
     merge_segments(spark, idx_dir, merged)
-    # merged dir has ONE group and no per-group markers, but the sidecar
-    # carries the lineage
-    assert os.path.exists(os.path.join(merged, STREAM_SIDECAR))
+    # merged dir has ONE group, whose lineage file carries both batch ids
+    with open(os.path.join(IndexPaths(merged).group_dir(0), GROUP_LINEAGE)) as f:
+        assert set(json.load(f)["batch_ids"]) == {0, 1}
     assert stream_committed_batch_ids(merged) == {0, 1}
 
     # re-delivered batch 1 against the compacted index: skipped, docs
@@ -131,8 +133,8 @@ def test_redelivery_skip_survives_compaction(spark, tmp_path):
     assert ingest_batch(spark, b2, 1, merged, n_shards=2) is False
     assert load_index(spark, merged).stats["n_docs"] == 300
 
-    # a second compaction keeps carrying the union (sidecar + any new
-    # markers)
+    # a second compaction keeps carrying the union (the merged group's
+    # ids + the new group's)
     assert ingest_batch(spark, b2.selectExpr("doc_id + 9000 AS doc_id", "text"),
                         2, merged, n_shards=2) is True
     merged2 = str(tmp_path / "cmerged2")
@@ -193,10 +195,10 @@ def test_adopt_refuses_nonempty_non_index_dir(spark, tmp_path):
 
 def test_merge_into_reused_dir_clears_stale_sidecar(spark, tmp_path):
     """A merge destination that previously hosted a streamed index must
-    not inherit its sidecar: stale committed-batch claims would make a
+    not inherit its committed-batch claims: stale claims would make a
     later streaming sink silently DROP re-used batch ids."""
     from alertsage_spark.index.merge import merge_segments
-    from alertsage_spark.index.segments import STREAM_SIDECAR, build_segments
+    from alertsage_spark.index.segments import build_segments
 
     dst = str(tmp_path / "reused")
     # first life: streamed index at dst
@@ -208,9 +210,6 @@ def test_merge_into_reused_dir_clears_stale_sidecar(spark, tmp_path):
 
     # second life: dst becomes the merge target of a PLAIN batch index
     os.makedirs(dst)
-    # simulate the stale leftover surviving an incomplete cleanup
-    with open(os.path.join(dst, STREAM_SIDECAR), "w") as f:
-        f.write('{"batch_ids": [0, 1]}')
     src = str(tmp_path / "plain")
     build_segments(spark, zipf_corpus(spark, 150, seed=72), src,
                    n_shards=2, n_groups=1)
