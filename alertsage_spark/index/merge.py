@@ -6,8 +6,9 @@ compacts every (shard_id, term) to ONE row with a single sorted,
 delta+varbyte re-encoded posting list and fresh block metadata, and
 every shard's doclen rows to one row.
 
-Plan: segments.groupBy(shard_id) -> applyInArrow(shard merger). Each
-task first merges ITS shard's doclen rows (partition-local — no
+Plan: segments grouped by shard_id in n_shards hash partitions
+(segments._by_shard, the build's layout) -> applyInArrow(shard merger).
+Each call first merges ITS shard's doclen rows (partition-local — no
 driver-side corpus map, no broadcast), then decodes all of its term
 rows, still Arrow, in one compress.decode_rows pass, keeps max-tf per
 (term, doc) with one lexsort over the whole shard, and re-encodes
@@ -15,8 +16,8 @@ through the build's shard encoder (segments._encode_shard) and writes
 through the build's group writer (segments._write_group), so merged
 rows are byte-identical to a fresh build of the surviving docs.
 Document-sharding keeps this balanced: a hot term contributes at most one run per
-(group, shard), and task memory is corpus/n_shards — the same memory
-shape as the build stage itself, with n_shards as the scaling knob
+(group, shard), and a call's memory is corpus/n_shards — the same memory
+shape as the build's shard stage, with n_shards as the scaling knob
 (at 10^12 docs you raise n_shards, exactly as for the build).
 
 Determinism on re-ingested docs (same doc_id in several runs): the
@@ -44,7 +45,8 @@ sibling of out_dir and renamed into place (segments._rename_into_place).
 A crash leaves out_dir as it was; a reused out_dir keeps nothing of its
 old index. The merge reads the source's groups and config as they are
 on disk: it derives no stats of its input, and its only Spark work is
-the merged group's write.
+the merged group's write. It returns out_dir; a caller that serves
+the result loads it (load_index).
 """
 
 from __future__ import annotations
@@ -61,10 +63,9 @@ from alertsage_spark.index.segments import (
     GROUP_LINEAGE,
     SEGMENT_SCHEMA,
     IndexPaths,
-    SegmentIndex,
     _batch_ids,
+    _by_shard,
     _encode_shard,
-    _one_shard_per_task,
     _read_segments,
     _rename_into_place,
     _row_kinds,
@@ -72,7 +73,6 @@ from alertsage_spark.index.segments import (
     _staged_sibling,
     _write_group,
     _write_json,
-    load_index,
     merged_doclen,
     tombstoned_docs,
 )
@@ -136,15 +136,15 @@ def _merge_shard(key, tbl):
     return _encode_shard(shard_id, uniq_docs, dl_merged, parts)
 
 
-def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> SegmentIndex:
+def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> str:
     """Compact all groups of ``index_dir`` into one merged segment set at
-    ``out_dir``; its stats derive from the merged rows at load
-    (re-ingested docs counted once). The manifest (build lineage)
-    carries over, and the merged group's lineage file lists the union
-    of the source groups' stream batch ids, so a micro-batch
-    re-delivered after a stop -> compact -> restart window is still
-    recognized as committed and skipped (streaming/ingest.py). The
-    output is staged beside ``out_dir`` and renamed into place,
+    ``out_dir`` and return ``out_dir``; load_index derives its stats
+    from the merged rows (re-ingested docs counted once). The manifest
+    (build lineage) carries over, and the merged group's lineage file
+    lists the union of the source groups' stream batch ids, so a
+    micro-batch re-delivered after a stop -> compact -> restart window
+    is still recognized as committed and skipped (streaming/ingest.py).
+    The output is staged beside ``out_dir`` and renamed into place,
     replacing whatever ``out_dir`` held."""
     src = IndexPaths(index_dir)
     with open(src.config_json) as f:
@@ -153,11 +153,11 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
     groups = src.group_dirs()
     with _staged_sibling(out_dir) as stage:
         paths = IndexPaths(stage)
-        with _one_shard_per_task(spark, config["n_shards"]):
-            merged = _read_segments(spark, src, groups).groupBy("shard_id").applyInArrow(
-                _merge_shard, schema=SEGMENT_SCHEMA
-            )
-            _write_group(merged, paths.group_dir(0))
+        rows = _read_segments(spark, src, groups)
+        merged = _by_shard(rows, config["n_shards"]).applyInArrow(
+            _merge_shard, schema=SEGMENT_SCHEMA
+        )
+        _write_group(merged, paths.group_dir(0))
         _write_json(
             os.path.join(paths.group_dir(0), GROUP_LINEAGE),
             {"batch_ids": sorted(_batch_ids(groups))},
@@ -166,7 +166,7 @@ def merge_segments(spark: SparkSession, index_dir: str, out_dir: str) -> Segment
         if os.path.exists(src.manifest):
             shutil.copytree(src.manifest, paths.manifest)
         _rename_into_place(stage, out_dir)
-    return load_index(spark, out_dir)
+    return out_dir
 
 
 def maybe_compact(
@@ -179,7 +179,7 @@ def maybe_compact(
     constant while appends stream in — the same trigger shape as the
     reference generator's chunk-compaction checkpoint
     (/root/reference/generator/generate_cyber_incidents.py:2779-3047).
-    Returns the merged SegmentIndex, or None when below the threshold."""
+    Returns out_dir once merged, or None when below the threshold."""
     if len(IndexPaths(index_dir).group_dirs()) < max_groups:
         return None
     return merge_segments(spark, index_dir, out_dir)

@@ -259,28 +259,6 @@ def _rename_into_place(stage: str, final: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-@contextmanager
-def _one_shard_per_task(spark: SparkSession, n_shards: int):
-    """One shard per reduce task inside the block (the build's and the
-    merge's shard stage): AQE's coalescer otherwise packs the shards into
-    ~#cores UNEVEN tasks and the stage runs as long as its fattest task
-    (measured 1.8x the average — the single biggest scaling loss in the
-    build). n_shards equal single-shard tasks wave-schedule evenly at any
-    core count. The session's conf is restored on exit."""
-    conf = {
-        "spark.sql.shuffle.partitions": str(n_shards),
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-
-
 # salts of the term -> (df, cf) aggregation's partial stage
 TERMSTATS_SALTS = 8
 
@@ -569,15 +547,23 @@ def _segment_builder_arrow(mode: str = "text"):
     return fn
 
 
+def _by_shard(rows: DataFrame, n_shards: int):
+    """``rows`` grouped by shard_id for a group write (the build's,
+    ingest's and merge's shard stage). The layout is part of the plan:
+    one Exchange hashpartitioning(shard_id, n_shards) that the group-by
+    reuses and AQE never coalesces (a repartition to a fixed number), so
+    it holds whatever session plans it and whatever the session's
+    shuffle settings are."""
+    return rows.repartition(n_shards, "shard_id").groupBy("shard_id")
+
+
 def _segment_rows(docs: DataFrame, n_shards: int, mode: str) -> DataFrame:
     """The segment rows of (doc_id, text) docs: each doc routed to its
-    shard, one applyInArrow task per shard, so the output is already
-    partitioned by shard_id."""
-    return (
-        docs.withColumn("shard_id", shard_col(F.col("doc_id"), n_shards))
-        .groupBy("shard_id")
-        .applyInArrow(_segment_builder_arrow(mode), schema=SEGMENT_SCHEMA)
-    )
+    shard and each shard encoded by one applyInArrow call, in n_shards
+    hash partitions of shard_id (_by_shard)."""
+    return _by_shard(
+        docs.withColumn("shard_id", shard_col(F.col("doc_id"), n_shards)), n_shards
+    ).applyInArrow(_segment_builder_arrow(mode), schema=SEGMENT_SCHEMA)
 
 
 def _row_kinds(rows: pa.Table) -> tuple[pa.Table, pa.Table, pa.Table]:
@@ -616,9 +602,10 @@ def _group_metric_exprs():
 
 
 def _write_group(rows: DataFrame, group_dir: str) -> dict:
-    """The one writer of a segment group's parquet files (build, merge
-    and stream ingest): ``rows`` (segment rows, already partitioned by
-    shard_id) sorted by term within each file, so parquet row-group
+    """The one writer of a segment group's parquet files (build, merge,
+    stream ingest and delete): ``rows`` (segment rows, hash-partitioned
+    by shard_id: one file per non-empty partition, which may hold
+    several shards) sorted by term within each file, so parquet row-group
     min/max stats prune query-term lookups. Returns the group's
     _group_metric_exprs, observed in the write job itself (a read-back
     would re-read the whole group); sums over no rows are None."""
@@ -712,7 +699,6 @@ def build_segments(
     mode: str = "text",
     resume: bool = True,
     build_id: str = "build-0",
-    fail_after_group: int | None = None,
     fidelity_hashes: DataFrame | None = None,
 ) -> dict:
     """Full checkpointed single-pass build. Returns stats + metrics list
@@ -723,8 +709,6 @@ def build_segments(
     build first removes what an index leaves there (_clear_index).
     ``fidelity_hashes`` (doc_id, content_sha256) enables the north-rule
     per-row corpus fidelity gate before indexing.
-    ``fail_after_group`` injects a crash for the resume test (kill after
-    committing that many groups).
     """
     paths = IndexPaths(index_dir)
     os.makedirs(index_dir, exist_ok=True)
@@ -754,16 +738,13 @@ def build_segments(
         _write_json(os.path.join(stage, GROUP_LINEAGE), row)
         metrics.append(row)
 
-    with _one_shard_per_task(spark, n_shards):
-        for g in range(n_groups):
-            if os.path.isdir(paths.group_dir(g)):
-                continue  # committed before a crash
-            part = docs.filter(
-                F.pmod(shard_col(F.col("doc_id"), n_shards), F.lit(n_groups)) == g
-            )
-            _land_group(paths, partial(fill, g, part), g)
-            if fail_after_group is not None and len(metrics) >= fail_after_group:
-                raise RuntimeError(f"injected failure after group {g}")
+    for g in range(n_groups):
+        if os.path.isdir(paths.group_dir(g)):
+            continue  # committed before a crash
+        part = docs.filter(
+            F.pmod(shard_col(F.col("doc_id"), n_shards), F.lit(n_groups)) == g
+        )
+        _land_group(paths, partial(fill, g, part), g)
 
     # finalize, once every group is committed: the lineage doc count must
     # equal the segments' (the aggregation load_index derives n_docs

@@ -8,8 +8,6 @@ argsort desc, top-k, threshold, exact-dup drop at 0.999) as Spark plans:
                              via zip_with + aggregate (JVM higher-order
                              fns, float64 in-order accumulation), global
                              TakeOrderedAndProject top-k. Exact; O(N·d).
-  * cosine_topk_pandas     — Arrow-batched numpy variant (np.dot over
-                             the batch matrix) for wide vectors.
   * with_lsh_signatures    — ONE Arrow pass computing ALL sign-LSH table
                              signatures (single (tables*bits, dim)
                              matmul per batch). The scale path stores
@@ -86,32 +84,6 @@ def cosine_topk(
     return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def cosine_topk_pandas(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched numpy variant: per-batch matrix @ query (float64).
-
-    Preferred for wide vectors (d >= 256) where per-element HOF expression
-    evaluation loses to BLAS."""
-    q = np.asarray(query_vec, dtype=np.float64)
-
-    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "score": np.round(mat @ q, 5)}
-            )
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score_batches, schema="vec_id long, score double"
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
-
-
 # ------------------------------------------------------------ sign LSH
 
 
@@ -133,10 +105,6 @@ def _pack_signatures(signs: np.ndarray, n_tables: int, bits: int) -> np.ndarray:
     for t in range(n_tables):
         out[:, t] = signs[:, t * bits : (t + 1) * bits] @ weights
     return out
-
-
-def sig_cols(n_tables: int) -> list[str]:
-    return [f"sig_{t}" for t in range(n_tables)]
 
 
 def with_lsh_signatures(

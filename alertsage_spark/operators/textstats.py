@@ -31,11 +31,6 @@ EN_STOPWORDS = LANG_SIGNALS["en"] + ["it", "on", "as", "at", "by", "an", "be", "
 BPEISH_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]+"
 
 
-def token_count_col(col: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(F.split(F.trim(col), "\\s+"))
-
-
 def bpeish_token_count_col(col: Column) -> Column:
     """BPE-ish token count (letters / digits / symbol runs on lowered text)."""
     return F.size(F.regexp_extract_all(F.lower(col), F.lit(BPEISH_RE), F.lit(0)))

@@ -29,11 +29,14 @@ union of its source groups' batch ids into the merged group's lineage
 file, so the skip survives a stop -> compact -> restart window
 (segments.stream_committed_batch_ids reads every group's file).
 
-At scale each micro-batch is one bounded write (the batch's docs
-shuffle once on shard_id into n_shards single-shard tasks); group count
-grows with stream time, so run ``merge_segments`` /
-``maybe_compact`` out-of-band to bound query-time read amplification —
-the standard LSM background-compaction split. Queries against the
+At scale each micro-batch is one bounded write: the batch's docs
+shuffle once into n_shards hash partitions of shard_id. That layout is
+in the batch's plan (segments._by_shard), so it is the same whether
+the stream's own session or a direct ingest_batch call plans it, and
+no session setting is touched. Group count grows with stream time, so
+run ``merge_segments`` / ``maybe_compact`` out-of-band to bound
+query-time read amplification — the standard LSM
+background-compaction split. Queries against the
 serving snapshot raise the staleness error after an append
 (SegmentIndex.assert_serving_fresh), forcing an explicit re-load — no
 silent drift.
@@ -50,7 +53,6 @@ from alertsage_spark.index.segments import (
     GROUP_LINEAGE,
     IndexPaths,
     _land_group,
-    _one_shard_per_task,
     _rename_into_place,
     _segment_rows,
     _staged_sibling,
@@ -95,10 +97,9 @@ def ingest_batch(
             )
 
     def write(group: str) -> bool:
-        with _one_shard_per_task(spark, n_shards):
-            seg = _segment_rows(batch_df.select("doc_id", "text"), n_shards, mode)
-            if not _write_group(seg, group)["n_docs"]:
-                return False  # an empty batch commits nothing
+        seg = _segment_rows(batch_df.select("doc_id", "text"), n_shards, mode)
+        if not _write_group(seg, group)["n_docs"]:
+            return False  # an empty batch commits nothing
         _write_json(os.path.join(group, GROUP_LINEAGE), {"batch_ids": [int(batch_id)]})
         return True
 

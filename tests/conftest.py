@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import hashlib
 import random
+from contextlib import contextmanager
 
 import pytest
 
+from alertsage_spark.index import segments
 from alertsage_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -57,6 +59,26 @@ def synth_corpus(n_docs: int = 200, seed: int = 42) -> list[dict]:
             dict(repo=repo, path=path, commit=commit, lang=lang, content=content)
         )
     return rows
+
+
+@contextmanager
+def crash_after_groups(n: int):
+    """Inside the block a build dies once it has committed ``n`` groups:
+    segments._land_group commits through the real one, then raises
+    RuntimeError("injected failure ...") on the block's n-th commit."""
+    land = segments._land_group
+    landed = []
+
+    def landing(paths, fill, g=None):
+        g = land(paths, fill, g)
+        landed.append(g)
+        if len(landed) >= n:
+            raise RuntimeError(f"injected failure after group {g}")
+        return g
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(segments, "_land_group", landing)
+        yield
 
 
 @pytest.fixture(scope="session")

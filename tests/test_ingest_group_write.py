@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from alertsage_spark.index.segments import (
     GROUP_LINEAGE,
     IndexPaths,
-    _one_shard_per_task,
     _segment_rows,
     _write_group,
     build_segments,
@@ -52,8 +51,7 @@ def test_ingest_runs_only_its_group_write(spark, tmp_path):
     sc = spark.sparkContext
 
     def write_alone():
-        with _one_shard_per_task(spark, 4):
-            _write_group(_segment_rows(batch, 4, "text"), str(tmp_path / "alone"))
+        _write_group(_segment_rows(batch, 4, "text"), str(tmp_path / "alone"))
 
     _in_group(sc, "group_write_alone", write_alone)
     assert _in_group(sc, "one_ingest", lambda: ingest_batch(spark, batch, 1, d, n_shards=4))

@@ -5,6 +5,7 @@ rank-identical to the oracle at every stage."""
 from __future__ import annotations
 
 import pytest
+from conftest import crash_after_groups
 from pyspark.sql import functions as F
 
 from alertsage_spark.index.merge import maybe_compact
@@ -29,9 +30,8 @@ def test_full_lifecycle_crash_resume_append_compact(spark, tmp_path):
     d = str(tmp_path / "life")
 
     # 1) build A with an injected crash after 2 of 4 groups
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_segments(spark, corpus_a, d, n_shards=8, n_groups=4,
-                       build_id="A", fail_after_group=2)
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_groups(2):
+        build_segments(spark, corpus_a, d, n_shards=8, n_groups=4, build_id="A")
     # 2) resume completes idempotently
     out = build_segments(spark, corpus_a, d, n_shards=8, n_groups=4,
                          build_id="A", resume=True)
@@ -61,8 +61,9 @@ def test_full_lifecycle_crash_resume_append_compact(spark, tmp_path):
 
     # 4) policy compaction (5 groups >= threshold 4) -> single group,
     #    still rank-identical, stats recomputed
-    merged = maybe_compact(spark, d, str(tmp_path / "life_m"), max_groups=4)
-    assert merged is not None
+    merged_dir = maybe_compact(spark, d, str(tmp_path / "life_m"), max_groups=4)
+    assert merged_dir is not None
+    merged = load_index(spark, merged_dir)
     assert merged.stats["n_docs"] == 40_000
     assert merged.segments.groupBy("shard_id", "term").count().filter("count > 1").count() == 0
     check(merged, union, "post-compact")

@@ -16,6 +16,7 @@ import glob
 import os
 
 import pytest
+from conftest import crash_after_groups
 from pyspark.sql import functions as F
 
 from alertsage_spark.index import merge as merge_mod
@@ -172,8 +173,8 @@ def test_crashed_build_is_unloadable_until_resumed(spark, tmp_path):
     equal an uninterrupted build's."""
     docs = zipf_corpus(spark, 300, seed=51)
     d, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_segments(spark, docs, d, n_shards=4, n_groups=4, fail_after_group=2)
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_groups(2):
+        build_segments(spark, docs, d, n_shards=4, n_groups=4)
     assert len(_committed(d)) == 2
     with pytest.raises(FileNotFoundError):
         load_index(spark, d)
@@ -203,8 +204,8 @@ def test_derived_stats_equal_fresh_build(spark, tmp_path, mode):
         return _stats_and_terms(spark, f)
 
     d = str(tmp_path / "idx")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_segments(spark, a, d, n_shards=2, n_groups=2, mode=mode, fail_after_group=1)
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_groups(1):
+        build_segments(spark, a, d, n_shards=2, n_groups=2, mode=mode)
     build_segments(spark, a, d, n_shards=2, n_groups=2, mode=mode)
     assert _stats_and_terms(spark, d) == fresh(a)
 

@@ -27,7 +27,7 @@ def code_docs(spark, corpus_rows):
 def test_merge_preserves_rank_identity(spark, code_docs, tmp_path):
     src = tmp_path / "src"
     build_segments(spark, code_docs, str(src), n_shards=8, n_groups=4)
-    merged = merge_segments(spark, str(src), str(tmp_path / "merged"))
+    merged = load_index(spark, merge_segments(spark, str(src), str(tmp_path / "merged")))
 
     # merged index has exactly one row per (shard, term)
     dup = merged.segments.groupBy("shard_id", "term").count().filter("count > 1")
@@ -80,7 +80,7 @@ def test_incremental_append_then_merge(spark, code_docs, tmp_path):
 
     check(_load(spark, str(d)), "pre-merge")
 
-    merged = merge_segments(spark, str(d), str(merged_dir))
+    merged = load_index(spark, merge_segments(spark, str(d), str(merged_dir)))
     assert merged.segments.groupBy("shard_id", "term").count().filter("count > 1").count() == 0
     check(merged, "post-merge")
 
@@ -121,7 +121,7 @@ def test_reingest_merge_recomputes_stats(spark, code_docs, tmp_path):
     from alertsage_spark.index.segments import append_group
     assert append_group(spark, str(d), str(b_dir)) == 1
 
-    merged = merge_segments(spark, str(d), str(tmp_path / "reingest_merged"))
+    merged = load_index(spark, merge_segments(spark, str(d), str(tmp_path / "reingest_merged")))
 
     # one row per (shard, term); stats reflect the DEDUPED corpus
     assert merged.segments.groupBy("shard_id", "term").count().filter("count > 1").count() == 0
@@ -187,8 +187,9 @@ def test_maybe_compact_policy(spark, code_docs, tmp_path):
     build_segments(spark, code_docs.limit(60).filter(F.col("doc_id") % 2 == 1),
                    str(b), n_shards=4, n_groups=2)
     append_group(spark, str(d), str(b))
-    merged = maybe_compact(spark, str(d), str(tmp_path / "pol_m"), max_groups=4)
-    assert merged is not None
+    merged_dir = maybe_compact(spark, str(d), str(tmp_path / "pol_m"), max_groups=4)
+    assert merged_dir is not None
+    merged = load_index(spark, merged_dir)
     assert merged.segments.groupBy("shard_id", "term").count().filter("count > 1").count() == 0
 
 
@@ -228,7 +229,7 @@ def test_merge_equals_fresh_build_of_survivors(spark, tmp_path, mode):
     emptied = 3
     victims = {d for d, _s in ids[::7]} | {d for d, s in ids if s == emptied}
     delete_docs(spark, src, sorted(victims))
-    merged = merge_segments(spark, src, str(tmp_path / "merged"))
+    merged = load_index(spark, merge_segments(spark, src, str(tmp_path / "merged")))
 
     survivors = docs.filter(~F.col("doc_id").isin(sorted(victims))).drop("shard_id")
     build_segments(spark, survivors, fresh, n_shards=8, n_groups=1, mode=mode)
@@ -253,7 +254,7 @@ def test_merge_into_reused_dir_replaces_old_index(spark, tmp_path):
     new = spark.createDataFrame([(100 + i, f"new doc beta {i}") for i in range(5)], schema)
     build_segments(spark, old, dst, n_shards=4, n_groups=3)
     build_segments(spark, new, src, n_shards=4, n_groups=1)
-    merged = merge_segments(spark, src, dst)
+    merged = load_index(spark, merge_segments(spark, src, dst))
     assert sorted(os.listdir(os.path.join(dst, "segments"))) == ["group=0"]
     assert merged.stats["n_docs"] == 5
     assert merged.stats["n_groups"] == 1

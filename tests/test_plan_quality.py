@@ -5,14 +5,19 @@ row-at-a-time) Python, whole-stage codegen on the relational surface."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from alertsage_spark import catalog
+from alertsage_spark.index import merge as merge_mod
+from alertsage_spark.index import segments
 from alertsage_spark.index.build import build_index
-from alertsage_spark.index.segments import build_segments, load_index
+from alertsage_spark.index.segments import _segment_rows, build_segments, load_index
 from alertsage_spark.query.bm25 import bm25_topk
 from alertsage_spark.query.refqueries import queries_df
+from alertsage_spark.streaming import ingest as ingest_mod
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,6 +46,51 @@ def test_segment_term_filter_pushed_to_parquet(spark, tmp_path):
     q = idx.segments.filter(F.col("term").isin(["data", "stream"]))
     plan = _plan(q)
     assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200]
+
+
+def test_segment_rows_plan_their_shard_layout(spark):
+    """The group write's layout is in the plan: under a session whose
+    shuffle.partitions (4) differs from n_shards, the segment rows plan
+    exactly one Exchange, hashpartitioning(shard_id, n_shards), which
+    the shard group-by reuses."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    plan = _plan(_segment_rows(docs, 8, "text"))
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(shard_id#\d+, 8\)", exchanges[0]), plan
+
+
+_WRITER_CONF = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+)
+
+
+def test_writers_run_under_the_session_conf(spark, tmp_path, monkeypatch):
+    """A build, an ingest and a merge write their groups under the
+    session's own shuffle settings: no writer sets session conf."""
+    own = tuple(spark.conf.get(k) for k in _WRITER_CONF)
+    seen = []
+
+    def recording(module):
+        write = module._write_group
+
+        def wrapped(rows, group_dir):
+            seen.append((module.__name__, tuple(spark.conf.get(k) for k in _WRITER_CONF)))
+            return write(rows, group_dir)
+
+        monkeypatch.setattr(module, "_write_group", wrapped)
+
+    for module in (segments, merge_mod, ingest_mod):
+        recording(module)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    d = str(tmp_path / "idx")
+    build_segments(spark, docs.filter("doc_id % 2 = 0"), d, n_shards=8, n_groups=1)
+    assert ingest_mod.ingest_batch(spark, docs.filter("doc_id % 2 = 1"), 0, d, n_shards=8)
+    merge_mod.merge_segments(spark, d, str(tmp_path / "merged"))
+    assert [m for m, _ in seen] == [segments.__name__, ingest_mod.__name__, merge_mod.__name__]
+    assert [conf for _, conf in seen] == [own] * 3
 
 
 def test_column_pruning_reaches_scan(spark):

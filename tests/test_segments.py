@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import crash_after_groups
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -93,8 +94,8 @@ def test_resume_after_failure_is_identical(spark, docs, tmp_path):
     _build(spark, docs, full)
 
     crashed = tmp_path / "crashed"
-    with pytest.raises(RuntimeError, match="injected failure"):
-        _build(spark, docs, crashed, fail_after_group=2)
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_groups(2):
+        _build(spark, docs, crashed)
     # resume completes only the missing groups
     out = _build(spark, docs, crashed, resume=True)
     assert len(out["metrics"]) == N_GROUPS - 2

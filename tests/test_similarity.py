@@ -38,14 +38,6 @@ def test_cosine_topk_matches_numpy(spark, emb, emb_np):
     assert got == _brute_topk(ids, mat, q, 10)
 
 
-def test_cosine_topk_pandas_matches_sql_expr(spark, emb, emb_np):
-    ids, mat = emb_np
-    q = mat[ids == 7][0]
-    a = [(r["vec_id"], r["score"]) for r in similarity.cosine_topk(emb, list(q), k=10).collect()]
-    b = [(r["vec_id"], r["score"]) for r in similarity.cosine_topk_pandas(emb, list(q), k=10).collect()]
-    assert a == b == _brute_topk(ids, mat, q, 10)
-
-
 def test_lsh_ann_recall(spark, emb, emb_np):
     """ANN must find most of the true top-10 (recall >= 0.5 with 4 tables
     x 8 bits on 64-dim vectors) and every returned score must be the true

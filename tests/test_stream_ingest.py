@@ -53,6 +53,35 @@ def _run_stream(spark, src_dir, index_dir, ckpt):
     q.awaitTermination()
 
 
+def _file_shard_sets(group_dir):
+    """The sorted shard_id set of each parquet file of a group."""
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(group_dir, "*.parquet"))
+    return sorted(
+        tuple(sorted(set(pq.read_table(f, columns=["shard_id"]).column(0).to_pylist())))
+        for f in files
+    )
+
+
+def test_stream_group_has_the_direct_ingest_layout(spark, tmp_path):
+    """A micro-batch is planned in the stream's own session; its group
+    still has the layout of ingest_batch over the same rows (the same
+    shard sets per file), since that layout lives in the batch's plan."""
+    src, streamed, direct = (str(tmp_path / n) for n in ("src", "streamed", "direct"))
+    os.makedirs(src)
+    docs = zipf_corpus(spark, 400, seed=34).cache()
+    _drop_files(docs, src, "p", str(tmp_path))
+    _run_stream(spark, src, streamed, str(tmp_path / "ckpt"))
+    assert ingest_batch(spark, docs, 0, direct, n_shards=4)
+    groups = glob.glob(os.path.join(streamed, "segments", "group=*"))
+    assert len(groups) == 1
+    want = _file_shard_sets(os.path.join(direct, "segments", "group=0"))
+    assert _file_shard_sets(groups[0]) == want
+    assert len(want) > 1
+    docs.unpersist()
+
+
 def test_stream_ingest_and_restart(spark, tmp_path):
     src = str(tmp_path / "src")
     idx_dir = str(tmp_path / "sidx")
